@@ -137,8 +137,8 @@ def main() -> None:
     # (r3/BASELINE.md, re-measured r15: partitions=32 at 32 cores left
     # 11 of 12 headline queries flat and cost q_dedup_ngram +60% of
     # pure task-scheduling floor on its three kilobyte exchanges, while
-    # leaving the 8-core/32-core ratios unchanged — tools/
-    # _r15_part_ab.py). At every /root/testdata sf the derived value IS
+    # leaving the 8-core/32-core ratios unchanged —
+    # OPTIMIZATION_r15.md §4). At every testdata sf the derived value IS
     # the floor (sf0.1 ingests to ~22 MB -> 2 -> floored 8), so numbers
     # stay comparable across rounds; at sf1+/production sizes the same
     # line yields the measured-right widths (sf10 -> ~135, sf100 ->

@@ -56,10 +56,12 @@ def _ensure_doc_id(df: DataFrame, order_cols: list[str]) -> DataFrame:
 def _load_input(spark: SparkSession, path: str) -> DataFrame:
     """Parquet documents table, or a directory of raw documents."""
     if path.endswith(".parquet") or os.path.isfile(os.path.join(path, "_SUCCESS")):
+        from document_vector_indexer_spark.plans.pipeline import doc_filename
+
         df = spark.read.parquet(path)
         if "doc_id" not in df.columns:
             df = _ensure_doc_id(df, [df.columns[0]])
-        return df.withColumn("filename", F.concat(F.lit("doc_"), F.col("doc_id")))
+        return df.withColumn("filename", doc_filename())
     from document_vector_indexer_spark.sources.binary_docs import read_documents
 
     raw = read_documents(spark, path)
@@ -81,15 +83,7 @@ def _load_input(spark: SparkSession, path: str) -> DataFrame:
 
 
 def cmd_index(args: argparse.Namespace) -> None:
-    from document_vector_indexer_spark.operators.chunking import chunk_documents
-    from document_vector_indexer_spark.operators.embedding import (
-        embed_api_map_in_pandas,
-        embed_with_model,
-        fit_local_embedder,
-    )
-    from document_vector_indexer_spark.functions import text as TX
-    from document_vector_indexer_spark.operators.ranking import global_id
-    from document_vector_indexer_spark.plans.pipeline import write_chunk_table
+    from document_vector_indexer_spark.plans import pipeline as P
     from document_vector_indexer_spark.session import get_spark
 
     if not os.path.exists(args.input):
@@ -159,53 +153,20 @@ def cmd_index(args: argparse.Namespace) -> None:
             return
         id_offset = existing.agg(F.max("id")).first()[0] or 0
 
-    cleaned = docs.withColumn("text", TX.clean_text("text")).filter(
-        F.length("text") > 0
+    chunks = P.number_chunks(
+        P.chunk_table(docs, args.strategy, args.chunk_size, args.overlap),
+        id_offset,
     )
-    chunks = chunk_documents(
-        cleaned,
-        strategy=args.strategy,
-        chunk_size=args.chunk_size,
-        overlap=args.overlap,
-        text_col="text",
-        id_cols=("filename",),
-    )
-    # id BEFORE embedding: global_id's boundary-sampling job executes
-    # the chunk lineage once, and must never pay for the embedder
-    # (mapInPandas is not column-prunable)
-    chunks = global_id(
-        chunks, ["filename", "split_strategy", "chunk_pos"], "id"
-    ).withColumn("id", (F.col("id") + F.lit(id_offset)).cast("long"))
-    if args.embedder in ("local", "word2vec"):
-        if incremental:
-            from pyspark.ml import PipelineModel
+    if incremental and args.embedder != "api":
+        from pyspark.ml import PipelineModel
 
-            model = PipelineModel.load(model_path)
-        else:
-            from document_vector_indexer_spark.operators.embedding import (
-                fit_word2vec_embedder,
-            )
-
-            fit = (
-                fit_local_embedder
-                if args.embedder == "local"
-                else fit_word2vec_embedder
-            )
-            model = fit(chunks, text_col="chunk_text", dim=args.embedding_dim)
-            model.write().overwrite().save(model_path)
-        embedded = embed_with_model(model, chunks)
+        model = PipelineModel.load(model_path)
     else:
-        embedded = embed_api_map_in_pandas(
-            chunks, dim=args.embedding_dim, batch_size=args.batch_size
-        )
-    out = (
-        embedded.withColumn("created_at", F.current_timestamp())
-        .select(
-            "id", "chunk_text", "embedding", "filename", "split_strategy",
-            "chunk_pos", "created_at",
-        )
-    )
-    write_chunk_table(out, args.output, mode="append" if incremental else "overwrite")
+        model = P.fit_embedder(chunks, args.embedder, args.embedding_dim)
+        if model is not None:
+            model.write().overwrite().save(model_path)
+    out = P.embed_chunks(chunks, model, args.embedding_dim, args.batch_size)
+    P.write_chunk_table(out, args.output, mode="append" if incremental else "overwrite")
     n = spark.read.parquet(args.output).count()
     # mirrors the reference's completion message (index_documents.py:308)
     print(

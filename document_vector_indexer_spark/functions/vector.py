@@ -1,8 +1,11 @@
 """Vector column expressions over ``array<float|double>`` columns.
 
 All pure higher-order-function compositions (``zip_with`` +
-``aggregate``) — JVM-side, no UDFs, so similarity math stays inside
-whole-stage codegen and scales linearly with executors.
+``aggregate``) — JVM-side, no UDFs, so similarity math never crosses
+the Python boundary and scales linearly with executors. Those
+higher-order functions are ``CodegenFallback`` expressions: they run
+interpreted inside the surrounding whole-stage-codegen stage, not as
+generated code.
 
 Determinism note (oracle parity): accumulation order is the array
 order, left to right, in double precision — the same order DuckDB's

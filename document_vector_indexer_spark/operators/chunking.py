@@ -7,16 +7,14 @@ expressions (functions.text), then ``posexplode`` into a chunk table.
 
 Scale design:
 - The chunk array is built row-local (no shuffle); ``posexplode`` is a
-  narrow transformation. The only shuffle in the whole chunking path is
-  the optional deterministic-id window at the end.
+  narrow transformation, so fixed/sentence/paragraph chunking has no
+  shuffle at all (cdc repartitions once by document id).
 - Chunk ordinal (``chunk_pos``) comes from ``posexplode`` — free and
   deterministic. A *global* dense id (the reference's SERIAL column,
-  index_documents.py:217) requires a total order; we derive it with
-  ``operators.ranking.global_id`` over ``(doc order, chunk_pos)`` —
-  the sample-boundaries two-pass form, never an empty-partitionBy
-  window (single-task at scale), only applied when the caller asks
-  (``with_global_id=True``). Never ``monotonically_increasing_id`` in
-  checked output (unstable across retries/partitionings).
+  index_documents.py:217) is not assigned here: ``plans.pipeline.
+  number_chunks`` derives it from ``(filename, split_strategy,
+  chunk_pos)``. Never ``monotonically_increasing_id`` in checked
+  output (unstable across retries/partitionings).
 """
 
 from __future__ import annotations
@@ -57,7 +55,6 @@ def chunk_documents(
     overlap: int = 200,
     text_col: str = "text",
     id_cols: tuple[str, ...] = ("doc_id",),
-    with_global_id: bool = False,
 ) -> DataFrame:
     """documents -> chunk table ``(id_cols..., chunk_pos, chunk_text,
     split_strategy)`` with one row per chunk, document order preserved
@@ -75,28 +72,15 @@ def chunk_documents(
                 "cdc chunking keys on exactly one id column; join extra "
                 f"columns back afterwards (got {id_cols})"
             )
-        out = (
+        return (
             chunk_cdc(df, text_col=text_col, id_col=id_cols[0])
             .drop("n_words")
             .withColumn("split_strategy", F.lit("cdc"))
         )
-        if with_global_id:
-            from document_vector_indexer_spark.operators.ranking import global_id
-
-            out = global_id(out, [*id_cols, "chunk_pos"], "id")
-            out = out.withColumn("id", F.col("id").cast("long"))
-        return out
     arr = chunk_array(F.col(text_col), strategy, chunk_size, overlap)
-    out = (
-        df.select(*id_cols, F.posexplode(arr).alias("chunk_pos", "chunk_text"))
-        .withColumn("split_strategy", F.lit(strategy))
-    )
-    if with_global_id:
-        from document_vector_indexer_spark.operators.ranking import global_id
-
-        out = global_id(out, [*id_cols, "chunk_pos"], "id")
-        out = out.withColumn("id", F.col("id").cast("long"))
-    return out
+    return df.select(
+        *id_cols, F.posexplode(arr).alias("chunk_pos", "chunk_text")
+    ).withColumn("split_strategy", F.lit(strategy))
 
 
 # --- content-defined chunking (CDC) ----------------------------------
@@ -163,44 +147,10 @@ def _cdc_window_hash(codes: Column, i: Column) -> Column:
     return h
 
 
-def _cdc_codes_arrow(words_df: DataFrame, id_col: str) -> DataFrame:
-    """Per-word CDC codes ((charfold mod CDC_MOD) per token) computed by
-    the vectorized prefix-hash kernel (dedup._gram_hash_arrays with
-    k=1: a 1-word gram IS the word, so its hash is exactly
-    ``_cdc_word_code``'s fold — same base 131, this module's modulus).
-    Takes (id_col, words) and returns (id_col, words, codes), keeping
-    the array shape the downstream window-hash expressions need.
-
-    NOT the default route — measured and rejected (see chunk_cdc's
-    ``impl`` note): the words array pays the Arrow boundary in both
-    directions here, which exceeds the interpreted-fold cost it
-    removes at every measured scale. Kept as the receipted dead end
-    plus its exact-parity test."""
-    from pyspark.sql import types as T
-
-    from document_vector_indexer_spark.operators.dedup import _gram_hash_arrays
-
-    out_schema = T.StructType(
-        list(words_df.schema.fields)
-        + [T.StructField("codes", T.ArrayType(T.LongType(), False), False)]
-    )
-
-    def batches(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            out = pdf.copy()
-            out["codes"] = _gram_hash_arrays(pdf["words"], 1, CDC_MOD)
-            yield out
-
-    return words_df.mapInPandas(batches, schema=out_schema)
-
-
 def chunk_cdc(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "expr",
 ) -> DataFrame:
     """Content-defined chunking over word tokens: cut after word i
     whenever the rolling window hash hits the divisor target. The
@@ -215,29 +165,7 @@ def chunk_cdc(
     downstream HOF referencing plain attributes), then everything is
     map-side; cost O(n_words × (word_len + window)) per document
     (codes fold once per word, window hashes fold over ints).
-
-    ``impl`` (r13): ``"expr"`` (default) is the pure-JVM interpreted
-    char fold; ``"arrow"`` computes the per-word codes via the
-    vectorized prefix-hash kernel (``_cdc_codes_arrow`` — exact
-    modular equality with the fold, arrow-vs-expr parity pinned).
-    The arrow route was MEASURED AND REJECTED as the default — the
-    r12 substrings transplant hypothesis was wrong here: the words
-    array must round-trip the Arrow boundary both ways (385 M tokens
-    materialized as Python objects at ~sf100), and that costs more
-    than the interpreted fold it replaces at every measured scale
-    (engine-conf ramps: 15.8 → 23.1 s at ~sf10, 104.0 → 144.4 s at
-    ~sf100). By subtraction the per-word fold is a MINOR term of
-    chunk_cdc's cost (≲20 s of 104 at sf100 — the window hashes, cut
-    assembly, chunk slicing and explode dominate), unlike
-    dup_substring_stats where per-GRAM hashing is ~k× the token
-    stream and the kernel cut the op 2.6×. Kept (with its parity
-    test) as the measured negative receipt so no later round
-    re-litigates it. Code values are identical either way, so the SQL
-    mirror (textops._SQL_CDC_CHUNKS) and the pure-Python test oracle
-    are untouched by the choice.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"impl must be 'arrow' or 'expr': {impl!r}")
     n = F.size(F.col("words"))
     interior = F.when(
         n > 1,
@@ -264,17 +192,13 @@ def chunk_cdc(
     words_df = df.repartition(F.col(id_col)).select(  # CSE barrier
         F.col(id_col), TX.word_tokens(F.col(text_col)).alias("words")
     )
-    if impl == "arrow":
-        coded = _cdc_codes_arrow(words_df, id_col)
-    else:
-        # per-word codes ONCE (multi-use alias — CollapseProject keeps
-        # the stage; each window position then folds 4 ints, not 4
-        # whole words)
-        coded = words_df.select(
-            id_col,
-            "words",
-            F.transform(F.col("words"), _cdc_word_code).alias("codes"),
-        )
+    # per-word codes ONCE (multi-use alias — CollapseProject keeps the
+    # stage; each window position then folds 4 ints, not 4 whole words)
+    coded = words_df.select(
+        id_col,
+        "words",
+        F.transform(F.col("words"), _cdc_word_code).alias("codes"),
+    )
     return (
         coded.select(id_col, "words", cuts.alias("cuts"))
         .select(id_col, F.posexplode(chunks).alias("chunk_pos", "chunk_text"))

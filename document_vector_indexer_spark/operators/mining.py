@@ -405,6 +405,8 @@ def _pair_stats_from_masks(vocab: DataFrame, mcnt: DataFrame) -> DataFrame:
             "n_baskets",
             F.max(F.when(F.col("ba") == -1, F.col("c"))).over(w_g),
         )
+        # after the three window columns, never before: they read the
+        # tagged ba < 0 / bb < 0 count rows this filter drops
         .filter((F.col("ba") >= 0) & (F.col("bb") >= 0))
     )
     return stats.crossJoin(F.broadcast(vocab)).select(

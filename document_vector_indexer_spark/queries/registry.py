@@ -126,34 +126,19 @@ def all_queries() -> dict[str, QuerySpec]:
 # the back of the queue. tests/test_registry.py simulates the rotation
 # forward and asserts the staleness bound.
 
-# Changed in round 15: see rule 1 above. (The full round-14 list — the
-# bitmask basket family, the DECIMAL(38) widenings, the dedup-tail and
-# text-family exchange reworks — got green rows in CORRECTNESS_r14.json
-# and rotates by age now. Keys touched in round 15 are added below as
-# they change.)
+# Changed since the last driver rows: see rule 1 above. (The round-15
+# list — q_basket_rules, q_triangles, q_decontaminate — got green rows
+# in CORRECTNESS_r15.json and rotates by age now.)
 _CHANGED_SINCE_VERIFIED: list[str] = [
-    "q_basket_rules",       # r15 opt: supports/item-counts/n_baskets
-                            #     off ONE tagged explode + (ba, bb)
-                            #     agg + window maxes over the
-                            #     vocabulary-bounded aggregate — the
-                            #     r14 item-count and n_baskets
-                            #     broadcast-build jobs are gone (5
-                            #     jobs -> 3, 14 stages -> 10). Values
-                            #     identical (sets parity pinned);
-                            #     oracle untouched; sim green 3 sfs
-    "q_triangles",          # r15 opt: same collapse for the edge
-                            #     threshold's n_baskets (tagged total
-                            #     row + single-partition window, no
-                            #     broadcast-build job). Values
-                            #     identical; sim green 3 sfs
-    "q_decontaminate",      # r15: bench-broadcast size guard — past
-                            #     512 MB estimated bench input the
-                            #     probe becomes a MERGE-pinned join
-                            #     (q_tpch_q21 spill lesson). Declared
-                            #     query keeps the broadcast plan at
-                            #     every testdata sf (plan pin green);
-                            #     values identical either regime;
-                            #     sim green 3 sfs
+    "q_sink_roundtrip",     # chain now plans.pipeline's chunk_table ->
+                            #     number_chunks -> embed_chunks (adds
+                            #     the drop-empty filter); oracle untouched
+    "q_stream_ingest",      # stream_index_transform runs the pipeline's
+                            #     id-less chain; created_at stamped there
+    "q_embed_pipeline",     # id-less pipeline chain: chunks keyed by
+                            #     filename, not doc_id; rows-only
+    "q_chunk_cdc",          # chunk_cdc's impl="arrow" route deleted;
+                            #     the expr route is unchanged
 ]
 
 

@@ -940,20 +940,15 @@ def q_embed_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_embed_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's full pipeline shape, offline: clean -> chunk ->
     mapInPandas batch 'API' embedding (deterministic fake) with the
-    reference's retry/validation contract -> dim check."""
-    from document_vector_indexer_spark.functions import text as TX
-    from document_vector_indexer_spark.operators.chunking import chunk_documents
-    from document_vector_indexer_spark.operators.embedding import (
-        embed_api_map_in_pandas,
+    reference's retry/validation contract -> dim check — the id-less
+    chain of plans.pipeline."""
+    from document_vector_indexer_spark.plans.pipeline import (
+        chunk_table,
+        embed_chunks,
     )
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .withColumn("text", TX.clean_text("text"))
-        .limit(200)
-    )
-    chunks = chunk_documents(docs, strategy="fixed", chunk_size=180, overlap=30)
-    embedded = embed_api_map_in_pandas(chunks, dim=32)
+    docs = load_table(spark, sf_dir, "documents").limit(200)
+    embedded = embed_chunks(chunk_table(docs, "fixed", 180, 30), None, 32)
     return embedded.groupBy("split_strategy").agg(
         F.count("*").alias("n_chunks"),
         F.count_if(F.size("embedding") == 32).alias("n_dim_ok"),

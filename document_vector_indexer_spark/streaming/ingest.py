@@ -2,10 +2,10 @@
 (/root/reference/index_documents.py: extract -> clean -> chunk ->
 embed -> store) as a Structured Streaming job over a growing document
 directory. The reference re-runs its script per file; here new files
-are discovered by the file source, flow through the SAME operators the
-batch pipeline uses (functions.text cleaning, operators.chunking,
-operators.embedding mapInPandas), and append to the chunk table via an
-idempotent foreachBatch sink.
+are discovered by the file source, flow through the SAME chain the
+batch pipeline builds (plans.pipeline: clean -> chunk -> mapInPandas
+embed), and append to the chunk table via an idempotent foreachBatch
+sink.
 
 Contract: streaming output == batch pipeline output on the same input
 set (minus the global id — a streaming table keeps the composite
@@ -31,15 +31,10 @@ Scale notes:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from document_vector_indexer_spark.functions import text as TX
-from document_vector_indexer_spark.operators.chunking import chunk_documents
-from document_vector_indexer_spark.operators.embedding import (
-    DEFAULT_DIM,
-    embed_api_map_in_pandas,
-)
+from document_vector_indexer_spark.operators.embedding import DEFAULT_DIM
+from document_vector_indexer_spark.plans.pipeline import chunk_table, embed_chunks
 
 DOC_STREAM_SCHEMA = T.StructType(
     [
@@ -69,21 +64,12 @@ def stream_index_transform(
     embedding_dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """clean -> chunk -> embed over a (streaming or batch) documents
-    frame — the SAME operator chain as plans.pipeline.index_documents
-    minus the global id, so the batch-equivalence oracle is literally
-    the batch pipeline run on the same rows."""
-    cleaned = docs.withColumn("text", TX.clean_text("text")).filter(
-        F.length("text") > 0
+    frame — plans.pipeline's id-less chain with the batch API embedder,
+    so the batch-equivalence oracle is literally the batch pipeline run
+    on the same rows."""
+    return embed_chunks(
+        chunk_table(docs, strategy, chunk_size, overlap), None, embedding_dim
     )
-    chunks = chunk_documents(
-        cleaned,
-        strategy=strategy,
-        chunk_size=chunk_size,
-        overlap=overlap,
-        text_col="text",
-        id_cols=("filename",),
-    )
-    return embed_api_map_in_pandas(chunks, dim=embedding_dim)
 
 
 def start_stream_ingest(
@@ -111,7 +97,7 @@ def start_stream_ingest(
         chunk_size=chunk_size,
         overlap=overlap,
         embedding_dim=embedding_dim,
-    ).withColumn("created_at", F.current_timestamp())
+    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(

@@ -555,39 +555,6 @@ def test_chunk_cdc_matches_pure_python(spark):
     assert got == expect
 
 
-def test_chunk_cdc_arrow_codes_identical_to_expr(spark):
-    """The r13 arrow route for the per-word CDC codes (the prefix-hash
-    kernel with k=1, modulus 1e9+7) must produce IDENTICAL chunk
-    output to the interpreted expr fold — exact modular arithmetic,
-    same argument as the substrings kernel — on real fixture docs plus
-    edge rows (empty, whitespace-only, one-word, unicode incl.
-    non-BMP). The pure-Python `_py_cdc_cuts` oracle above already pins
-    the VALUES; this pins the two impls against each other so the
-    default route can never drift from the parity reference."""
-    import pytest
-
-    from document_vector_indexer_spark.operators.chunking import chunk_cdc
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    edge = spark.createDataFrame(
-        [
-            (90_001, ""),
-            (90_002, "   \t "),
-            (90_003, "solo"),
-            (90_004, "héllo wörld 中文 \U0001F600grin " * 40),
-        ],
-        "doc_id long, text string",
-    )
-    both = docs.unionByName(edge)
-    arrow = sorted(map(tuple, chunk_cdc(both, impl="arrow").collect()))
-    expr = sorted(map(tuple, chunk_cdc(both, impl="expr").collect()))
-    assert arrow == expr and len(arrow) > 0
-    with pytest.raises(ValueError, match="impl"):
-        chunk_cdc(both, impl="nope")
-
-
 def test_chunk_cdc_is_shift_robust_fixed_chunker_is_not(spark):
     """THE property that motivates CDC: prepend a sentence to a
     document and the chunk set is almost unchanged (only the first
@@ -1200,8 +1167,9 @@ def test_dedup_cdc_nonvacuous_on_corpus(spark):
 
 def test_chunk_cdc_randomized_adversarial_shapes(spark):
     """Seeded random docs in adversarial shapes — unicode words,
-    single-word docs, repeated tokens, huge words — must match the
-    pure-Python recompute exactly and never crash."""
+    single-word docs, repeated tokens, huge words, plus fixed edge rows
+    (whitespace-only, non-BMP) — must match the pure-Python recompute
+    exactly and never crash."""
     import random
 
     from document_vector_indexer_spark.operators.chunking import chunk_cdc
@@ -1213,6 +1181,7 @@ def test_chunk_cdc_randomized_adversarial_shapes(spark):
         n = rng.choice([0, 1, 2, 5, 40, 200])
         words = [rng.choice(alphabet) + str(rng.randint(0, 9)) for _ in range(n)]
         docs.append((d, " ".join(words)))
+    docs += [(90_002, "   \t "), (90_004, "héllo wörld 中文 \U0001F600grin " * 40)]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     expect = {}
     for d, text in docs:

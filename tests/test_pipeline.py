@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from document_vector_indexer_spark.plans.pipeline import (
     index_documents,
@@ -41,15 +40,13 @@ def test_index_documents_contract(spark, docs):
 
 @pytest.mark.parametrize("strategy", ["fixed", "sentence", "paragraph"])
 def test_all_strategies_run(spark, docs, strategy):
-    out = index_documents(docs.limit(20), strategy=strategy, embedding_dim=16,
-                          with_global_id=False)
+    out = index_documents(docs.limit(20), strategy=strategy, embedding_dim=16)
     assert out.count() > 0
     assert out.select("split_strategy").distinct().collect()[0][0] == strategy
 
 
 def test_api_embedder_path(spark, docs):
-    out = index_documents(docs.limit(20), embedder="api", embedding_dim=16,
-                          with_global_id=False)
+    out = index_documents(docs.limit(20), embedder="api", embedding_dim=16)
     assert all(len(r.embedding) == 16 for r in out.select("embedding").collect())
 
 
@@ -63,34 +60,6 @@ def test_sink_idempotent_rerun(spark, docs, tmp_path):
     write_chunk_table(out, path)  # re-run, same strategy partition
     n2 = spark.read.parquet(path).count()
     assert n1 == n2 > 0
-
-
-def test_incremental_index(spark, docs, tmp_path):
-    """Incremental re-run over a grown corpus indexes ONLY the new
-    documents and appends without touching existing chunks."""
-    from document_vector_indexer_spark.plans.pipeline import incremental_index
-
-    path = os.path.join(str(tmp_path), "inc_chunks")
-    batch1 = docs.limit(40).withColumn(
-        "filename", F.concat(F.lit("doc_"), F.col("doc_id"))
-    )
-    out1 = index_documents(batch1, strategy="fixed", embedding_dim=16,
-                           filename_col="filename", with_global_id=False)
-    write_chunk_table(out1, path)
-    n1 = spark.read.parquet(path).count()
-
-    grown = docs.limit(80).withColumn(
-        "filename", F.concat(F.lit("doc_"), F.col("doc_id"))
-    )
-    new_chunks = incremental_index(grown, path, strategy="fixed", embedding_dim=16)
-    new_files = {r.filename for r in new_chunks.select("filename").distinct().collect()}
-    old_files = {r.filename for r in batch1.select("filename").collect()}
-    assert new_files and not (new_files & old_files), "re-indexed existing docs"
-    write_chunk_table(new_chunks, path, mode="append")
-    n2 = spark.read.parquet(path).count()
-    assert n2 == n1 + new_chunks.count()
-    # a further incremental run over the same corpus finds nothing new
-    assert incremental_index(grown, path, strategy="fixed", embedding_dim=16).count() == 0
 
 
 def test_binary_docs_source(spark, tmp_path):
