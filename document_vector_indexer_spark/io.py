@@ -2,9 +2,13 @@
 
 The engine core never infers schemas (mirrors the reference's fixed,
 code-defined schema policy, ``/root/reference/index_documents.py:202-224``);
-the driver's parquet files are self-describing and are read as-is, but
-the expected StructTypes are declared here for validation and for
-``readStream`` (which requires an explicit schema).
+every table is read with its StructType declared here, which spares the
+one schema-inference Spark job per table a plain ``spark.read.parquet``
+runs. The one exception is raw ``events``, whose timestamp encoding
+varies by fixture generation (``_load_events``). Before a declared read,
+the declaration is checked against one data file's footer on the driver
+(``check_declared_schema``, no Spark job), so a missing column or a
+changed type raises ``SchemaMismatchError`` instead of reading as NULLs.
 
 Scale note: at 100 TB each of these reads becomes a partitioned
 parquet/Delta table; ``spark.read.parquet`` keeps predicate pushdown,
@@ -15,6 +19,8 @@ or caches eagerly.
 from __future__ import annotations
 
 import os
+import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -146,14 +152,100 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+class SchemaMismatchError(ValueError):
+    """A table's parquet files lack a declared column or store it as
+    another type."""
+
+
+# Arrow type (as printed) -> Spark type simpleString, for the
+# non-timestamp types of the engine's tables (pyarrow writers may
+# store strings as large_string).
+_ARROW_TO_SPARK = {
+    "int32": "int",
+    "int64": "bigint",
+    "float": "float",
+    "double": "double",
+    "string": "string",
+    "large_string": "string",
+}
+
+
+def _spark_type(t, int96: bool = False) -> str:
+    """The Spark type a parquet column of Arrow type ``t`` reads as.
+    Timestamps follow Spark 4: INT96 and UTC-adjusted timestamps are
+    TIMESTAMP, naive milli/micro timestamps TIMESTAMP_NTZ; anything
+    else keeps its Arrow name, which matches no declared type."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        if int96 or t.tz is not None:
+            return "timestamp"
+        return "timestamp_ntz" if t.unit in ("ms", "us") else str(t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return f"array<{_spark_type(t.value_type)}>"
+    return _ARROW_TO_SPARK.get(str(t), str(t))
+
+
+def footer_types(path: str) -> "dict[str, str] | None":
+    """Column name -> Spark type string of the parquet table at
+    ``path`` (one file, or a directory of part files), read from ONE
+    data file's footer on the driver: no Spark job. ``None`` for a
+    directory without data files."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        files = [
+            os.path.join(path, fn)
+            for fn in sorted(os.listdir(path))
+            if not fn.startswith(("_", "."))
+            and os.path.isfile(os.path.join(path, fn))
+        ]
+        if not files:
+            return None
+        path = files[0]
+    pf = pq.ParquetFile(path)
+    int96 = {
+        pf.schema.column(i).path
+        for i in range(len(pf.schema))
+        if pf.schema.column(i).physical_type == "INT96"
+    }
+    return {f.name: _spark_type(f.type, f.name in int96) for f in pf.schema_arrow}
+
+
+def check_declared_schema(table: str, path: str, schema: "T.StructType") -> None:
+    """Raise ``SchemaMismatchError`` unless the files at ``path`` hold
+    every column of ``schema`` with its declared type. A declared-schema
+    read would otherwise return NULLs for a missing column, or fail
+    later, mid-query, on a changed type."""
+    found = footer_types(path)
+    if found is None:
+        return
+    for f in schema.fields:
+        want, got = f.dataType.simpleString(), found.get(f.name)
+        if got != want:
+            what = "has no such column" if got is None else f"stores {got}"
+            raise SchemaMismatchError(
+                f"table {table!r}: column {f.name!r} is declared {want}, "
+                f"but {path} {what}"
+            )
+
+
+def _read_declared(
+    spark: SparkSession, table: str, path: str, schema: "T.StructType"
+) -> DataFrame:
+    check_declared_schema(table, path, schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 # Catalog cache: session -> {(sf_dir, table): DataFrame}. A DataFrame
 # is an immutable logical plan, so handing the same one to every query
 # is semantically free, and it spares the per-query driver-side file
 # listing + parquet footer read that spark.read.parquet performs — the
 # same role a metastore catalog plays for spark.table() in production.
-# The test corpus dirs are immutable by contract (TESTDATA.md); writers
-# in this package never write into an sf_dir. Weak keying drops a
-# session's entries when the session itself is released.
+# The test corpus dirs are immutable by contract (TESTDATA.md); the one
+# writer into an sf_dir, ingest_engine_layout, enters a table only
+# after writing it. Weak keying drops a session's entries when the
+# session itself is released.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
 
 
@@ -181,7 +273,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if df is None:
             df = _load_events(spark, sf_dir)
     else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_declared(spark, name, table_path(sf_dir, name), SCHEMAS[name])
     per_session[(sf_dir, name)] = df
     return df
 
@@ -279,7 +371,8 @@ def _load_events_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame | None:
         return None
     tbl = _loc_table_name("events_by_user_", loc)
     if not spark.catalog.tableExists(tbl):
-        ddl = _schema_ddl(spark.read.parquet(loc).schema)
+        check_declared_schema("events", loc, SCHEMAS["events"])
+        ddl = _schema_ddl(SCHEMAS["events"])
         # IF NOT EXISTS: ingest_engine_layout's thread pool can reach
         # this concurrently when its SOURCE is itself an ingested dir
         # (two load_table('events') races past the tableExists check —
@@ -353,8 +446,33 @@ def ingest_engine_layout(
     normalized to the same microsecond timestamps ``load_table`` yields
     either way), so correctness is layout-independent.
 
-    File count per table = max(bytes / target_file_bytes, row-spread
-    for per-row-CPU-heavy tables), capped at ``max_files``.
+    File count per table k = max(bytes / target_file_bytes, row-spread
+    for per-row-CPU-heavy tables), capped at ``max_files``; bytes are
+    the table's on-disk total, a file or a directory of part files.
+
+    Copied, not rewritten: a table with k == 1 whose source is one
+    regular file, except ``events`` (the streaming reader needs its
+    ``ts`` normalized). It already is the one file a rewrite would
+    write, so the copy skips a shuffle and a write job. At the fixture
+    scale factors this covers region, nation, customer, supplier and
+    part (sf0.001: also orders and lineitem).
+
+    Rewritten: every other table — events, documents and embeddings
+    (row spread 16), any table of at least 2 x ``target_file_bytes``,
+    and directory-form sources (an ingested dir fed back in). Each
+    rewrite runs a shuffle-map job and a write job; so do the
+    ``documents__shingles3`` sidecar and the bucketed events table.
+    A rewritten source is read with its declared schema and a copied
+    one has its footer checked (no job either way), except raw events:
+    one schema-inference job, shared by both events writers.
+    A headline sf0.1 ingest is 15 jobs.
+
+    Each table but events is registered in the session's table cache
+    (``load_table`` on ``dest``, no job) by the thread that wrote it,
+    so registration overlaps the writes still running instead of
+    falling on the first query. Events are registered on first touch:
+    which of their two layouts to serve is known only once both are
+    written.
 
     Tables rewrite CONCURRENTLY (one driver thread each — Spark's
     scheduler interleaves the jobs): the read side of each rewrite is
@@ -364,33 +482,33 @@ def ingest_engine_layout(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    # one lock per source table: the two events writers then share one
+    # load, and with it its one inference job
+    locks = {t: threading.Lock() for t in TABLES}
+
+    def source(t: str) -> DataFrame:
+        with locks[t]:
+            return load_table(spark, sf_dir, t)
+
     def rewrite(t: str) -> None:
-        df = load_table(spark, sf_dir, t)
-        nbytes = os.path.getsize(table_path(sf_dir, t))
-        k = max(1, min(max_files, nbytes // target_file_bytes))
+        src, out = table_path(sf_dir, t), table_path(dest, t)
+        k = max(1, min(max_files, dir_bytes(src) // target_file_bytes))
         k = max(k, _ROW_SPREAD_TABLES.get(t, 1))
-        df.repartition(int(k)).write.mode("overwrite").parquet(
-            os.path.join(dest, f"{t}.parquet")
-        )
+        if k == 1 and t != "events" and os.path.isfile(src):
+            check_declared_schema(t, src, SCHEMAS[t])
+            if os.path.isdir(out):
+                shutil.rmtree(out)
+            shutil.copyfile(src, out)
+        else:
+            source(t).repartition(int(k)).write.mode("overwrite").parquet(out)
+        if t != "events":
+            load_table(spark, dest, t)
 
     def rewrite_shingles() -> None:
-        # Derived projection, not a table copy: each doc's distinct
-        # word-3-gram set, the per-row-CPU half of every near-dup
-        # query (tokenize + gram assembly), materialized once at
-        # ingest like any index. Queries probe it via
-        # ``load_derived``; on raw fixture dirs (no ingest ran) they
-        # fall back to computing it inline — same expression, factored
-        # into ``operators.dedup.shingle_projection`` so the stored
-        # and inline forms can't drift.
-        from document_vector_indexer_spark.operators.dedup import (
-            shingle_projection,
-        )
-
-        shingle_projection(
-            load_table(spark, sf_dir, "documents"),
-            num_partitions=_ROW_SPREAD_TABLES["documents"],
-        ).write.mode("overwrite").parquet(
-            os.path.join(dest, "documents__shingles3.parquet")
+        # Derived projection, not a table copy: see _shingles3.
+        name = "documents__shingles3"
+        _DERIVED[name](spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(dest, f"{name}.parquet")
         )
 
     def rewrite_events_bucketed() -> None:
@@ -405,9 +523,7 @@ def ingest_engine_layout(
         tmp = _loc_table_name("dvi_ingest_events_bkt_", loc)
         write_bucketed(
             spark,
-            load_table(spark, sf_dir, "events").repartition(
-                EVENTS_BUCKETS, "user_id"
-            ),
+            source("events").repartition(EVENTS_BUCKETS, "user_id"),
             tmp,
             "user_id",
             n_buckets=EVENTS_BUCKETS,
@@ -416,6 +532,7 @@ def ingest_engine_layout(
         )
         spark.sql(f"DROP TABLE IF EXISTS `{tmp}`")
 
+    os.makedirs(dest, exist_ok=True)
     with ThreadPoolExecutor(max_workers=len(TABLES) + 2) as pool:
         futs = [pool.submit(rewrite, t) for t in TABLES]
         futs.append(pool.submit(rewrite_shingles))
@@ -429,6 +546,30 @@ def ingest_engine_layout(
     # this corpus actually reads.
     autosize_shuffle_partitions(spark, dir_bytes(dest))
     return dest
+
+
+def _shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each doc's distinct word-3-gram set, the per-row-CPU half of
+    every near-dup query (tokenize + gram assembly), materialized once
+    at ingest like any index. Queries probe it via ``load_derived``; on
+    raw fixture dirs (no ingest ran) they fall back to computing it
+    inline — same expression, factored into
+    ``operators.dedup.shingle_projection`` so the stored and inline
+    forms can't drift."""
+    from document_vector_indexer_spark.operators.dedup import (
+        shingle_projection,
+    )
+
+    return shingle_projection(
+        load_table(spark, sf_dir, "documents"),
+        num_partitions=_ROW_SPREAD_TABLES["documents"],
+    )
+
+
+# Derived projections the ingest writes: name -> the plan that defines
+# it. The plan's schema (analysis only, no job) is the stored files'
+# declared schema.
+_DERIVED = {"documents__shingles3": _shingles3}
 
 
 def load_derived(
@@ -446,7 +587,8 @@ def load_derived(
     per_session = _session_cache(spark)
     got = per_session.get((sf_dir, name))
     if got is None:
-        got = spark.read.parquet(p)
+        schema = _DERIVED[name](spark, sf_dir).schema
+        got = _read_declared(spark, name, p, schema)
         per_session[(sf_dir, name)] = got
     return got
 

@@ -286,7 +286,11 @@ def contamination_hits(
     kernel, while the scan-level estimate is file-size-grounded.
     Callers that know better pass ``bench_broadcast=True/False``.
     Either regime returns identical values (join strategy, never
-    semantics).
+    semantics). A stats-less bench frame (``createDataFrame``, an RDD
+    or another in-memory source: Catalyst reports the default size,
+    Long.MaxValue) takes the MERGE path under the default however
+    small it is, so callers with small in-memory bench frames pass
+    ``bench_broadcast=True`` to keep the broadcast probe.
 
     Returns (``id_col``, n_contaminated, n_grams) for flagged docs only.
     """

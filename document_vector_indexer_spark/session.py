@@ -64,12 +64,14 @@ def recommended_shuffle_partitions(
 
 
 def dir_bytes(path: str) -> int:
-    """Total on-disk bytes under ``path`` — the input to
+    """Total on-disk bytes of ``path``, a file or a directory — the input to
     ``autosize_shuffle_partitions`` (one home for the walk; it was
     copy-pasted across io.py and four tools, and only one copy guarded
     against files vanishing mid-walk)."""
     import os
 
+    if os.path.isfile(path):
+        return os.path.getsize(path)
     total = 0
     for dirpath, _dirs, files in os.walk(path):
         for f in files:

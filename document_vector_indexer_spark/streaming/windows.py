@@ -193,13 +193,12 @@ def read_events_stream(
         # Directory = already single-table, stream it directly. But dir
         # shape is LAYOUT, not PROVENANCE (r9 ADVICE): a directory of
         # raw NTZ-ts files not written by ingest_engine_layout would be
-        # value-shifted if declared LTZ blindly. Probe the footers' ts
-        # type with one driver-side batch schema read and declare what
+        # value-shifted if declared LTZ blindly. Probe one file's footer
+        # for the ts type on the driver (no Spark job) and declare what
         # the files actually store.
-        ts_type = dict(
-            (f.name, f.dataType) for f in spark.read.parquet(src).schema
-        )["ts"]
-        if isinstance(ts_type, T.TimestampNTZType):
+        from document_vector_indexer_spark.io import footer_types
+
+        if footer_types(src)["ts"] == "timestamp_ntz":
             raw = _reader(_RAW_STREAM_SCHEMA).parquet(src)
             return raw.withColumn("ts", F.col("ts").cast("timestamp"))
         return _reader(_INGESTED_STREAM_SCHEMA).parquet(src)

@@ -76,6 +76,21 @@ def test_bucketed_join_matches_plain_join(spark, bucketed):
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
+def _file_counts(sf_dir: str) -> dict[str, int]:
+    """Data files per table: a one-file table counts 1."""
+    import os
+
+    from document_vector_indexer_spark.io import TABLES, table_path
+
+    out = {}
+    for t in TABLES:
+        p = table_path(sf_dir, t)
+        out[t] = 1 if os.path.isfile(p) else sum(
+            not f.startswith(("_", ".")) for f in os.listdir(p)
+        )
+    return out
+
+
 def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
     spark, tmp_path
 ):
@@ -83,7 +98,15 @@ def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
     threads race load_table('events') -> _load_events_bucketed's
     CREATE TABLE (the source dir has events_by_user). With IF NOT
     EXISTS the ingest must complete and the re-ingested events must
-    match the original exactly."""
+    match the original exactly.
+
+    The re-ingest must also keep each table's file layout: a
+    directory-form source is sized by its total bytes, not by the
+    4096-byte size of the directory entry (which collapsed every
+    rewritten table to one file). At 48 KiB per file, sf0.001 lineitem
+    is written as 2 files. (Byte sizing is not exactly idempotent: a
+    k-file rewrite takes more bytes than one file, so at smaller
+    targets a re-ingested lineitem can gain a file.)"""
     from document_vector_indexer_spark.io import (
         ingest_engine_layout,
         load_table,
@@ -92,11 +115,15 @@ def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
     src = "/root/testdata/sf0.001"
     first = str(tmp_path / "ingest1")
     second = str(tmp_path / "ingest2")
-    ingest_engine_layout(spark, src, first)
-    ingest_engine_layout(spark, first, second)  # source IS ingested
+    ingest_engine_layout(spark, src, first, target_file_bytes=48 << 10)
+    # source IS ingested
+    ingest_engine_layout(spark, first, second, target_file_bytes=48 << 10)
     a = sorted(map(tuple, load_table(spark, first, "events").collect()))
     b = sorted(map(tuple, load_table(spark, second, "events").collect()))
     assert a == b
+    counts = _file_counts(first)
+    assert counts["lineitem"] == 2
+    assert _file_counts(second) == counts
 
 
 def test_partial_bucketed_dir_is_not_registered(spark, tmp_path):

@@ -420,6 +420,51 @@ def test_load_input_bad_diagnostics_single_pass(spark, tmp_path, capsys,
     assert good.count() == 1  # only good.txt survives
 
 
+def test_cli_index_extracts_each_document_once(spark, tmp_path, monkeypatch):
+    """``cli index`` over a document directory runs the extraction
+    kernel once per file: the diagnostics, the chunk-id sample and
+    counts, the embedder fit and the write all read the persisted
+    extraction, which is released when the command ends. Same
+    accumulator splice as the diagnostics test above."""
+    import document_vector_indexer_spark.cli as cli
+    from document_vector_indexer_spark.sources import binary_docs
+
+    d = tmp_path / "docs"
+    d.mkdir()
+    n_files = 6
+    for i in range(n_files):
+        (d / f"doc_{i}.txt").write_text(
+            f"Document {i} talks about shuffles. " * 20
+        )
+    (d / "broken.pdf").write_bytes(b"%PDF-garbage")
+    n_files += 1
+
+    acc = spark.sparkContext.accumulator(0)
+    real = binary_docs.read_documents
+
+    def counting(spark_, path):
+        df = real(spark_, path)
+
+        def bump(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(bump, df.schema)
+
+    monkeypatch.setattr(binary_docs, "read_documents", counting)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = str(tmp_path / "chunks")
+    cli.main(["index", str(d), "--chunk-size", "120", "--overlap", "20",
+              "--embedding-dim", "16", "--output", out])
+
+    assert acc.value == n_files, (
+        f"cli index ran {acc.value / n_files:.1f} extraction passes; want 1"
+    )
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert spark.read.parquet(out).select("filename").distinct().count() == 6
+
+
 def test_cli_index_then_query_real_pdf_docx(spark, tmp_path, capsys):
     """The reference's ACTUAL user journey — index a directory of real
     PDF/DOCX files, then query — end-to-end in this container via the

@@ -6,14 +6,36 @@ from __future__ import annotations
 
 import pytest
 
-from document_vector_indexer_spark.io import SCHEMAS, TABLES, load_table
+from document_vector_indexer_spark.io import (
+    SCHEMAS,
+    TABLES,
+    SchemaMismatchError,
+    ingest_engine_layout,
+    load_derived,
+    load_table,
+    table_path,
+)
 
 SF = "/root/testdata/sf0.001"
 
 
+@pytest.fixture(scope="module")
+def ingested(spark, tmp_path_factory):
+    return ingest_engine_layout(
+        spark, SF, str(tmp_path_factory.mktemp("ingested"))
+    )
+
+
 @pytest.mark.parametrize("name", TABLES)
 def test_declared_schema_matches_fixture(spark, name):
-    got = load_table(spark, SF, name).schema
+    """Every table as Spark infers it from the fixture file, except raw
+    events: the one table load_table reads with inference, compared
+    after its ts normalization."""
+    got = (
+        load_table(spark, SF, name)
+        if name == "events"
+        else spark.read.parquet(table_path(SF, name))
+    ).schema
     want = SCHEMAS[name]
     got_fields = [(f.name, f.dataType.simpleString()) for f in got.fields]
     want_fields = [(f.name, f.dataType.simpleString()) for f in want.fields]
@@ -21,6 +43,115 @@ def test_declared_schema_matches_fixture(spark, name):
         f"{name}: declared schema drifted from fixture:\n"
         f"  declared: {want_fields}\n  actual:   {got_fields}"
     )
+
+
+@pytest.mark.parametrize("name", TABLES)
+def test_declared_schema_equals_inferred_on_ingested_dir(
+    spark, ingested, name
+):
+    path = (
+        f"{ingested}/events_by_user"
+        if name == "events"
+        else table_path(ingested, name)
+    )
+    inferred = spark.read.parquet(path).schema
+    assert load_table(spark, ingested, name).schema == inferred
+
+
+def test_derived_schema_equals_inferred(spark, ingested):
+    name = "documents__shingles3"
+    inferred = spark.read.parquet(f"{ingested}/{name}.parquet").schema
+    assert load_derived(spark, ingested, name).schema == inferred
+
+
+def _jobs_run(spark, fn) -> int:
+    """Spark jobs started while ``fn`` runs (statusTracker high-water
+    mark, as bench.py reads it)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    fn()
+    return max(tracker.getJobIdsForGroup(None), default=-1) - before
+
+
+def test_ingest_and_first_load_job_counts(spark, tmp_path):
+    """Declared-schema reads run no schema-inference job, and a one-file
+    table is copied instead of rewritten: an sf0.001 ingest is 11 jobs
+    (raw events' inference job, then a shuffle-map and a write job for
+    events, documents, embeddings, the shingles sidecar and the
+    bucketed events), and the first load of every table of the
+    ingested dir runs none. The load runs in a new session: the ingest
+    has already registered its tables in this one's cache."""
+    dest = str(tmp_path / "ingested")
+    n_ingest = _jobs_run(
+        spark, lambda: ingest_engine_layout(spark, SF, dest)
+    )
+    assert n_ingest <= 11
+
+    fresh = spark.newSession()
+
+    def first_load():
+        for t in TABLES:
+            load_table(fresh, dest, t).schema  # noqa: B018
+        load_derived(fresh, dest, "documents__shingles3").schema  # noqa: B018
+
+    assert _jobs_run(spark, first_load) == 0
+
+
+def _write_region(tmp_path, table) -> str:
+    import pyarrow.parquet as pq
+
+    pq.write_table(table, str(tmp_path / "region.parquet"))
+    return str(tmp_path)
+
+
+def test_missing_declared_column_raises(spark, tmp_path):
+    """A declared-schema read of a file without the column would return
+    NULLs for it; the footer check refuses the file instead."""
+    import pyarrow as pa
+
+    d = _write_region(
+        tmp_path, pa.table({"r_regionkey": pa.array([0, 1], pa.int32())})
+    )
+    with pytest.raises(SchemaMismatchError, match="'region'.*'r_name'"):
+        load_table(spark, d, "region")
+
+
+def test_integer_width_mismatch_raises(spark, tmp_path):
+    import pyarrow as pa
+
+    d = _write_region(
+        tmp_path,
+        pa.table(
+            {
+                "r_regionkey": pa.array([0, 1], pa.int64()),
+                "r_name": ["AFRICA", "AMERICA"],
+            }
+        ),
+    )
+    with pytest.raises(
+        SchemaMismatchError, match="'r_regionkey' is declared int.*bigint"
+    ):
+        load_table(spark, d, "region")
+
+
+def test_timestamp_ntz_vs_ltz_mismatch_raises(spark, tmp_path):
+    """orders.o_orderdate is declared naive (TIMESTAMP_NTZ); a file
+    storing UTC-adjusted timestamps would read shifted under any other
+    session time zone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(table_path(SF, "orders"))
+    i = t.schema.get_field_index("o_orderdate")
+    t = t.set_column(
+        i, "o_orderdate", t.column(i).cast(pa.timestamp("us", tz="UTC"))
+    )
+    pq.write_table(t, str(tmp_path / "orders.parquet"))
+    with pytest.raises(
+        SchemaMismatchError,
+        match="'o_orderdate' is declared timestamp_ntz.*stores timestamp$",
+    ):
+        load_table(spark, str(tmp_path), "orders")
 
 
 def test_unknown_table_rejected(spark):
