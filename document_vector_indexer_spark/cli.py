@@ -61,158 +61,142 @@ def _is_table(path: str) -> bool:
     )
 
 
-def _extract(spark: SparkSession, path: str) -> DataFrame:
-    """Every file of a document directory, extracted ONCE: the frame is
-    persisted (spilling to disk), so the failed-extraction diagnostics
-    and every later action of a command (the chunk-id sample and
-    counts, the embedder fit, the write) read it instead of re-running
-    the PDF/DOCX kernel. The caller unpersists it.
+@contextlib.contextmanager
+def _input(spark: SparkSession, path: str) -> Iterator[DataFrame]:
+    """Parquet documents table, or a directory of raw documents, for the
+    span of one command.
 
-    Diagnostics in ONE bounded pass (round-4 VERDICT item 4): count()
-    fills the cache and limit(10) reads it; the old collect()[:10]
-    shipped EVERY failed row to the driver (OOM at a
-    million-corrupt-file scale) and re-ran extraction."""
-    from pyspark import StorageLevel
-
-    from document_vector_indexer_spark.sources.binary_docs import read_documents
-
-    raw = read_documents(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
-    bad = raw.filter(~F.col("ok")).select("filename", "extract_error")
-    n_bad = bad.count()
-    if n_bad:
-        print(f"warning: {n_bad} file(s) failed extraction:", file=sys.stderr)
-        for r in bad.limit(10).collect():
-            print(f"  {r.filename}: {r.extract_error}", file=sys.stderr)
-    return raw
-
-
-def _extracted_docs(raw: DataFrame) -> DataFrame:
-    return raw.filter(F.col("ok")).select("filename", "text")
-
-
-def _load_input(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet documents table, or a directory of raw documents (whose
-    extraction stays persisted: commands load through ``_input``,
-    which releases it)."""
+    A directory is extracted ONCE: the extraction is persisted
+    (spilling to disk), so the failed-extraction diagnostics and every
+    later action of the command (the chunk-id sample and counts, the
+    embedder fit, the write) read it instead of re-running the PDF/DOCX
+    kernel, and it is released when the command ends. Diagnostics in
+    ONE bounded pass (round-4 VERDICT item 4): count() fills the cache
+    and limit(10) reads it; the old collect()[:10] shipped EVERY failed
+    row to the driver (OOM at a million-corrupt-file scale) and re-ran
+    extraction."""
     if _is_table(path):
         from document_vector_indexer_spark.plans.pipeline import doc_filename
 
         df = spark.read.parquet(path)
         if "doc_id" not in df.columns:
             df = _ensure_doc_id(df, [df.columns[0]])
-        return df.withColumn("filename", doc_filename())
-    return _extracted_docs(_extract(spark, path))
-
-
-@contextlib.contextmanager
-def _input(spark: SparkSession, path: str) -> Iterator[DataFrame]:
-    """``_load_input`` for the span of one command: a document
-    directory's persisted extraction is released when it ends."""
-    if _is_table(path):
-        yield _load_input(spark, path)
+        yield df.withColumn("filename", doc_filename())
         return
-    raw = _extract(spark, path)
+    from pyspark import StorageLevel
+
+    from document_vector_indexer_spark.sources.binary_docs import read_documents
+
+    raw = read_documents(spark, path).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        yield _extracted_docs(raw)
+        bad = raw.filter(~F.col("ok")).select("filename", "extract_error")
+        n_bad = bad.count()
+        if n_bad:
+            print(f"warning: {n_bad} file(s) failed extraction:", file=sys.stderr)
+            for r in bad.limit(10).collect():
+                print(f"  {r.filename}: {r.extract_error}", file=sys.stderr)
+        yield raw.filter(F.col("ok")).select("filename", "text")
     finally:
         raw.unpersist()
 
 
+def _load_input(spark: SparkSession, path: str) -> DataFrame:
+    """``_input``'s frame on its own, for callers outside a command: a
+    document directory's extraction is not kept persisted."""
+    with _input(spark, path) as docs:
+        return docs
+
+
 def cmd_index(args: argparse.Namespace) -> None:
+    from document_vector_indexer_spark.plans import pipeline as P
     from document_vector_indexer_spark.session import get_spark
 
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-index")
     with _input(spark, args.input) as docs:
-        _index(spark, args, docs)
-
-
-def _index(spark: SparkSession, args: argparse.Namespace, docs: DataFrame) -> None:
-    from document_vector_indexer_spark.plans import pipeline as P
-
-    model_path = os.path.join(args.output, "_idf_model")
-    # NB: the dynamic-partition-overwrite committer writes no root
-    # _SUCCESS marker — detect an existing chunk table by its
-    # split_strategy= partition directories instead
-    incremental = bool(
-        getattr(args, "incremental", False)
-        and os.path.isdir(args.output)
-        and any(
-            e.startswith("split_strategy=") for e in os.listdir(args.output)
+        model_path = os.path.join(args.output, "_idf_model")
+        # NB: the dynamic-partition-overwrite committer writes no root
+        # _SUCCESS marker — detect an existing chunk table by its
+        # split_strategy= partition directories instead
+        incremental = bool(
+            getattr(args, "incremental", False)
+            and os.path.isdir(args.output)
+            and any(
+                e.startswith("split_strategy=") for e in os.listdir(args.output)
+            )
         )
-    )
-    id_offset = 0
-    if incremental:
-        # Cheap local preconditions FIRST — before any Spark job runs
-        # (round-4 review: the old order spent two cluster scans to
-        # print an error that was knowable from the driver).
-        #
-        # 1. Identity stability: the anti join keys on `filename`. For
-        #    a parquet input WITHOUT a doc_id column, _load_input
-        #    synthesizes filenames from a global ORDERING of the rows —
-        #    growing the input shifts every rank, so old docs would
-        #    reappear under new names and new docs would collide with
-        #    'seen' names (confirmed: silent duplicate + silent drop).
-        #    Refuse rather than corrupt.
-        if _is_table(args.input):
-            if "doc_id" not in spark.read.parquet(args.input).columns:
+        id_offset = 0
+        if incremental:
+            # Cheap local preconditions FIRST — before any Spark job runs
+            # (round-4 review: the old order spent two cluster scans to
+            # print an error that was knowable from the driver).
+            #
+            # 1. Identity stability: the anti join keys on `filename`. For
+            #    a parquet input WITHOUT a doc_id column, _input
+            #    synthesizes filenames from a global ORDERING of the rows —
+            #    growing the input shifts every rank, so old docs would
+            #    reappear under new names and new docs would collide with
+            #    'seen' names (confirmed: silent duplicate + silent drop).
+            #    Refuse rather than corrupt.
+            if _is_table(args.input):
+                if "doc_id" not in spark.read.parquet(args.input).columns:
+                    sys.exit(
+                        "error: --incremental over a parquet input needs a "
+                        "stable doc_id column (synthesized order-based ids "
+                        "shift when the input grows, corrupting the anti "
+                        "join); add a doc_id or index a document directory"
+                    )
+            # 2. Embedder/model consistency: old and new rows must share
+            #    ONE vector space. A saved model implies a local/word2vec
+            #    build; its absence implies an api build.
+            if args.embedder in ("local", "word2vec") and not os.path.exists(
+                model_path
+            ):
                 sys.exit(
-                    "error: --incremental over a parquet input needs a "
-                    "stable doc_id column (synthesized order-based ids "
-                    "shift when the input grows, corrupting the anti "
-                    "join); add a doc_id or index a document directory"
+                    f"error: --incremental needs the fitted model at "
+                    f"{model_path} (was the index built with --embedder api?)"
                 )
-        # 2. Embedder/model consistency: old and new rows must share
-        #    ONE vector space. A saved model implies a local/word2vec
-        #    build; its absence implies an api build.
-        if args.embedder in ("local", "word2vec") and not os.path.exists(
-            model_path
-        ):
-            sys.exit(
-                f"error: --incremental needs the fitted model at "
-                f"{model_path} (was the index built with --embedder api?)"
-            )
-        if args.embedder == "api" and os.path.exists(model_path):
-            sys.exit(
-                "error: this index was built with a fitted local model; "
-                "--incremental --embedder api would append vectors from "
-                "a different embedding space"
-            )
-        # converge-don't-recompute: skip documents already in the chunk
-        # table (anti join on filename — one distinct column, broadcast
-        # or shuffle as Catalyst sizes it), continue ids after the
-        # existing max, and APPEND only the new chunks.
-        existing = spark.read.parquet(args.output)
-        seen = existing.select("filename").distinct()
-        docs = docs.join(seen, "filename", "left_anti")
-        if docs.isEmpty():
-            print(f"No new documents. Index at {args.output} is up to date.")
-            return
-        id_offset = existing.agg(F.max("id")).first()[0] or 0
+            if args.embedder == "api" and os.path.exists(model_path):
+                sys.exit(
+                    "error: this index was built with a fitted local model; "
+                    "--incremental --embedder api would append vectors from "
+                    "a different embedding space"
+                )
+            # converge-don't-recompute: skip documents already in the chunk
+            # table (anti join on filename — one distinct column, broadcast
+            # or shuffle as Catalyst sizes it), continue ids after the
+            # existing max, and APPEND only the new chunks.
+            existing = spark.read.parquet(args.output)
+            seen = existing.select("filename").distinct()
+            docs = docs.join(seen, "filename", "left_anti")
+            if docs.isEmpty():
+                print(f"No new documents. Index at {args.output} is up to date.")
+                return
+            id_offset = existing.agg(F.max("id")).first()[0] or 0
 
-    chunks = P.number_chunks(
-        P.chunk_table(docs, args.strategy, args.chunk_size, args.overlap),
-        id_offset,
-    )
-    if incremental and args.embedder != "api":
-        from pyspark.ml import PipelineModel
+        chunks = P.number_chunks(
+            P.chunk_table(docs, args.strategy, args.chunk_size, args.overlap),
+            id_offset,
+        )
+        if incremental and args.embedder != "api":
+            from pyspark.ml import PipelineModel
 
-        model = PipelineModel.load(model_path)
-    else:
-        model = P.fit_embedder(chunks, args.embedder, args.embedding_dim)
-        if model is not None:
-            model.write().overwrite().save(model_path)
-    out = P.embed_chunks(chunks, model, args.embedding_dim, args.batch_size)
-    P.write_chunk_table(out, args.output, mode="append" if incremental else "overwrite")
-    n = spark.read.parquet(args.output).count()
-    # mirrors the reference's completion message (index_documents.py:308)
-    print(
-        f"Done. Indexed {n} chunks to {args.output} "
-        f"(strategy={args.strategy}, embedder={args.embedder}"
-        + (", incremental" if incremental else "")
-        + ")"
-    )
+            model = PipelineModel.load(model_path)
+        else:
+            model = P.fit_embedder(chunks, args.embedder, args.embedding_dim)
+            if model is not None:
+                model.write().overwrite().save(model_path)
+        out = P.embed_chunks(chunks, model, args.embedding_dim, args.batch_size)
+        P.write_chunk_table(out, args.output, mode="append" if incremental else "overwrite")
+        n = spark.read.parquet(args.output).count()
+        # mirrors the reference's completion message (index_documents.py:308)
+        print(
+            f"Done. Indexed {n} chunks to {args.output} "
+            f"(strategy={args.strategy}, embedder={args.embedder}"
+            + (", incremental" if incremental else "")
+            + ")"
+        )
 
 
 def cmd_query(args: argparse.Namespace) -> None:
@@ -299,61 +283,56 @@ def cmd_curate(args: argparse.Namespace) -> None:
     The dedup/split counts come from the written output, never from
     extra ``.count()`` passes over the pipeline (round-3 ADVICE: the
     old per-stage counts re-executed the plan four times)."""
+    from document_vector_indexer_spark.operators.dedup import exact_dedup_keep_first
+    from document_vector_indexer_spark.operators.textanalysis import gopher_rules
+    from document_vector_indexer_spark.operators.trainprep import hash_split
     from document_vector_indexer_spark.session import get_spark
 
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-curate")
     with _input(spark, args.input) as docs:
-        _curate(spark, args, docs)
+        if "doc_id" not in docs.columns:
+            docs = _ensure_doc_id(docs, ["filename"])
+        docs = docs.withColumn("_keep", gopher_rules(F.col("text"))["keep"])
+        stats = docs.agg(
+            F.count("*").alias("n_in"),
+            F.sum(F.col("_keep").cast("long")).alias("n_quality"),
+        ).first()
+        n_in, n_quality = stats["n_in"], stats["n_quality"] or 0
+        kept = docs.filter(F.col("_keep")).drop("_keep")
+        deduped = exact_dedup_keep_first(kept, text_col="text", id_col="doc_id")
+        if args.dedup == "near":
+            # exact pass first (cheap, md5 shuffle), then MinHash + connected
+            # components for the non-identical near-dups
+            from document_vector_indexer_spark.operators.dedup import (
+                near_dedup_keep_first,
+            )
 
-
-def _curate(spark: SparkSession, args: argparse.Namespace, docs: DataFrame) -> None:
-    from document_vector_indexer_spark.operators.dedup import exact_dedup_keep_first
-    from document_vector_indexer_spark.operators.textanalysis import gopher_rules
-    from document_vector_indexer_spark.operators.trainprep import hash_split
-
-    if "doc_id" not in docs.columns:
-        docs = _ensure_doc_id(docs, ["filename"])
-    docs = docs.withColumn("_keep", gopher_rules(F.col("text"))["keep"])
-    stats = docs.agg(
-        F.count("*").alias("n_in"),
-        F.sum(F.col("_keep").cast("long")).alias("n_quality"),
-    ).first()
-    n_in, n_quality = stats["n_in"], stats["n_quality"] or 0
-    kept = docs.filter(F.col("_keep")).drop("_keep")
-    deduped = exact_dedup_keep_first(kept, text_col="text", id_col="doc_id")
-    if args.dedup == "near":
-        # exact pass first (cheap, md5 shuffle), then MinHash + connected
-        # components for the non-identical near-dups
-        from document_vector_indexer_spark.operators.dedup import (
-            near_dedup_keep_first,
+            deduped = near_dedup_keep_first(
+                deduped, text_col="text", id_col="doc_id",
+                threshold=args.near_threshold,
+            )
+        split = hash_split(deduped, id_col="doc_id")
+        split.write.mode("overwrite").partitionBy("split").parquet(args.output)
+        per_split = {
+            r["split"]: r["n"]
+            for r in spark.read.parquet(args.output)
+            .groupBy("split").agg(F.count("*").alias("n")).collect()
+        }
+        n_dedup = sum(per_split.values())
+        # the dedup label must say which passes ran — "exact dedup" on a
+        # --dedup near run would hide whether near-dedup removed anything
+        # (round-4 review)
+        dedup_label = (
+            "exact dedup" if args.dedup == "exact" else "exact+near dedup"
         )
-
-        deduped = near_dedup_keep_first(
-            deduped, text_col="text", id_col="doc_id",
-            threshold=args.near_threshold,
+        print(
+            f"Curated {args.input}: {n_in} docs -> {n_quality} pass quality "
+            f"({n_in - n_quality} dropped) -> {n_dedup} after {dedup_label} "
+            f"({n_quality - n_dedup} duplicates) -> splits {per_split} "
+            f"at {args.output}"
         )
-    split = hash_split(deduped, id_col="doc_id")
-    split.write.mode("overwrite").partitionBy("split").parquet(args.output)
-    per_split = {
-        r["split"]: r["n"]
-        for r in spark.read.parquet(args.output)
-        .groupBy("split").agg(F.count("*").alias("n")).collect()
-    }
-    n_dedup = sum(per_split.values())
-    # the dedup label must say which passes ran — "exact dedup" on a
-    # --dedup near run would hide whether near-dedup removed anything
-    # (round-4 review)
-    dedup_label = (
-        "exact dedup" if args.dedup == "exact" else "exact+near dedup"
-    )
-    print(
-        f"Curated {args.input}: {n_in} docs -> {n_quality} pass quality "
-        f"({n_in - n_quality} dropped) -> {n_dedup} after {dedup_label} "
-        f"({n_quality - n_dedup} duplicates) -> splits {per_split} "
-        f"at {args.output}"
-    )
 
 
 def cmd_analyze(args: argparse.Namespace) -> None:
@@ -362,71 +341,66 @@ def cmd_analyze(args: argparse.Namespace) -> None:
     pad-to-bucket batching profile, and the vocabulary head. Four
     jobs, all tiny after map-side prep: one doc-level aggregate, one
     lang agg, one (source, bucket) agg, one word agg."""
+    import json
+
+    from document_vector_indexer_spark.functions import text as TX
+    from document_vector_indexer_spark.operators.mining import length_buckets
+    from document_vector_indexer_spark.operators.textanalysis import vocab_topk
     from document_vector_indexer_spark.session import get_spark
 
     if not os.path.exists(args.input):
         sys.exit(f"error: input not found: {args.input}")
     spark = get_spark(app_name="dvi-analyze")
     with _input(spark, args.input) as docs:
-        _analyze(docs)
-
-
-def _analyze(docs: DataFrame) -> None:
-    import json
-
-    from document_vector_indexer_spark.functions import text as TX
-    from document_vector_indexer_spark.operators.mining import length_buckets
-    from document_vector_indexer_spark.operators.textanalysis import vocab_topk
-
-    base = docs.select(
-        "*",
-        TX.token_count_ws(F.col("text")).alias("_tokens"),
-        F.md5(F.col("text")).alias("_h"),
-    )
-    head = base.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("_tokens").cast("long").alias("total_tokens"),
-        F.sum(F.length("text")).cast("long").alias("total_chars"),
-        F.countDistinct("_h").alias("n_unique_texts"),
-    ).first()
-    report: dict = {
-        "n_docs": head["n_docs"],
-        "total_tokens": head["total_tokens"] or 0,
-        "total_chars": head["total_chars"] or 0,
-        "exact_dup_docs": head["n_docs"] - head["n_unique_texts"],
-    }
-    if "lang" in docs.columns:
-        # NULL lang -> "unknown" BEFORE the groupBy: a None key would
-        # crash json.dumps(sort_keys=True), and remapping after the agg
-        # would silently overwrite a genuine lang='unknown' group
-        report["langs"] = {
-            r["lang"]: r["n"]
-            for r in base.groupBy(
-                F.coalesce("lang", F.lit("unknown")).alias("lang")
-            ).agg(F.count("*").alias("n")).collect()
+        base = docs.select(
+            "*",
+            TX.token_count_ws(F.col("text")).alias("_tokens"),
+            F.md5(F.col("text")).alias("_h"),
+        )
+        head = base.agg(
+            F.count("*").alias("n_docs"),
+            F.sum("_tokens").cast("long").alias("total_tokens"),
+            F.sum(F.length("text")).cast("long").alias("total_chars"),
+            F.countDistinct("_h").alias("n_unique_texts"),
+        ).first()
+        report: dict = {
+            "n_docs": head["n_docs"],
+            "total_tokens": head["total_tokens"] or 0,
+            "total_chars": head["total_chars"] or 0,
+            "exact_dup_docs": head["n_docs"] - head["n_unique_texts"],
         }
-    # No source column -> the whole corpus reports as one 'all' group
-    # (a per-filename grouping would be one group per document — not a
-    # batching profile). Plain boolean, not a misleading 'filename'
-    # fallback value (round-4 ADVICE).
-    has_source = "source" in docs.columns
-    grouped = base if has_source else base.withColumn("source", F.lit("all"))
-    report["length_buckets"] = [
-        {
-            "source": r["grp"],
-            "bucket_len": r["bucket_len"],
-            "n_docs": r["n_docs"],
-            "n_batches": r["n_batches"],
-            "util_ppm": r["util_ppm"],
-        }
-        for r in length_buckets(grouped, "_tokens", "source").collect()
-    ]
-    id_col = "doc_id" if "doc_id" in docs.columns else "filename"
-    report["vocab_top10"] = [
-        {"word": r["word"], "n_docs": r["n_docs"], "n_occur": r["n_occur"]}
-        for r in vocab_topk(docs, k=10, text_col="text", id_col=id_col).collect()
-    ]
-    print(json.dumps(report, sort_keys=True))
+        if "lang" in docs.columns:
+            # NULL lang -> "unknown" BEFORE the groupBy: a None key would
+            # crash json.dumps(sort_keys=True), and remapping after the agg
+            # would silently overwrite a genuine lang='unknown' group
+            report["langs"] = {
+                r["lang"]: r["n"]
+                for r in base.groupBy(
+                    F.coalesce("lang", F.lit("unknown")).alias("lang")
+                ).agg(F.count("*").alias("n")).collect()
+            }
+        # No source column -> the whole corpus reports as one 'all' group
+        # (a per-filename grouping would be one group per document — not a
+        # batching profile). Plain boolean, not a misleading 'filename'
+        # fallback value (round-4 ADVICE).
+        has_source = "source" in docs.columns
+        grouped = base if has_source else base.withColumn("source", F.lit("all"))
+        report["length_buckets"] = [
+            {
+                "source": r["grp"],
+                "bucket_len": r["bucket_len"],
+                "n_docs": r["n_docs"],
+                "n_batches": r["n_batches"],
+                "util_ppm": r["util_ppm"],
+            }
+            for r in length_buckets(grouped, "_tokens", "source").collect()
+        ]
+        id_col = "doc_id" if "doc_id" in docs.columns else "filename"
+        report["vocab_top10"] = [
+            {"word": r["word"], "n_docs": r["n_docs"], "n_occur": r["n_occur"]}
+            for r in vocab_topk(docs, k=10, text_col="text", id_col=id_col).collect()
+        ]
+        print(json.dumps(report, sort_keys=True))
 
 
 def main(argv: list[str] | None = None) -> None:

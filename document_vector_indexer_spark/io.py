@@ -4,11 +4,12 @@ The engine core never infers schemas (mirrors the reference's fixed,
 code-defined schema policy, ``/root/reference/index_documents.py:202-224``);
 every table is read with its StructType declared here, which spares the
 one schema-inference Spark job per table a plain ``spark.read.parquet``
-runs. The one exception is raw ``events``, whose timestamp encoding
-varies by fixture generation (``_load_events``). Before a declared read,
-the declaration is checked against one data file's footer on the driver
-(``check_declared_schema``, no Spark job), so a missing column or a
-changed type raises ``SchemaMismatchError`` instead of reading as NULLs.
+runs. Raw ``events`` picks its ``ts`` type from the footer, since the
+timestamp encoding varies by fixture generation (``_load_events``).
+Before a declared read, the declaration is checked against one data
+file's footer on the driver (``check_declared_schema``, no Spark job),
+so a missing column or a changed type raises ``SchemaMismatchError``
+instead of reading as NULLs.
 
 Scale note: at 100 TB each of these reads becomes a partitioned
 parquet/Delta table; ``spark.read.parquet`` keeps predicate pushdown,
@@ -20,7 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -157,33 +157,23 @@ class SchemaMismatchError(ValueError):
     another type."""
 
 
-# Arrow type (as printed) -> Spark type simpleString, for the
-# non-timestamp types of the engine's tables (pyarrow writers may
-# store strings as large_string).
-_ARROW_TO_SPARK = {
-    "int32": "int",
-    "int64": "bigint",
-    "float": "float",
-    "double": "double",
-    "string": "string",
-    "large_string": "string",
-}
-
-
 def _spark_type(t, int96: bool = False) -> str:
-    """The Spark type a parquet column of Arrow type ``t`` reads as.
-    Timestamps follow Spark 4: INT96 and UTC-adjusted timestamps are
-    TIMESTAMP, naive milli/micro timestamps TIMESTAMP_NTZ; anything
-    else keeps its Arrow name, which matches no declared type."""
+    """The Spark type a parquet column of Arrow type ``t`` reads as:
+    pyspark's Arrow mapping, with naive timestamps as TIMESTAMP_NTZ (as
+    Spark 4 reads them), except that INT96 timestamps read as TIMESTAMP
+    and INT64 nanosecond timestamps as BIGINT (Spark reads them only
+    under ``spark.sql.legacy.parquet.nanosAsLong``, which
+    ``_load_events`` sets). A type pyspark cannot map keeps its Arrow
+    name, which matches no declared type."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    if pa.types.is_timestamp(t):
-        if int96 or t.tz is not None:
-            return "timestamp"
-        return "timestamp_ntz" if t.unit in ("ms", "us") else str(t)
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return f"array<{_spark_type(t.value_type)}>"
-    return _ARROW_TO_SPARK.get(str(t), str(t))
+    if pa.types.is_timestamp(t) and (int96 or t.unit == "ns"):
+        return "timestamp" if int96 else "bigint"
+    try:
+        return from_arrow_type(t, prefer_timestamp_ntz=True).simpleString()
+    except TypeError:
+        return str(t)
 
 
 def footer_types(path: str) -> "dict[str, str] | None":
@@ -242,10 +232,9 @@ def _read_declared(
 # is semantically free, and it spares the per-query driver-side file
 # listing + parquet footer read that spark.read.parquet performs — the
 # same role a metastore catalog plays for spark.table() in production.
-# The test corpus dirs are immutable by contract (TESTDATA.md); the one
-# writer into an sf_dir, ingest_engine_layout, enters a table only
-# after writing it. Weak keying drops a session's entries when the
-# session itself is released.
+# The test corpus dirs are immutable by contract (TESTDATA.md); writers
+# in this package never write into an sf_dir. Weak keying drops a
+# session's entries when the session itself is released.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
 
 
@@ -396,12 +385,27 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     NTZ because Structured Streaming watermarks accept only TIMESTAMP
     (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) and batch/stream share these
     query shapes.
+
+    The stored ``ts`` type comes from one file's footer on the driver
+    (``footer_types``), so this read, like every other table's, is
+    declared and runs no schema-inference job.
     """
     from pyspark.sql import functions as F
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    ts_type = dict(df.dtypes).get("ts")
+    path = table_path(sf_dir, "events")
+    ts_type = (footer_types(path) or {}).get("ts")
+    if ts_type == "bigint":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    stored = {"bigint": T.LongType(), "timestamp_ntz": T.TimestampNTZType()}
+    schema = T.StructType(
+        [
+            T.StructField("ts", stored.get(ts_type, T.TimestampType()))
+            if f.name == "ts"
+            else f
+            for f in SCHEMAS["events"].fields
+        ]
+    )
+    df = _read_declared(spark, "events", path, schema)
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_type == "timestamp_ntz":
@@ -423,6 +427,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
 # vector math) cost per ROW, not per byte, so their parallelism must
 # come from row spread even when the files are byte-small.
 _ROW_SPREAD_TABLES = {"documents": 16, "embeddings": 16}
+
+
+def _one_row_group_rows(path: str) -> int | None:
+    """Row count of a parquet table stored as one file holding one row
+    group (footer read on the driver), else ``None``."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(path):
+        return None
+    meta = pq.ParquetFile(path).metadata
+    return meta.num_rows if meta.num_row_groups == 1 else None
 
 
 def ingest_engine_layout(
@@ -457,22 +472,20 @@ def ingest_engine_layout(
     scale factors this covers region, nation, customer, supplier and
     part (sf0.001: also orders and lineitem).
 
-    Rewritten: every other table — events, documents and embeddings
-    (row spread 16), any table of at least 2 x ``target_file_bytes``,
-    and directory-form sources (an ingested dir fed back in). Each
-    rewrite runs a shuffle-map job and a write job; so do the
-    ``documents__shingles3`` sidecar and the bucketed events table.
-    A rewritten source is read with its declared schema and a copied
-    one has its footer checked (no job either way), except raw events:
-    one schema-inference job, shared by both events writers.
-    A headline sf0.1 ingest is 15 jobs.
+    Split without a shuffle: any other table whose source is one file
+    holding one row group (every fixture table): one task reads it
+    anyway, so that task writes the k files itself, cutting the rows
+    in source order at ``maxRecordsPerFile``. One write job each; at
+    sf0.1 this covers events, documents, embeddings, orders and
+    lineitem.
 
-    Each table but events is registered in the session's table cache
-    (``load_table`` on ``dest``, no job) by the thread that wrote it,
-    so registration overlaps the writes still running instead of
-    falling on the first query. Events are registered on first touch:
-    which of their two layouts to serve is known only once both are
-    written.
+    Repartitioned: every other source — a file of several row groups,
+    or a directory (an ingested dir fed back in): a round-robin
+    ``repartition(k)`` shuffle, then the write. So are the
+    ``documents__shingles3`` sidecar and the bucketed events table,
+    whose layouts need their shuffles. Sources are read with their
+    declared schemas and copies have their footers checked, so no job
+    infers a schema: a headline sf0.1 ingest is 9 jobs.
 
     Tables rewrite CONCURRENTLY (one driver thread each — Spark's
     scheduler interleaves the jobs): the read side of each rewrite is
@@ -481,14 +494,6 @@ def ingest_engine_layout(
     wall-clock goes down. Output is per-table-deterministic either way.
     """
     from concurrent.futures import ThreadPoolExecutor
-
-    # one lock per source table: the two events writers then share one
-    # load, and with it its one inference job
-    locks = {t: threading.Lock() for t in TABLES}
-
-    def source(t: str) -> DataFrame:
-        with locks[t]:
-            return load_table(spark, sf_dir, t)
 
     def rewrite(t: str) -> None:
         src, out = table_path(sf_dir, t), table_path(dest, t)
@@ -500,15 +505,20 @@ def ingest_engine_layout(
                 shutil.rmtree(out)
             shutil.copyfile(src, out)
         else:
-            source(t).repartition(int(k)).write.mode("overwrite").parquet(out)
-        if t != "events":
-            load_table(spark, dest, t)
+            df = load_table(spark, sf_dir, t)
+            rows = _one_row_group_rows(src)
+            if rows is None:
+                w = df.repartition(int(k)).write
+            else:
+                w = df.coalesce(1).write.option(
+                    "maxRecordsPerFile", (rows + k - 1) // k
+                )
+            w.mode("overwrite").parquet(out)
 
     def rewrite_shingles() -> None:
         # Derived projection, not a table copy: see _shingles3.
-        name = "documents__shingles3"
-        _DERIVED[name](spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(dest, f"{name}.parquet")
+        _shingles3(spark, sf_dir).write.mode("overwrite").parquet(
+            os.path.join(dest, f"{SHINGLES3}.parquet")
         )
 
     def rewrite_events_bucketed() -> None:
@@ -523,7 +533,9 @@ def ingest_engine_layout(
         tmp = _loc_table_name("dvi_ingest_events_bkt_", loc)
         write_bucketed(
             spark,
-            source("events").repartition(EVENTS_BUCKETS, "user_id"),
+            load_table(spark, sf_dir, "events").repartition(
+                EVENTS_BUCKETS, "user_id"
+            ),
             tmp,
             "user_id",
             n_buckets=EVENTS_BUCKETS,
@@ -548,6 +560,10 @@ def ingest_engine_layout(
     return dest
 
 
+# The one derived projection the ingest writes (see _shingles3).
+SHINGLES3 = "documents__shingles3"
+
+
 def _shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each doc's distinct word-3-gram set, the per-row-CPU half of
     every near-dup query (tokenize + gram assembly), materialized once
@@ -566,12 +582,6 @@ def _shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Derived projections the ingest writes: name -> the plan that defines
-# it. The plan's schema (analysis only, no job) is the stored files'
-# declared schema.
-_DERIVED = {"documents__shingles3": _shingles3}
-
-
 def load_derived(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame | None:
@@ -580,15 +590,19 @@ def load_derived(
     an ingest (the driver's correctness runs) — callers fall back to
     computing the projection inline. Local-path existence probe only:
     this harness always reads local dirs; an object-store deployment
-    would track projections in the catalog instead."""
+    would track projections in the catalog instead.
+
+    The stored files are read with the schema of the plan that defines
+    them, which analysis yields without a job."""
+    if name != SHINGLES3:
+        raise KeyError(f"unknown derived projection {name!r}")
     p = os.path.join(sf_dir, f"{name}.parquet")
     if not os.path.exists(p):
         return None
     per_session = _session_cache(spark)
     got = per_session.get((sf_dir, name))
     if got is None:
-        schema = _DERIVED[name](spark, sf_dir).schema
-        got = _read_declared(spark, name, p, schema)
+        got = _read_declared(spark, name, p, _shingles3(spark, sf_dir).schema)
         per_session[(sf_dir, name)] = got
     return got
 

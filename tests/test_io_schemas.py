@@ -29,8 +29,8 @@ def ingested(spark, tmp_path_factory):
 @pytest.mark.parametrize("name", TABLES)
 def test_declared_schema_matches_fixture(spark, name):
     """Every table as Spark infers it from the fixture file, except raw
-    events: the one table load_table reads with inference, compared
-    after its ts normalization."""
+    events, whose ts is declared as ``_load_events`` normalizes it: it
+    is compared through load_table."""
     got = (
         load_table(spark, SF, name)
         if name == "events"
@@ -74,27 +74,46 @@ def _jobs_run(spark, fn) -> int:
 
 
 def test_ingest_and_first_load_job_counts(spark, tmp_path):
-    """Declared-schema reads run no schema-inference job, and a one-file
-    table is copied instead of rewritten: an sf0.001 ingest is 11 jobs
-    (raw events' inference job, then a shuffle-map and a write job for
-    events, documents, embeddings, the shingles sidecar and the
-    bucketed events), and the first load of every table of the
-    ingested dir runs none. The load runs in a new session: the ingest
-    has already registered its tables in this one's cache."""
+    """Declared-schema reads run no schema-inference job, a one-file
+    table is copied instead of rewritten, and a one-row-group source is
+    split into its files without a shuffle: an sf0.001 ingest is 7 jobs
+    (a write job for events, documents and embeddings; a shuffle-map
+    and a write job for the shingles sidecar and the bucketed events),
+    and the first load
+    of every table, of the raw fixture dir (in a new session, whose
+    table cache is empty) and of the ingested dir, runs none."""
     dest = str(tmp_path / "ingested")
     n_ingest = _jobs_run(
         spark, lambda: ingest_engine_layout(spark, SF, dest)
     )
-    assert n_ingest <= 11
+    assert n_ingest <= 7
 
     fresh = spark.newSession()
 
     def first_load():
         for t in TABLES:
-            load_table(fresh, dest, t).schema  # noqa: B018
-        load_derived(fresh, dest, "documents__shingles3").schema  # noqa: B018
+            load_table(fresh, SF, t).schema  # noqa: B018
+            load_table(spark, dest, t).schema  # noqa: B018
+        load_derived(spark, dest, "documents__shingles3").schema  # noqa: B018
 
     assert _jobs_run(spark, first_load) == 0
+
+
+def test_nanos_events_ts_read_as_micros(spark, tmp_path):
+    """An INT64 TIMESTAMP(NANOS) ts (an older fixture generation) is
+    read as a long under the legacy conf and truncated to micros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    t = pq.read_table(table_path(SF, "events"))
+    i = t.schema.get_field_index("ts")
+    ns = pa.array([1_700_000_000_123_456_789] * t.num_rows, pa.timestamp("ns"))
+    pq.write_table(t.set_column(i, "ts", ns), str(tmp_path / "events.parquet"))
+    ev = load_table(spark, str(tmp_path), "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = ev.select(F.unix_micros("ts").alias("us")).distinct().collect()
+    assert [r.us for r in got] == [1_700_000_000_123_456]
 
 
 def _write_region(tmp_path, table) -> str:
