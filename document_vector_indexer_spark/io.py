@@ -11,6 +11,17 @@ file's footer on the driver (``check_declared_schema``, no Spark job),
 so a missing column or a changed type raises ``SchemaMismatchError``
 instead of reading as NULLs.
 
+``ingest_engine_layout`` rewrites a corpus into the engine's multi-file
+layout. A table that stays one file is copied; any other table whose
+source is one file of one row group is cut into its files by Arrow's
+parquet codec on the driver (``_arrow_split``), except ``events``,
+whose ``ts`` normalization is Spark's, cut by the one Spark task that
+reads it; every other source (a directory, a file of several row
+groups) is repartitioned by Spark. The Spark jobs left in a fixture
+ingest are the events write and the two layouts that need a shuffle:
+the ``documents__shingles3`` sidecar and the bucketed events table.
+``parquet_rows`` counts a written table from its footers.
+
 Scale note: at 100 TB each of these reads becomes a partitioned
 parquet/Delta table; ``spark.read.parquet`` keeps predicate pushdown,
 column pruning and partition pruning intact — nothing here materializes
@@ -440,6 +451,87 @@ def _one_row_group_rows(path: str) -> int | None:
     return meta.num_rows if meta.num_row_groups == 1 else None
 
 
+def parquet_rows(path: str) -> int:
+    """Exact row count of the parquet table at ``path`` (one file, or a
+    directory of part files, partition subdirectories included), summed
+    from the footers on the driver: no Spark job. Entries Spark's
+    reader skips, ``_``/``.``-prefixed ones such as ``_SUCCESS`` or a
+    saved ``_idf_model``, are skipped too."""
+    import pyarrow.parquet as pq
+
+    if os.path.isfile(path):
+        return pq.read_metadata(path).num_rows
+    n = 0
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        n += sum(
+            pq.read_metadata(os.path.join(dirpath, f)).num_rows
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+    return n
+
+
+# Rows per record batch the Arrow split streams through the driver:
+# its memory follows this batch, not the source's one row group.
+_SPLIT_BATCH_ROWS = 1 << 16
+
+
+def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
+    """Cut ``src``, one parquet file of ``rows`` rows in one row group,
+    into k files at ``out`` with Arrow's parquet codec on the driver:
+    file i holds source rows [i·per, (i+1)·per), per = ceil(rows / k),
+    in source order, with the declared columns in their declared order.
+
+    The source is checked against the declaration first, then streamed
+    in bounded record batches (a buffered reader, no pre-buffering of
+    whole column chunks). The files are written into a temporary
+    directory beside ``out``, counted from their footers, and renamed
+    into place, so a failed split leaves no table behind."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    names = SCHEMAS[table].fieldNames()
+    check_declared_schema(table, src, SCHEMAS[table])
+    per = max(1, -(-rows // k))
+    pf = pq.ParquetFile(src, buffer_size=1 << 20)
+    schema = pa.schema([pf.schema_arrow.field(n) for n in names])
+    tmp = os.path.join(
+        os.path.dirname(out), f".{os.path.basename(out)}.{uuid.uuid4().hex}"
+    )
+    os.makedirs(tmp)
+    try:
+        part, left = 0, per
+        writer = pq.ParquetWriter(os.path.join(tmp, "part-00000.parquet"), schema)
+        for batch in pf.iter_batches(
+            batch_size=min(per, _SPLIT_BATCH_ROWS), columns=names
+        ):
+            while batch.num_rows:
+                if left == 0:
+                    writer.close()
+                    part, left = part + 1, per
+                    writer = pq.ParquetWriter(
+                        os.path.join(tmp, f"part-{part:05d}.parquet"), schema
+                    )
+                piece = batch.slice(0, left)
+                writer.write_batch(piece)
+                left -= piece.num_rows
+                batch = batch.slice(piece.num_rows)
+        writer.close()
+        if parquet_rows(tmp) != rows:
+            raise RuntimeError(f"split of {src} did not write its {rows} rows")
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    elif os.path.exists(out):
+        os.remove(out)
+    os.rename(tmp, out)
+
+
 def ingest_engine_layout(
     spark: SparkSession,
     sf_dir: str,
@@ -464,34 +556,38 @@ def ingest_engine_layout(
     File count per table k = max(bytes / target_file_bytes, row-spread
     for per-row-CPU-heavy tables), capped at ``max_files``; bytes are
     the table's on-disk total, a file or a directory of part files.
+    Each table takes the first of these ways that applies:
 
-    Copied, not rewritten: a table with k == 1 whose source is one
-    regular file, except ``events`` (the streaming reader needs its
-    ``ts`` normalized). It already is the one file a rewrite would
-    write, so the copy skips a shuffle and a write job. At the fixture
-    scale factors this covers region, nation, customer, supplier and
-    part (sf0.001: also orders and lineitem).
+    - Copied: a table other than ``events`` with k == 1 whose source is
+      one regular file. It already is the one file a rewrite would
+      write. At the fixture scale factors: region, nation, customer,
+      supplier and part (sf0.001: also orders and lineitem).
+    - Cut by Arrow, no Spark job: a table other than ``events`` whose
+      source is one file holding one row group (``_arrow_split``). That
+      source is one Spark task's worth of data either way, so the
+      driver cuts it into its k files in source order with Arrow's
+      parquet codec instead of a single task re-encoding it through
+      the JVM row writer. At sf0.1: orders, lineitem, documents and
+      embeddings.
+    - Cut by Spark, no shuffle: ``events`` from one file holding one
+      row group, since its ``ts`` normalization is Spark's semantics
+      (``_load_events``). The task that reads it writes the k files,
+      cutting at ``maxRecordsPerFile``: one write job.
+    - Repartitioned: every other source, a file of several row groups
+      or a directory (an ingested dir fed back in, or any production
+      input): a round-robin ``repartition(k)`` shuffle, then the write.
 
-    Split without a shuffle: any other table whose source is one file
-    holding one row group (every fixture table): one task reads it
-    anyway, so that task writes the k files itself, cutting the rows
-    in source order at ``maxRecordsPerFile``. One write job each; at
-    sf0.1 this covers events, documents, embeddings, orders and
-    lineitem.
-
-    Repartitioned: every other source — a file of several row groups,
-    or a directory (an ingested dir fed back in): a round-robin
-    ``repartition(k)`` shuffle, then the write. So are the
-    ``documents__shingles3`` sidecar and the bucketed events table,
-    whose layouts need their shuffles. Sources are read with their
-    declared schemas and copies have their footers checked, so no job
-    infers a schema: a headline sf0.1 ingest is 9 jobs.
+    The ``documents__shingles3`` sidecar and the bucketed events table
+    need their shuffles (a shuffle-map and a write job each). Sources
+    are read with their declared schemas, and copied and Arrow-cut
+    sources have their footers checked, so no job infers a schema: a
+    fixture ingest is 5 jobs (the events write and the two shuffled
+    layouts).
 
     Tables rewrite CONCURRENTLY (one driver thread each — Spark's
-    scheduler interleaves the jobs): the read side of each rewrite is
-    the one-row-group single task being fixed, so a sequential loop
-    serializes ten single-task reads; overlapping them is where the
-    wall-clock goes down. Output is per-table-deterministic either way.
+    scheduler interleaves the jobs, and Arrow's codec releases the
+    GIL), so the Arrow cuts overlap the Spark jobs. Output is
+    per-table-deterministic either way.
     """
     from concurrent.futures import ThreadPoolExecutor
 
@@ -499,14 +595,16 @@ def ingest_engine_layout(
         src, out = table_path(sf_dir, t), table_path(dest, t)
         k = max(1, min(max_files, dir_bytes(src) // target_file_bytes))
         k = max(k, _ROW_SPREAD_TABLES.get(t, 1))
+        rows = _one_row_group_rows(src)
         if k == 1 and t != "events" and os.path.isfile(src):
             check_declared_schema(t, src, SCHEMAS[t])
             if os.path.isdir(out):
                 shutil.rmtree(out)
             shutil.copyfile(src, out)
+        elif rows is not None and t != "events":
+            _arrow_split(t, src, out, rows, k)
         else:
             df = load_table(spark, sf_dir, t)
-            rows = _one_row_group_rows(src)
             if rows is None:
                 w = df.repartition(int(k)).write
             else:

@@ -1360,10 +1360,14 @@ def connected_components(
         .repartition(F.col("dst"))
         .localCheckpoint(eager=True)
     )
+    # Start from round 1's output: from identity labels, every vertex
+    # (each is a src, the edges being symmetric) takes the min of its
+    # own id and its neighbours' ids. One aggregate over the edge list
+    # yields that directly, so the loop runs one round fewer.
     labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("component"))
+        edges.groupBy("src")
+        .agg(F.least(F.col("src"), F.min("dst")).alias("component"))
+        .select(F.col("src").alias("id"), "component")
         .repartition(F.col("id"))
         .localCheckpoint(eager=True)
     )

@@ -121,6 +121,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Static: an LRU of the default 100 entries misses on every class
+        # of a repeated workload that needs more, recompiling each one
+        # (one bench.HEADLINE pass needs about 170 classes). One pass
+        # over the whole registry at sf0.001 compiles 2018 distinct
+        # classes of about 2 KB bytecode each; 4096 holds them with
+        # twofold headroom.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -91,6 +91,14 @@ def _file_counts(sf_dir: str) -> dict[str, int]:
     return out
 
 
+def _pq_files(path: str) -> list[str]:
+    import os
+
+    return sorted(
+        os.path.join(path, f) for f in os.listdir(path) if not f.startswith(("_", "."))
+    )
+
+
 def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
     spark, tmp_path
 ):
@@ -126,12 +134,14 @@ def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
 
 
 def test_ingest_splits_one_row_group_without_losing_rows(spark, tmp_path):
-    """A one-row-group source is cut into its k files by the task that
-    reads it (maxRecordsPerFile): k files, and every row exactly once."""
+    """A one-row-group source is cut into its k files by Arrow on the
+    driver (events by the Spark task that reads it): k files, and every
+    row exactly once."""
     import os
 
     from document_vector_indexer_spark.io import (
         TABLES,
+        footer_types,
         ingest_engine_layout,
         load_table,
         table_path,
@@ -147,6 +157,68 @@ def test_ingest_splits_one_row_group_without_losing_rows(spark, tmp_path):
         a, b = load_table(spark, src, t), load_table(spark, dest, t)
         assert a.count() == b.count(), t
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), t
+    for t in ("orders", "lineitem", "documents", "embeddings"):  # cut by Arrow
+        for f in _pq_files(table_path(dest, t)):
+            assert footer_types(f) == footer_types(table_path(src, t)), f
+
+
+def test_arrow_split_cuts_contiguous_runs_in_source_order(tmp_path, monkeypatch):
+    """File i holds source rows [i·per, (i+1)·per), per = ceil(rows/k),
+    in order, with k not dividing rows and batches straddling the file
+    boundaries; footer types, timestamp, array and map columns
+    included, equal the source's."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from document_vector_indexer_spark import io as dio
+
+    monkeypatch.setitem(dio.SCHEMAS, "mixed", T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("vec", T.ArrayType(T.FloatType())),
+        T.StructField("props", T.MapType(T.StringType(), T.LongType())),
+    ]))
+    monkeypatch.setattr(dio, "_SPLIT_BATCH_ROWS", 64)
+    rows, k = 1000, 6
+    t0 = datetime.datetime(2024, 1, 1)
+    src_table = pa.table({
+        "id": pa.array(range(rows), pa.int64()),
+        "ts": pa.array([t0 + datetime.timedelta(seconds=i) for i in range(rows)],
+                       pa.timestamp("us")),
+        "vec": pa.array([[float(i), 0.5] for i in range(rows)], pa.list_(pa.float32())),
+        "props": pa.array([[("n", i)] for i in range(rows)], pa.map_(pa.string(), pa.int64())),
+    })
+    src, out = str(tmp_path / "mixed_src.parquet"), str(tmp_path / "mixed.parquet")
+    pq.write_table(src_table, src)
+    dio._arrow_split("mixed", src, out, rows, k)
+    per = -(-rows // k)
+    files = _pq_files(out)
+    assert len(files) == k and rows % k
+    for i, f in enumerate(files):
+        assert pq.read_table(f).equals(src_table.slice(i * per, per)), f
+        assert dio.footer_types(f) == dio.footer_types(src)
+
+
+def test_arrow_split_refuses_mismatched_source(tmp_path):
+    """A source that fails the declared-schema check raises before any
+    file is written."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from document_vector_indexer_spark import io as dio
+
+    src, out = str(tmp_path / "src.parquet"), str(tmp_path / "out" / "region.parquet")
+    (tmp_path / "out").mkdir()
+    pq.write_table(pa.table({
+        "r_regionkey": pa.array([0, 1], pa.int64()),  # declared int
+        "r_name": pa.array(["a", "b"]),
+    }), src)
+    with pytest.raises(dio.SchemaMismatchError, match="'r_regionkey'"):
+        dio._arrow_split("region", src, out, 2, 2)
+    assert list((tmp_path / "out").iterdir()) == []
 
 
 def test_partial_bucketed_dir_is_not_registered(spark, tmp_path):

@@ -4,6 +4,8 @@ pgvector top-k query it delegates) in two commands."""
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 
 from document_vector_indexer_spark.cli import main
@@ -25,6 +27,14 @@ def doc_dir(tmp_path_factory):
         "Slice the onions finely and caramelize them slowly in butter. " * 4
     )
     return d
+
+
+def _printed_count(msg: str, pattern: str):
+    import re
+
+    m = re.search(pattern, msg)
+    assert m, msg
+    return m.group(1)
 
 
 def test_cli_index_then_query(spark, doc_dir, tmp_path, capsys):
@@ -156,6 +166,10 @@ def test_cli_curate_end_to_end(spark, tmp_path, capsys):
     assert "1 duplicates" in msg, msg
 
     curated = spark.read.parquet(out)
+    splits = _printed_count(msg, r"splits (\{.*\}) at")
+    assert ast.literal_eval(splits) == {
+        r["split"]: r["count"] for r in curated.groupBy("split").count().collect()
+    }
     ids = {r["doc_id"] for r in curated.select("doc_id").collect()}
     assert 101 not in ids, "gopher-failing doc survived"
     assert 100 not in ids and 0 in ids, "dedup must keep the lowest id"
@@ -183,7 +197,9 @@ def test_cli_incremental_index(spark, doc_dir, tmp_path, capsys):
     args = ["index", str(d), "--strategy", "fixed", "--chunk-size", "200",
             "--overlap", "40", "--embedding-dim", "32", "--output", out]
     main(args)
-    capsys.readouterr()
+    # the printed count is read from the footers; it must be Spark's
+    n_full = _printed_count(capsys.readouterr().out, r"Indexed (\d+) chunks")
+    assert int(n_full) == spark.read.parquet(out).count()
     before = {
         (r.id, r.filename, r.chunk_pos)
         for r in spark.read.parquet(out)
@@ -202,6 +218,8 @@ def test_cli_incremental_index(spark, doc_dir, tmp_path, capsys):
     msg = capsys.readouterr().out
     assert "incremental" in msg
     after_df = spark.read.parquet(out)
+    # the incremental run prints the whole table's count
+    assert int(_printed_count(msg, r"Indexed (\d+) chunks")) == after_df.count()
     after = {
         (r.id, r.filename, r.chunk_pos)
         for r in after_df.select("id", "filename", "chunk_pos").collect()
@@ -239,10 +257,11 @@ def test_cli_curate_near_dedup(spark, tmp_path, capsys):
 
     out_near = str(tmp_path / "cur_near")
     main(["curate", src, "--output", out_near, "--dedup", "near"])
-    capsys.readouterr()
-    near_ids = {
-        r.doc_id for r in spark.read.parquet(out_near).select("doc_id").collect()
-    }
+    msg = capsys.readouterr().out
+    near = spark.read.parquet(out_near)
+    near_ids = {r.doc_id for r in near.select("doc_id").collect()}
+    n_dedup = _printed_count(msg, r"-> (\d+) after exact\+near dedup")
+    assert int(n_dedup) == near.count(), msg
     assert 100 not in near_ids, "near-dup survived --dedup near"
     assert 0 in near_ids, "survivor must be the lowest id"
 

@@ -76,17 +76,17 @@ def _jobs_run(spark, fn) -> int:
 def test_ingest_and_first_load_job_counts(spark, tmp_path):
     """Declared-schema reads run no schema-inference job, a one-file
     table is copied instead of rewritten, and a one-row-group source is
-    split into its files without a shuffle: an sf0.001 ingest is 7 jobs
-    (a write job for events, documents and embeddings; a shuffle-map
-    and a write job for the shingles sidecar and the bucketed events),
-    and the first load
-    of every table, of the raw fixture dir (in a new session, whose
-    table cache is empty) and of the ingested dir, runs none."""
+    cut into its files by Arrow on the driver (events by one Spark
+    task, without a shuffle): an sf0.001 ingest is 5 jobs (a write job
+    for events; a shuffle-map and a write job for the shingles sidecar
+    and the bucketed events), and the first load of every table, of
+    the raw fixture dir (in a new session, whose table cache is empty)
+    and of the ingested dir, runs none."""
     dest = str(tmp_path / "ingested")
     n_ingest = _jobs_run(
         spark, lambda: ingest_engine_layout(spark, SF, dest)
     )
-    assert n_ingest <= 7
+    assert n_ingest <= 5
 
     fresh = spark.newSession()
 
@@ -97,6 +97,41 @@ def test_ingest_and_first_load_job_counts(spark, tmp_path):
         load_derived(spark, dest, "documents__shingles3").schema  # noqa: B018
 
     assert _jobs_run(spark, first_load) == 0
+
+
+def test_failed_arrow_split_leaves_no_partial_table(spark, tmp_path, monkeypatch):
+    """A write failing after the first files of one table's split
+    fails the ingest and leaves neither that table nor its temporary
+    directory behind; the splits that did not fail are complete."""
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from document_vector_indexer_spark.io import parquet_rows
+
+    failed, lock, real = [], threading.Lock(), pq.ParquetWriter.write_batch
+
+    def failing(self, batch, *a, **kw):
+        with lock:  # the tables split in concurrent threads; fail one
+            fail = not failed and os.path.basename(self.where) == "part-00002.parquet"
+            if fail:
+                failed.append(os.path.basename(os.path.dirname(self.where)))
+        if fail:
+            raise OSError("injected write failure")
+        return real(self, batch, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetWriter, "write_batch", failing)
+    dest = str(tmp_path / "ingested")
+    with pytest.raises(OSError, match="injected"):
+        ingest_engine_layout(spark, SF, dest, target_file_bytes=16 << 10)
+    table = failed[0].split(".")[1]  # the temp dir is .<table>.parquet.<suffix>
+    left = os.listdir(dest)
+    assert not [f for f in left if f.startswith(".")], left
+    assert f"{table}.parquet" not in left
+    for t in ("lineitem", "documents", "embeddings"):
+        if t != table:
+            assert parquet_rows(table_path(dest, t)) == parquet_rows(table_path(SF, t))
 
 
 def test_nanos_events_ts_read_as_micros(spark, tmp_path):

@@ -1190,3 +1190,23 @@ def test_lsh_carry_vec_false_narrow_output(spark):
     assert narrow.columns == ["vec_id", "band", "bucket"]
     wide = embedding_lsh_blocks(emb, dim=64).select("vec_id", "band", "bucket")
     assert sorted(map(tuple, narrow.collect())) == sorted(map(tuple, wide.collect()))
+
+
+def test_second_headline_pass_compiles_no_class(spark):
+    """The session's codegen cache holds every class a headline pass
+    needs: a second pass over the 12 keys compiles none (at the
+    default 100 entries it recompiled about 170 each pass)."""
+    from bench import HEADLINE
+    from document_vector_indexer_spark.queries.registry import all_queries
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    specs = all_queries()
+
+    def compiled_by_pass() -> int:
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
+        for name in HEADLINE:
+            specs[name].fn(spark, SF).collect()
+        return codegen.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiled_by_pass()
+    assert compiled_by_pass() == 0

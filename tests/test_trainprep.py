@@ -39,6 +39,16 @@ def test_cc_multiple_components_and_cliques(spark):
     assert got == {10: 10, 11: 10, 12: 10, 20: 20, 25: 20, 30: 30, 31: 30, 32: 30}
 
 
+def test_cc_pairs_only_graph_takes_one_round(spark):
+    """The labels start at the first neighbour-min round's output, so a
+    graph of disjoint pairs is already at its fixpoint: one round finds
+    no change (the identity start needed two)."""
+    edges = [(1, 2), (4, 3), (7, 9)]
+    comp = connected_components(_pairs(spark, edges), max_iterations=1)
+    got = {r.id: r.component for r in comp.collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 7: 7, 9: 7}
+
+
 def test_cc_is_order_insensitive(spark):
     edges = [(5, 1), (4, 5), (2, 4)]
     reversed_edges = [(b, a) if a > b else (a, b) for a, b in edges[::-1]]
