@@ -213,15 +213,12 @@ def cmd_query(args: argparse.Namespace) -> None:
     model_path = os.path.join(args.chunks, "_idf_model")
     if os.path.exists(model_path):
         from pyspark.ml import PipelineModel
-        from pyspark.ml.functions import vector_to_array
+
+        from document_vector_indexer_spark.operators.embedding import embed_with_model
 
         model = PipelineModel.load(model_path)
         q = spark.createDataFrame([(args.text,)], "chunk_text string")
-        q = (
-            model.transform(q)
-            .withColumn("embedding", vector_to_array(F.col("_emb")).cast("array<float>"))
-            .select(F.lit(0).alias("qid"), "embedding")
-        )
+        q = embed_with_model(model, q).select(F.lit(0).alias("qid"), "embedding")
     else:
         from document_vector_indexer_spark.operators.embedding import (
             deterministic_fake_embed,

@@ -306,23 +306,6 @@ def _loc_table_name(prefix: str, loc: str) -> str:
     return prefix + hashlib.md5(os.path.abspath(loc).encode()).hexdigest()[:10]
 
 
-def _schema_ddl(schema: "T.StructType") -> str:
-    """Column DDL via the PUBLIC ``StructType.toDDL()`` (present since
-    Spark 4; replaces the private ``_jdf.schema().toDDL()`` call, r8
-    VERDICT #5), falling back to a field-wise rendering on versions
-    without it. The fallback quotes TOP-LEVEL names only — nested
-    struct field names pass through ``simpleString`` unquoted, which is
-    fine for the engine's flat tables but not a general DDL renderer
-    (``tests/test_bucketing.py`` pins the round-trip for every engine
-    table)."""
-    to_ddl = getattr(schema, "toDDL", None)
-    if to_ddl is not None:
-        return to_ddl()
-    return ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-    )
-
-
 def _bucketed_dir_committed(loc: str) -> bool:
     """True iff the bucketed-table dir is a COMPLETE write: _SUCCESS
     marker present and at least one data file, every data file named
@@ -372,7 +355,7 @@ def _load_events_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     tbl = _loc_table_name("events_by_user_", loc)
     if not spark.catalog.tableExists(tbl):
         check_declared_schema("events", loc, SCHEMAS["events"])
-        ddl = _schema_ddl(SCHEMAS["events"])
+        ddl = SCHEMAS["events"].toDDL()
         # IF NOT EXISTS: ingest_engine_layout's thread pool can reach
         # this concurrently when its SOURCE is itself an ingested dir
         # (two load_table('events') races past the tableExists check —

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from document_vector_indexer_spark.functions import text as TX
 from document_vector_indexer_spark.functions import vector as V
+from document_vector_indexer_spark.operators.similarity import cosine_over_norms
 
 SIMHASH_BITS = 32
 _CHAR_MOD = 2147483647  # 2^31 - 1, keeps the char-fold in long range
@@ -1090,25 +1091,23 @@ def lsh_hot_bucket_stats(blocks: DataFrame, max_bucket_rows: int) -> DataFrame:
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float,
-    block_col: str | None = None,
+    *,
+    dim: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    dim: int | None = None,
     bands: int | str = "auto",
     bits: int | str = "auto",
     seed: int = 7,
     target_bucket_rows: int = 32,
     max_bucket_rows: int | None = 512,
     log_dropped_buckets: bool = False,
-    pair_exchange: str = "narrow",
     target_recall: float = 0.9,
 ) -> DataFrame:
-    """Near-dup pairs by embedding cosine >= threshold. ALWAYS blocked:
-    either by an explicit ``block_col`` (e.g. a cluster id) or, when
-    ``block_col`` is None, by vector-derived sign-LSH buckets
-    (``embedding_lsh_blocks`` — requires ``dim``). There is no
-    all-pairs path: a crossJoin fallback is quadratic and unrunnable at
-    scale, so it does not exist here. Returns (id_a, id_b, sim).
+    """Near-dup pairs by embedding cosine >= threshold, blocked by
+    vector-derived sign-LSH buckets (``embedding_lsh_blocks`` over
+    ``dim``-d vectors). There is no all-pairs path: a crossJoin is
+    quadratic and unrunnable at scale, so it does not exist here.
+    Returns (id_a, id_b, sim).
 
     ``bits="auto"`` (default since r10) sizes the bucket key to the
     corpus via ``recommended_lsh_bits(n, target_bucket_rows)`` — one
@@ -1149,9 +1148,9 @@ def embedding_near_dup_pairs(
     target, so it never binds at driver-oracle scales (measured max
     occupancy ≤ 80 there); None disables it.
 
-    MEASURED recall at the cap (r11, ``tools/cap_recall_probe.py``,
-    planted 0.5%-noise near-identical clusters on the blow-up corpora;
-    table in SCALE.md): recall ~1 for clusters at or under the cap,
+    MEASURED recall at the cap (r11, planted 0.5%-noise near-identical
+    clusters on the blow-up corpora; table in SCALE.md, the probe script
+    in git history): recall ~1 for clusters at or under the cap,
     decaying to ~0 around 4x the cap (noise splits a cluster across
     buckets differently per band, so sub-cap bands keep contributing);
     every dropped cluster concentrated into ≤ 4 semantic-dedup cells —
@@ -1163,32 +1162,28 @@ def embedding_near_dup_pairs(
     off by default to keep benched plans identical —
     ``lsh_hot_bucket_stats`` is the lazy form).
 
-    Both candidate self-joins are MERGE-pinned (r10): the sides are
-    the same corpus-derived frame, so no broadcast build is legal at
-    scale (left unhinted, Catalyst's post-projection size estimate
-    broadcasts at ~sf1 — the q_tpch_q4 failure class), and a forced
-    shuffle_hash build measurably dies once a partition's build side
-    outgrows execution memory (hash relations cannot spill; sorts
-    can — the q_tpch_q21-at-~sf10 lesson).
+    The candidate self-join is MERGE-pinned (r10): both sides are the
+    same corpus-derived frame, so no broadcast build is legal at scale
+    (left unhinted, Catalyst's post-projection size estimate broadcasts
+    at ~sf1 — the q_tpch_q4 failure class), and a forced shuffle_hash
+    build measurably dies once a partition's build side outgrows
+    execution memory (hash relations cannot spill; sorts can — the
+    q_tpch_q21-at-~sf10 lesson).
 
-    ``pair_exchange`` (r11): ``"narrow"`` (default) scores and
-    threshold-filters each candidate COPY inside the (band, bucket)
-    join's own partitioning and only THEN collapses multi-band copies
+    A pair sharing several bands appears once per band. Each candidate
+    COPY is scored and threshold-filtered inside the (band, bucket)
+    join's own partitioning, and only THEN do the copies collapse (r11)
     — so the pair-dedup exchange carries the ~24-byte SURVIVOR rows
-    (true near-dups only), not the full candidate set. ``"wide"``
-    keeps the r6–r10 dedup-then-score order as the parity /
-    measurement reference: values identical (same pair set, same
-    scoring expression — sims are identical across band copies, so
-    deduping before or after scoring is value-neutral), but its
-    ``dropDuplicates`` exchange carries EVERY candidate row at
-    ~1 KB (two ``dim``-double vectors) — measured 41.1 s vs 24.3 s
-    at ~sf10 and transiently >40 GB of shuffle at ~sf100 (422 M
-    candidates, skew factor 1.8 over the uniform-occupancy estimate).
+    (true near-dups only), never the ~1 KB candidate rows with two
+    ``dim``-double vectors. Sims are identical across copies (same
+    expression over the same two vectors), so the collapse order is
+    value-neutral; the r6–r10 dedup-then-score order measured 41.1 s vs
+    24.3 s at ~sf10 and >40 GB of transient shuffle at ~sf100 (SCALE.md).
 
     Two measured dead-ends bracket this design (both carried in
-    r11's A/B, receipts in SCALE.md): (a) the r6 note below the
-    candidate join — at sf0.1 the planted-dup fraction is so high
-    that the bands× duplicated cosine folds outweighed the narrower
+    r11's A/B, receipts in SCALE.md): (a) this same score-then-collapse
+    order measured in r6 at sf0.1, where the planted-dup fraction is so
+    high that the bands× duplicated cosine folds outweighed the narrower
     exchange (35% slower THEN; at blow-up scale the bulk of
     candidates match in ~1 band, so the duplication premium fades
     to ~10% while the exchange saving grows with n); (b) the
@@ -1200,127 +1195,73 @@ def embedding_near_dup_pairs(
     exchanges that may carry vectors at scale are the corpus-linear
     ones (6n block rows), which is exactly what this form does.
     """
-    # Per-ROW norms are hoisted BEFORE the pair join (r6): cosine per
-    # candidate pair ran three interpreted array folds (dot + both
-    # norms); the norm is a row property, so computing it once per side
-    # and dividing per pair is the identical expression tree per value
-    # — bit-identical sims (oracle untouched) at one fold per pair.
-    norm = F.sqrt(V.dot(F.col(vec_col), F.col(vec_col)))
-    if pair_exchange not in ("narrow", "wide"):
-        raise ValueError(
-            f"pair_exchange must be 'narrow' or 'wide', got {pair_exchange!r}"
-        )
-    narrow = pair_exchange == "narrow"
-    if block_col is not None:
-        # Explicit blocks: one block value per row -> each pair appears
-        # once, so there is no multi-band dedup and the two forms
-        # coincide. Vectors ride the blk-keyed exchange, which is
-        # corpus-LINEAR (n rows per side) — the only kind of exchange
-        # that may carry vectors at scale.
-        a = df.select(
-            F.col(block_col).alias("blk"),
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("vec_a"),
-            norm.alias("n_a"),
-        )
-        b = df.select(
-            F.col(block_col).alias("blk"),
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vec_b"),
-            norm.alias("n_b"),
-        )
-        cand = a.join(b.hint("merge"), on="blk", how="inner").filter(
-            F.col("id_a") < F.col("id_b")
-        )
-    else:
-        if dim is None:
-            raise ValueError(
-                "block_col=None requires dim= for LSH-bucket blocking "
-                "(all-pairs comparison is not supported)"
-            )
-        bits = _resolve_lsh_bits(df, bits, target_bucket_rows)
-        bands = _resolve_lsh_bands(bands, bits, threshold, target_recall)
-        blocks = embedding_lsh_blocks(
-            df, dim=dim, vec_col=vec_col, id_col=id_col, bands=bands, bits=bits, seed=seed
-        )
-        if max_bucket_rows is not None:
-            if log_dropped_buckets:
-                # Opt-in eager probe (one extra narrow-agg job): the cap
-                # drops hot cells SILENTLY in the lazy plan, so callers
-                # that want a runtime signal pay one count-per-cell pass
-                # up front. Off by default to keep benched plans
-                # identical.
-                import logging
+    bits = _resolve_lsh_bits(df, bits, target_bucket_rows)
+    bands = _resolve_lsh_bands(bands, bits, threshold, target_recall)
+    blocks = embedding_lsh_blocks(
+        df, dim=dim, vec_col=vec_col, id_col=id_col, bands=bands, bits=bits, seed=seed
+    )
+    if max_bucket_rows is not None:
+        if log_dropped_buckets:
+            # Opt-in eager probe (one extra narrow-agg job): the cap
+            # drops hot cells SILENTLY in the lazy plan, so callers
+            # that want a runtime signal pay one count-per-cell pass
+            # up front. Off by default to keep benched plans
+            # identical.
+            import logging
 
-                hot = lsh_hot_bucket_stats(blocks, max_bucket_rows).agg(
-                    F.count("*").alias("cells"),
-                    F.sum("occupancy").alias("rows_in_hot_cells"),
-                    F.max("occupancy").alias("max_occupancy"),
-                ).collect()[0]
-                if (hot["cells"] or 0) > 0:
-                    logging.getLogger(__name__).warning(
-                        "embedding_near_dup_pairs: dropping %d hot (band,"
-                        "bucket) cells (>%d rows; %d rows total, max "
-                        "occupancy %d) — identical-vector clusters above "
-                        "the cap emit NO pairs here and belong to exact/"
-                        "semantic dedup",
-                        hot["cells"],
-                        max_bucket_rows,
-                        hot["rows_in_hot_cells"],
-                        hot["max_occupancy"],
-                    )
-            # occupancy via a window over the SAME (band, bucket) key
-            # the candidate join shuffles on — the exchange is shared,
-            # the cap only adds sorts/filters to it
-            occ_w = Window.partitionBy("band", "bucket")
-            blocks = (
-                blocks.withColumn("__occ", F.count("*").over(occ_w))
-                .filter(F.col("__occ") <= max_bucket_rows)
-                .drop("__occ")
-            )
-        a = blocks.select(
-            "band",
-            "bucket",
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("vec_a"),
-            norm.alias("n_a"),
+            hot = lsh_hot_bucket_stats(blocks, max_bucket_rows).agg(
+                F.count("*").alias("cells"),
+                F.sum("occupancy").alias("rows_in_hot_cells"),
+                F.max("occupancy").alias("max_occupancy"),
+            ).collect()[0]
+            if (hot["cells"] or 0) > 0:
+                logging.getLogger(__name__).warning(
+                    "embedding_near_dup_pairs: dropping %d hot (band,"
+                    "bucket) cells (>%d rows; %d rows total, max "
+                    "occupancy %d) — identical-vector clusters above "
+                    "the cap emit NO pairs here and belong to exact/"
+                    "semantic dedup",
+                    hot["cells"],
+                    max_bucket_rows,
+                    hot["rows_in_hot_cells"],
+                    hot["max_occupancy"],
+                )
+        # occupancy via a window over the SAME (band, bucket) key
+        # the candidate join shuffles on — the exchange is shared,
+        # the cap only adds sorts/filters to it
+        occ_w = Window.partitionBy("band", "bucket")
+        blocks = (
+            blocks.withColumn("__occ", F.count("*").over(occ_w))
+            .filter(F.col("__occ") <= max_bucket_rows)
+            .drop("__occ")
         )
-        b = blocks.select(
-            "band",
-            "bucket",
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vec_b"),
-            norm.alias("n_b"),
-        )
-        # equi-join on (band, bucket). A pair found in several bands
-        # appears once per band; the two pair_exchange forms differ
-        # ONLY in where the copies collapse (see docstring). The r6
-        # note — "score per band copy, dedup the scored survivors:
-        # ~35% slower" — measured the narrow order at sf0.1, where
-        # planted dups are a fifth of the corpus and the duplicated
-        # folds dominated; the r11 blow-up A/B reversed it at ≥sf10
-        # (receipts in SCALE.md).
-        cand = a.join(b.hint("merge"), on=["band", "bucket"], how="inner").filter(
-            F.col("id_a") < F.col("id_b")
-        )
-        if not narrow:
-            cand = cand.dropDuplicates(["id_a", "id_b"])
-    scored = (
-        cand.withColumn(
-            "sim",
-            V.dot(F.col("vec_a"), F.col("vec_b")) / (F.col("n_a") * F.col("n_b")),
-        )
+    # Norms are hoisted per row before the pair join (see
+    # similarity.cosine_over_norms).
+    norm = V.l2_norm(vec_col)
+    a = blocks.select(
+        "band",
+        "bucket",
+        F.col(id_col).alias("id_a"),
+        F.col(vec_col).alias("vec_a"),
+        norm.alias("n_a"),
+    )
+    b = blocks.select(
+        "band",
+        "bucket",
+        F.col(id_col).alias("id_b"),
+        F.col(vec_col).alias("vec_b"),
+        norm.alias("n_b"),
+    )
+    # score and filter every per-band copy, THEN collapse the copies
+    # (docstring: the exchange carries survivors only)
+    return (
+        a.join(b.hint("merge"), on=["band", "bucket"], how="inner")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("sim", cosine_over_norms("vec_a", "vec_b", "n_a", "n_b"))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if narrow and block_col is None:
-        # Collapse the per-band copies AFTER the threshold filter: the
-        # dedup exchange then carries only true near-dups (~24 B rows),
-        # never the ~1 KB candidate stream. Sims are identical across
-        # copies (same expression over the same two vectors), so this
-        # is value-neutral vs the wide order.
-        scored = scored.dropDuplicates(["id_a", "id_b"])
-    return scored
 
 
 def connected_components(

@@ -26,6 +26,50 @@ from pyspark.sql import functions as F
 from document_vector_indexer_spark.functions import vector as V
 
 
+def cosine_over_norms(a: str, b: str, n_a: str, n_b: str) -> "F.Column":
+    """Exact cosine of vector columns ``a`` and ``b`` from their
+    precomputed ``V.l2_norm`` columns ``n_a`` and ``n_b``:
+    ``dot / (n_a · n_b)``. A norm is a row property, so each side folds
+    it once per row BEFORE the pair join and each pair folds only the
+    dot (r6) — the same expression tree per value as ``V.cosine``, hence
+    bit-identical sims. Every exact scorer runs this one expression:
+    the kNN tiers through :func:`_score` and
+    ``dedup.embedding_near_dup_pairs``."""
+    return V.dot(a, b) / (F.col(n_a) * F.col(n_b))
+
+
+def _score(
+    corpus: DataFrame,
+    queries: DataFrame,
+    vec_col: str,
+    id_col: str,
+    on: str | list[str] | None = None,
+) -> DataFrame:
+    """(query_id, id, sim): exact cosine of each ``corpus`` row against
+    the BROADCAST ``queries`` rows (``query_id``, ``q_vec``) it joins on
+    ``on`` — every query when ``on`` is None (a cross join). The caller
+    builds the candidate keys; norms are hoisted per row on both sides
+    before the join."""
+    return (
+        corpus.withColumn("_n_v", V.l2_norm(vec_col))
+        .join(F.broadcast(queries.withColumn("_n_q", V.l2_norm("q_vec"))), on)
+        .select(
+            "query_id",
+            F.col(id_col).alias("id"),
+            cosine_over_norms(vec_col, "q_vec", "_n_v", "_n_q").alias("sim"),
+        )
+    )
+
+
+def _top_k(scored: DataFrame, k: int, key: "F.Column") -> DataFrame:
+    """The first ``k`` rows per ``query_id`` by ``key`` then ``id`` (a
+    unique tiebreak, so deterministic), ranked in ``rk``."""
+    w = Window.partitionBy("query_id").orderBy(key, F.col("id"))
+    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
+        F.col("rk") <= k
+    )
+
+
 def knn_brute(
     vectors: DataFrame,
     query: DataFrame,
@@ -33,10 +77,9 @@ def knn_brute(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "qid",
-    metric: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k neighbors for every row of ``query`` (small, broadcast)
-    against ``vectors`` (arbitrarily large).
+    """Exact cosine top-k neighbors for every row of ``query`` (small,
+    broadcast) against ``vectors`` (arbitrarily large).
 
     Returns (query_id, id, sim, rk). Deterministic: unique id tiebreak.
     Scale: broadcast the queries, per-partition partial top-k via the
@@ -44,30 +87,10 @@ def knn_brute(
     on query_id — with q queries the shuffle carries q*k rows per
     partition at most once AQE coalesces.
     """
-    # per-ROW norms hoisted out of the per-(row, query) scoring: the
-    # same bit-identical split as dedup.embedding_near_dup_pairs (r6)
-    # — dot/(n_v*n_q) is the identical expression tree per value, but
-    # each norm folds once per row/query instead of once per pair
-    sim = (
-        V.dot(F.col(vec_col), F.col("q_vec")) / (F.col("_n_v") * F.col("_n_q"))
-        if metric == "cosine"
-        else -V.l2_distance(F.col(vec_col), F.col("q_vec"))
-    )
-    norm = F.sqrt(V.dot(F.col(vec_col), F.col(vec_col)))
     q = query.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm.alias("_n_q"),
+        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    scored = (
-        vectors.withColumn("_n_v", norm)
-        .join(F.broadcast(q))
-        .select("query_id", F.col(id_col).alias("id"), sim.alias("sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id"))
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
-        F.col("rk") <= k
-    )
+    return _top_k(_score(vectors, q, vec_col, id_col), k, F.col("sim").desc())
 
 
 def knn_lsh(
@@ -181,12 +204,9 @@ def knn_ivf_pinned(
       ~nprobe/nlist of the corpus, the FAISS-IVF contract.
     """
     cent_arr = _centroid_literals(centroids)
-    assigned = vectors.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col),
-        F.array_min(ivf_cell_distances(F.col(vec_col), cent_arr))["cell"].alias(
-            "cell"
-        ),
+    assigned = vectors.withColumn(
+        "cell",
+        F.array_min(ivf_cell_distances(F.col(vec_col), cent_arr))["cell"],
     )
     probes = query.select(
         F.col(query_id_col).alias("query_id"),
@@ -199,32 +219,8 @@ def knn_ivf_pinned(
             )["cell"]
         ).alias("cell"),
     )
-    # hoisted per-row/per-probe norms (knn_brute r6 note): same values
-    scored = (
-        assigned.withColumn(
-            "_n_v", F.sqrt(V.dot(F.col(vec_col), F.col(vec_col)))
-        )
-        .join(
-            F.broadcast(
-                probes.withColumn(
-                    "_n_q", F.sqrt(V.dot(F.col("q_vec"), F.col("q_vec")))
-                )
-            ),
-            "cell",
-        )
-        .select(
-            "query_id",
-            "id",
-            (
-                V.dot(F.col(vec_col), F.col("q_vec"))
-                / (F.col("_n_v") * F.col("_n_q"))
-            ).alias("sim"),
-        )
-    )
-    w_top = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id"))
-    return scored.withColumn("rk", F.row_number().over(w_top).cast("long")).filter(
-        F.col("rk") <= k
-    )
+    scored = _score(assigned, probes, vec_col, id_col, on="cell")
+    return _top_k(scored, k, F.col("sim").desc())
 
 
 def knn_ivf(
@@ -314,31 +310,9 @@ def knn_lsh_pinned(
         "band",
         "bucket",
     )
-    # hoisted per-row/per-query norms (knn_brute r6 note): same values
-    cand = (
-        cb.withColumn("_n_v", F.sqrt(V.dot(F.col(vec_col), F.col(vec_col))))
-        .join(
-            F.broadcast(
-                qb.withColumn(
-                    "_n_q", F.sqrt(V.dot(F.col("q_vec"), F.col("q_vec")))
-                )
-            ),
-            ["band", "bucket"],
-        )
-        .select(
-            "query_id",
-            F.col(id_col).alias("id"),
-            (
-                V.dot(F.col(vec_col), F.col("q_vec"))
-                / (F.col("_n_v") * F.col("_n_q"))
-            ).alias("sim"),
-        )
-    )
+    cand = _score(cb, qb, vec_col, id_col, on=["band", "bucket"])
     uniq = cand.groupBy("query_id", "id").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("id"))
-    return uniq.withColumn("rk", F.row_number().over(w).cast("long")).filter(
-        F.col("rk") <= k
-    )
+    return _top_k(uniq, k, F.col("sim").desc())
 
 
 def _pq_codebook_literal(codebook: list[list[float]]) -> "F.Column":
@@ -445,7 +419,4 @@ def knn_pq_pinned(
             ),
         ).alias("adc_fp"),
     )
-    w = Window.partitionBy("query_id").orderBy("adc_fp", "id")
-    return scored.withColumn("rk", F.row_number().over(w).cast("long")).filter(
-        F.col("rk") <= k
-    )
+    return _top_k(scored, k, F.col("adc_fp"))

@@ -139,6 +139,18 @@ _CHANGED_SINCE_VERIFIED: list[str] = [
                             #     filename, not doc_id; rows-only
     "q_chunk_cdc",          # chunk_cdc's impl="arrow" route deleted;
                             #     the expr route is unchanged
+    # similarity's one cosine scorer + top-k helper (and the near-dup
+    # pair path's deleted block_col / pair_exchange="wide" branches):
+    # same rows, same physical plans (q_knn_ivf: one alias moved);
+    # oracles untouched
+    "q_knn_brute",
+    "q_knn_per_query",
+    "q_knn_ivf",
+    "q_knn_lsh_pinned",
+    "q_knn_pq",
+    "q_hybrid_rrf",
+    "q_dedup_embed",
+    "q_cross_cosine",
 ]
 
 

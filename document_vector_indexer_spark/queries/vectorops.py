@@ -329,7 +329,7 @@ FROM votes
 
 def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs through the scale path: sign-LSH
-    bucket blocking (``block_col=None``), NOT an explicit label column.
+    bucket blocking over the vectors, NOT an explicit label column.
 
     The corpus has no natural near-dups at high cosine (max same-label
     cosine ~0.33 — round-2 finding: the old label-blocked query green-
@@ -362,7 +362,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
     )
     pairs = embedding_near_dup_pairs(
-        emb.unionByName(planted), threshold=0.95, block_col=None, dim=64
+        emb.unionByName(planted), threshold=0.95, dim=64
     )
     return (
         pairs.orderBy(F.col("sim").desc(), "id_a", "id_b")

@@ -261,14 +261,13 @@ def test_bucketed_dir_with_foreign_bucket_id_is_not_registered(tmp_path):
 
 
 def test_schema_ddl_round_trips(spark):
-    """The public-API DDL builder must parse back to the identical
-    schema for every engine table (the contract CREATE TABLE needs;
-    string-exact parity with the JVM's own toDDL is not required —
-    casing/backticks differ, both are valid DDL)."""
+    """``StructType.toDDL`` (the DDL the bucketed-events CREATE TABLE
+    runs on) must parse back to the identical schema for every engine
+    table."""
     from pyspark.sql import types as T
 
-    from document_vector_indexer_spark.io import TABLES, _schema_ddl
+    from document_vector_indexer_spark.io import TABLES
 
     for t in TABLES:
         schema = load_table(spark, SF, t).schema
-        assert T.StructType.fromDDL(_schema_ddl(schema)) == schema, t
+        assert T.StructType.fromDDL(schema.toDDL()) == schema, t

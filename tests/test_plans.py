@@ -9,6 +9,7 @@ join, and nothing degenerates into a cartesian product.
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -568,3 +569,47 @@ def test_embedding_near_dup_candidate_join_shuffle_pinned(spark):
     assert "BroadcastHashJoin" not in tree, (
         f"corpus-derived blocks frame broadcast:\n{tree}"
     )
+
+
+@pytest.mark.parametrize(
+    "name, join",
+    [
+        ("q_knn_brute", "BroadcastNestedLoopJoin BuildRight"),
+        ("q_knn_ivf", "BroadcastHashJoin"),
+        ("q_knn_lsh_pinned", "BroadcastHashJoin"),
+    ],
+)
+def test_knn_tiers_broadcast_queries_and_rank_once(spark, name, join):
+    """The kNN tiers share one scorer and one top-k helper
+    (operators/similarity): the QUERY side is the broadcast build of
+    the candidate join, the corpus streams and is never broadcast, and
+    exactly one row_number Window feeds the ``rk <= k`` filter."""
+    from document_vector_indexer_spark.queries.registry import all_queries
+
+    sf0001 = os.path.join(os.path.dirname(SF), "sf0.001")
+    df = all_queries()[name].fn(spark, sf0001)
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+
+    def indent(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-|"))
+
+    def node(line: str) -> str:
+        return line.lstrip(" :+-|")
+
+    (j,) = [i for i, l in enumerate(lines) if node(l).startswith(join.split()[0])]
+    assert node(lines[j]).startswith(join), lines[j]
+    if "BuildRight" not in join:
+        assert ", BuildRight," in lines[j], lines[j]
+    (b,) = [i for i, l in enumerate(lines) if node(l).startswith("BroadcastExchange")]
+    build = [lines[b]]
+    for l in lines[b + 1 :]:
+        if indent(l) <= indent(lines[b]):
+            break
+        build.append(l)
+    build = "\n".join(build)
+    assert " AS q_vec#" in build, f"query side is not the broadcast build:\n{build}"
+    assert "_n_v" not in build, f"corpus side was broadcast:\n{build}"
+    windows = [i for i, l in enumerate(lines) if node(l).startswith("Window [")]
+    assert len(windows) == 1, "\n".join(lines)
+    (w,) = windows
+    assert re.match(r"Filter \(_we\d+#\d+ <= \d+\)", node(lines[w - 1])), lines[w - 1]

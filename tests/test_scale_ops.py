@@ -373,7 +373,7 @@ def _planted_corpus(spark, n_base=200, n_dup=40, dim=16, seed=11):
 
 
 def test_embedding_lsh_recall_and_precision_vs_brute(spark):
-    """embedding_near_dup_pairs(block_col=None) is approximate only in
+    """embedding_near_dup_pairs is approximate only in
     CANDIDATE GENERATION (sign-LSH bucket blocking); the exact cosine
     filter then makes precision 1.0 by construction. Recall for
     near-identical vectors is ~1 - (1 - (1 - theta/pi)^bits)^bands —
@@ -385,20 +385,12 @@ def test_embedding_lsh_recall_and_precision_vs_brute(spark):
     got = {
         (r.id_a, r.id_b)
         for r in embedding_near_dup_pairs(
-            df, threshold=0.9, block_col=None, dim=16
+            df, threshold=0.9, dim=16
         ).collect()
     }
     assert got <= true_pairs, f"false positives: {sorted(got - true_pairs)[:5]}"
     recall = len(got & true_pairs) / len(true_pairs)
     assert recall >= 0.9, f"sign-LSH recall too low: {recall}"
-
-
-def test_embedding_near_dup_requires_dim_without_block_col(spark):
-    from document_vector_indexer_spark.operators.dedup import embedding_near_dup_pairs
-
-    df, _ = _planted_corpus(spark, n_base=5, n_dup=0)
-    with pytest.raises(ValueError, match="dim"):
-        embedding_near_dup_pairs(df, threshold=0.9, block_col=None)
 
 
 # --- portable MinHash (round-3) --------------------------------------------
@@ -590,13 +582,13 @@ def test_embedding_near_dup_auto_bits_matches_explicit(spark):
     auto_rows = sorted(
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bits="auto"
+            allv, threshold=0.95, dim=64, bits="auto"
         ).collect()
     )
     explicit_rows = sorted(
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bits=explicit
+            allv, threshold=0.95, dim=64, bits=explicit
         ).collect()
     )
     assert auto_rows == explicit_rows and len(auto_rows) > 0
@@ -604,13 +596,13 @@ def test_embedding_near_dup_auto_bits_matches_explicit(spark):
 
     with pytest.raises(ValueError, match="int or 'auto'"):
         embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bits="lots"
+            allv, threshold=0.95, dim=64, bits="lots"
         )
     with pytest.raises(ValueError, match="int or 'auto'"):
         # bool is an int subclass: bits=True would silently mean 1-bit
         # buckets (near-all-pairs candidates) if accepted
         embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bits=True
+            allv, threshold=0.95, dim=64, bits=True
         )
 
 
@@ -668,13 +660,13 @@ def test_embedding_near_dup_auto_bands_holds_recall_contract(spark):
     auto_rows = sorted(
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bands="auto"
+            allv, threshold=0.95, dim=64, bands="auto"
         ).collect()
     )
     fixed_rows = sorted(
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, block_col=None, dim=64, bands=6
+            allv, threshold=0.95, dim=64, bands=6
         ).collect()
     )
     assert auto_rows == fixed_rows and len(auto_rows) > 0
@@ -705,51 +697,58 @@ def test_lsh_bands_cap_shortfall_warns(caplog):
     assert not caplog.records
 
 
-def test_pair_exchange_orders_are_value_identical(spark):
-    """pair_exchange="narrow" (score-then-dedup, the late-r11 default)
-    and "wide" (the r6–r10 dedup-then-score parity reference) must
-    return identical pair sets AND identical sims: a pair's sim is the
-    same expression over the same two vectors in every band copy, so
-    WHERE the copies collapse cannot change a value. Random vectors —
-    not planted-identical ones — so borderline pairs near the
-    threshold actually exercise both orders' filters; two thresholds
-    so the survivor set is both sparse and dense."""
-    import random
+def test_embedding_near_dup_pairs_match_numpy_reference(spark):
+    """The operator returns EXACTLY the pairs that share a (band,
+    bucket) cell of ``embedding_lsh_blocks`` and whose sequential
+    float64 cosine reaches the threshold — each pair once, however
+    many bands it shares — with sims bit-equal to the index-order
+    fold (dot and both norms accumulated left to right, then
+    ``dot / (n_a * n_b)``). Random vectors, not planted-identical ones,
+    so borderline pairs near the threshold exercise the filter; two
+    thresholds so the survivor set is both sparse and dense."""
+    import math
+    from collections import defaultdict
 
-    import pytest
+    import numpy as np
 
     from document_vector_indexer_spark.operators.dedup import (
+        embedding_lsh_blocks,
         embedding_near_dup_pairs,
     )
 
-    rng = random.Random(3)
-    rows = [
-        (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(200)
-    ]
-    rows += [(i + 10000, list(v)) for i, v in rows[::5]]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    rng = np.random.default_rng(3)
+    vecs = {i: [float(x) for x in rng.uniform(-1, 1, 8)] for i in range(200)}
+    vecs.update({i + 10000: list(vecs[i]) for i in range(0, 200, 5)})
+    df = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    )
 
-    def pairs(order, th):
-        return sorted(
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc += x * y
+        return acc
+
+    cells = defaultdict(list)
+    for r in embedding_lsh_blocks(df, dim=8, bands=6, bits=4).collect():
+        cells[(r["band"], r["bucket"])].append(r["vec_id"])
+    candidates = {
+        (a, b) for ids in cells.values() for a in ids for b in ids if a < b
+    }
+    norm = {i: math.sqrt(fold(v, v)) for i, v in vecs.items()}
+    sim = {
+        (a, b): fold(vecs[a], vecs[b]) / (norm[a] * norm[b])
+        for a, b in candidates
+    }
+    for th in (0.95, 0.5):
+        want = sorted((a, b, s) for (a, b), s in sim.items() if s >= th)
+        got = sorted(
             (r["id_a"], r["id_b"], r["sim"])
             for r in embedding_near_dup_pairs(
-                df,
-                threshold=th,
-                block_col=None,
-                dim=8,
-                bits=4,
-                bands=6,
-                pair_exchange=order,
+                df, threshold=th, dim=8, bits=4, bands=6
             ).collect()
         )
-
-    for th in (0.95, 0.5):
-        narrow, wide = pairs("narrow", th), pairs("wide", th)
-        assert narrow == wide and len(narrow) > 0, th
-    with pytest.raises(ValueError, match="narrow.*wide|wide.*narrow"):
-        embedding_near_dup_pairs(
-            df, threshold=0.9, block_col=None, dim=8, pair_exchange="bogus"
-        )
+        assert got == want and len(got) > 0, th
 
 
 def test_embedding_near_dup_hot_bucket_cap(spark):
@@ -774,7 +773,7 @@ def test_embedding_near_dup_hot_bucket_cap(spark):
         return sorted(
             (r["id_a"], r["id_b"])
             for r in embedding_near_dup_pairs(
-                df, threshold=0.9999999, block_col=None, dim=64, bits=4,
+                df, threshold=0.9999999, dim=64, bits=4,
                 max_bucket_rows=cap,
             ).collect()
         )
@@ -810,7 +809,7 @@ def test_hot_bucket_drop_signal(spark, caplog):
     with caplog.at_level(logging.WARNING,
                          logger="document_vector_indexer_spark.operators.dedup"):
         out = embedding_near_dup_pairs(
-            df, threshold=0.9, block_col=None, dim=64, bits=4,
+            df, threshold=0.9, dim=64, bits=4,
             max_bucket_rows=16, log_dropped_buckets=True,
         ).collect()
     assert out == []
@@ -821,7 +820,7 @@ def test_hot_bucket_drop_signal(spark, caplog):
     with caplog.at_level(logging.WARNING,
                          logger="document_vector_indexer_spark.operators.dedup"):
         ok = embedding_near_dup_pairs(
-            df, threshold=0.9, block_col=None, dim=64, bits=4,
+            df, threshold=0.9, dim=64, bits=4,
             max_bucket_rows=64, log_dropped_buckets=True,
         ).collect()
     assert len(ok) == 41 * 40 // 2
