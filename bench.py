@@ -101,12 +101,38 @@ def _ingest_subprocess(pairs: "list[tuple[str, str]]") -> "list[float]":
     return secs
 
 
+def bench_session(app_name: str, shuffle_partitions: int):
+    """The session every bench-comparable measurement runs in. AQE off
+    per the module docstring. Small-shuffle-regime confs (measured -20%
+    total at sf0.1): zero locality wait (single host — every task is
+    process-local; the scheduler otherwise idles waiting for a "better"
+    slot) and uncompressed shuffles (kilobyte blocks: codec latency
+    dominates I/O saved; at 100 TB compression is essential and
+    production get_spark keeps the defaults). The shuffle width is set
+    again at runtime because an already-running session keeps its
+    build-time value."""
+    from document_vector_indexer_spark.session import get_spark
+
+    spark = get_spark(
+        app_name=app_name,
+        shuffle_partitions=shuffle_partitions,
+        extra_conf={
+            "spark.locality.wait": "0ms",
+            "spark.shuffle.compress": "false",
+            "spark.shuffle.spill.compress": "false",
+            "spark.rdd.compress": "false",
+        },
+    )
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    return spark
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
     from document_vector_indexer_spark.queries.registry import all_queries
-    from document_vector_indexer_spark.session import get_spark
 
     # Scale ramp (round-4 VERDICT item 2): the same headline queries at
     # sf0.001 and sf0.01 in the same session, so the per-query
@@ -143,12 +169,7 @@ def main() -> None:
     # stay comparable across rounds; at sf1+/production sizes the same
     # line yields the measured-right widths (sf10 -> ~135, sf100 ->
     # ~1,153 — the r14 scale receipts), so nothing here is tuned to
-    # local[32]. AQE off per the module docstring. Small-shuffle-regime
-    # confs (measured -20% total at sf0.1): zero locality wait (single
-    # host — every task is process-local; the scheduler otherwise idles
-    # waiting for a "better" slot) and uncompressed shuffles (kilobyte
-    # blocks: codec latency dominates I/O saved; at 100 TB compression
-    # is essential and production get_spark keeps the defaults).
+    # local[32].
     from document_vector_indexer_spark.session import (
         dir_bytes,
         recommended_shuffle_partitions,
@@ -157,18 +178,7 @@ def main() -> None:
     shuffle_partitions = max(
         8, recommended_shuffle_partitions(dir_bytes(ingest_dir))
     )
-    spark = get_spark(
-        app_name="dvi-bench",
-        shuffle_partitions=shuffle_partitions,
-        extra_conf={
-            "spark.locality.wait": "0ms",
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-            "spark.rdd.compress": "false",
-        },
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark = bench_session("dvi-bench", shuffle_partitions)
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = all_queries()

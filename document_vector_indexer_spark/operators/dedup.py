@@ -42,27 +42,6 @@ def exact_dedup_keep_first(
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of a text column (array<string>).
-
-    WARNING (perf): fine for unit-scale use, but the element_at calls
-    inside the transform lambda re-evaluate the tokenizer per element
-    (Catalyst CSE stops at lambda boundaries) — O(n_words^2) per doc.
-    For bulk shingling, materialize the words array behind an Exchange
-    first, as ``ngram_jaccard_pairs`` does."""
-    words = TX.word_tokens(text)
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def shingle_projection(
     df: DataFrame,
     block_cols: tuple[str, ...] = ("source",),

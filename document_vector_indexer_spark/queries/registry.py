@@ -51,6 +51,14 @@ ROWS_ONLY_BY_DESIGN: dict[str, str] = {
 
 
 def all_queries() -> dict[str, QuerySpec]:
+    """Every key, oldest-verified first (see ``_priority_order``)."""
+    merged = _registered()
+    order = _priority_order(list(merged), _last_verified_rounds())
+    return {k: merged[k] for k in order}
+
+
+def _registered() -> dict[str, QuerySpec]:
+    """Every key in registration order."""
     # Imports are local so a broken module surfaces per-import and new
     # modules bolt on with one line.
     from document_vector_indexer_spark.queries import (
@@ -97,61 +105,21 @@ def all_queries() -> dict[str, QuerySpec]:
         merged[alias] = QuerySpec(
             spec.fn, spec.oracle, f"SURVEY §2B alias of {target}"
         )
-    return _reverification_order(merged)
+    return merged
 
 
-# Re-verification policy (round-5 rework per VERDICT item 6; history:
-# round-3 changed-keys-first replaced the round-2 back-rotation that let
-# a rewritten q_win_ntile hide behind a stale green row): registry
-# iteration order is a *priority* order — the least proven keys come
-# first — so any bounded correctness budget (the driver checks a ~50-key
-# prefix per round; local CI may do the same) spends its checks where
-# they carry information:
-#
-#   1. _CHANGED_SINCE_VERIFIED: keys whose implementation or oracle text
-#      changed after their last green driver row. A stale green row is
-#      NOT evidence, so these always re-front. Maintained by hand each
-#      round: touch a query (or an operator/oracle it uses) -> add its
-#      key here; a fresh green row in CORRECTNESS_r*.json -> remove it.
-#   2. Everything else ordered by LAST-VERIFIED ROUND ascending (oldest
-#      driver row first; never-verified keys sort as round 0, i.e.
-#      first), registration order breaking ties.
-#
-# Rule 2 is what makes the rotation guarantee EXPLICIT: with N keys and
-# a budget of B per round, oldest-first means every key is re-checked
-# within ceil(N/B) rounds (162 keys / 50 per round -> every key within 4
-# rounds). The last-verified rounds are read from the driver's own
-# CORRECTNESS_r*.json files at the repo root — self-maintaining: the
-# next round's file automatically pushes this round's checked keys to
-# the back of the queue. tests/test_registry.py simulates the rotation
-# forward and asserts the staleness bound.
-
-# Changed since the last driver rows: see rule 1 above. (The round-15
-# list — q_basket_rules, q_triangles, q_decontaminate — got green rows
-# in CORRECTNESS_r15.json and rotates by age now.)
-_CHANGED_SINCE_VERIFIED: list[str] = [
-    "q_sink_roundtrip",     # chain now plans.pipeline's chunk_table ->
-                            #     number_chunks -> embed_chunks (adds
-                            #     the drop-empty filter); oracle untouched
-    "q_stream_ingest",      # stream_index_transform runs the pipeline's
-                            #     id-less chain; created_at stamped there
-    "q_embed_pipeline",     # id-less pipeline chain: chunks keyed by
-                            #     filename, not doc_id; rows-only
-    "q_chunk_cdc",          # chunk_cdc's impl="arrow" route deleted;
-                            #     the expr route is unchanged
-    # similarity's one cosine scorer + top-k helper (and the near-dup
-    # pair path's deleted block_col / pair_exchange="wide" branches):
-    # same rows, same physical plans (q_knn_ivf: one alias moved);
-    # oracles untouched
-    "q_knn_brute",
-    "q_knn_per_query",
-    "q_knn_ivf",
-    "q_knn_lsh_pinned",
-    "q_knn_pq",
-    "q_hybrid_rrf",
-    "q_dedup_embed",
-    "q_cross_cosine",
-]
+# Registry iteration order is a priority order for a bounded
+# correctness budget (the driver checks a ~50-key prefix per round):
+# keys go oldest last-verified round first (never-verified keys count as
+# round 0), registration order breaking ties. The rounds are read from
+# the driver's own CORRECTNESS_r*.json files at the repo root, so the
+# next round's file pushes this round's checked keys to the back of the
+# queue. With N keys and a budget of B per round every key is re-checked
+# within ceil(N/B) rounds; tests/test_registry.py simulates the rotation
+# forward and asserts that bound. No key is fronted by hand after an
+# edit: tier-1's tests/test_driver_parity.py runs every key through the
+# driver's entry point on every change, so an edited shared helper
+# re-checks all of its consumers.
 
 
 def _last_verified_rounds() -> dict[str, int]:
@@ -192,26 +160,7 @@ def _last_verified_rounds() -> dict[str, int]:
     return last
 
 
-def _priority_order(
-    keys: list[str], changed: list[str], last: dict[str, int]
-) -> list[str]:
-    """Pure ordering rule (unit-testable): changed keys first in their
-    declared order, then everything else oldest-verified-first with
-    registration order as the tiebreak."""
-    reg_pos = {k: i for i, k in enumerate(keys)}
-    front = [k for k in changed if k in reg_pos]
-    in_front = set(front)
-    rest = sorted(
-        (k for k in keys if k not in in_front),
-        key=lambda k: (last.get(k, 0), reg_pos[k]),
-    )
-    return front + rest
-
-
-def _reverification_order(merged: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Priority order per the policy above. Pure reordering — the key
-    set and every spec are untouched."""
-    order = _priority_order(
-        list(merged), _CHANGED_SINCE_VERIFIED, _last_verified_rounds()
-    )
-    return {k: merged[k] for k in order}
+def _priority_order(keys: list[str], last: dict[str, int]) -> list[str]:
+    """Pure ordering rule (unit-testable): oldest-verified-first; the
+    sort is stable, so registration order breaks ties."""
+    return sorted(keys, key=lambda k: last.get(k, 0))

@@ -1,5 +1,6 @@
-"""Runs every registered query against its DuckDB oracle at sf0.01 —
-the same check the driver performs for CORRECTNESS_r{N}.json."""
+"""Runs every key through the driver's entry point (``__spark_entry__``)
+against its DuckDB oracle at sf0.01, each under a hostile session time
+zone — the same check the driver performs for CORRECTNESS_r{N}.json."""
 
 from __future__ import annotations
 
@@ -7,15 +8,13 @@ import os
 
 import pytest
 
-from tests.parity_util import compare, duckdb_conn
+import __spark_entry__ as E
+from tests.parity_util import check_key, duckdb_conn
 
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 
-
-def _specs():
-    from document_vector_indexer_spark.queries.registry import all_queries
-
-    return all_queries()
+QUERIES = E.queries()
+ORACLES = E.oracle_sql()
 
 
 @pytest.fixture(scope="module")
@@ -25,12 +24,7 @@ def con():
     c.close()
 
 
-@pytest.mark.parametrize("name", sorted(_specs().keys()))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_parity(spark, con, name):
-    spec = _specs()[name]
-    df = spec.fn(spark, SF_DIR)
-    if spec.oracle is None:
-        # rows-only check, mirroring the driver's weaker path
-        assert df.count() >= 0
-        return
-    compare(df, con, spec.oracle, name)
+    # a rows-only key mirrors the driver's weaker path: it only has to run
+    check_key(spark, con, SF_DIR, name, QUERIES[name], ORACLES.get(name))

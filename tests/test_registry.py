@@ -51,29 +51,22 @@ def test_entry_contract_importable():
 
 
 def test_verification_bookkeeping_invariants():
-    """The changed-keys list is hand-maintained; these are the
-    invariants a hand edit can silently break: no duplicates, no stale
-    names, changed keys lead the iteration order, and the rest is
-    non-decreasing in last-verified round (oldest first)."""
+    """The whole iteration order is oldest-verified-first (last green
+    driver round ascending, never-verified as round 0), with
+    registration order breaking ties — no key is fronted by hand."""
     from document_vector_indexer_spark.queries.registry import (
-        _CHANGED_SINCE_VERIFIED,
         _last_verified_rounds,
+        _registered,
     )
 
-    specs = all_queries()
-    assert len(_CHANGED_SINCE_VERIFIED) == len(set(_CHANGED_SINCE_VERIFIED))
-    stale = set(_CHANGED_SINCE_VERIFIED) - set(specs)
-    assert not stale, f"bookkeeping names not in registry: {sorted(stale)}"
-    keys = list(specs)
-    n_changed = len([k for k in _CHANGED_SINCE_VERIFIED if k in specs])
-    assert keys[:n_changed] == [
-        k for k in _CHANGED_SINCE_VERIFIED if k in specs
-    ], "changed-since-verified keys must lead the iteration order"
+    keys = list(all_queries())
+    reg_pos = {k: i for i, k in enumerate(_registered())}
+    assert sorted(keys) == sorted(reg_pos)
     last = _last_verified_rounds()
-    ages = [last.get(k, 0) for k in keys[n_changed:]]
-    assert ages == sorted(ages), (
-        "iteration order after the changed block must be oldest-"
-        "verified-first"
+    order = [(last.get(k, 0), reg_pos[k]) for k in keys]
+    assert order == sorted(order), (
+        "iteration order must be oldest-verified-first, registration "
+        "order breaking ties"
     )
 
 
@@ -103,9 +96,7 @@ def test_rotation_staleness_bound():
     now = max(last.values(), default=0)
     checked_at = dict(last)
     for rnd in range(now + 1, now + 1 + horizon):
-        # changed-list empties after one round by protocol; simulate
-        # with age-only ordering, which is the steady state
-        for k in _priority_order(keys, [], last)[:budget]:
+        for k in _priority_order(keys, last)[:budget]:
             last[k] = rnd
             checked_at[k] = rnd
     assert all(checked_at.get(k, 0) > now for k in keys), (
@@ -116,16 +107,13 @@ def test_rotation_staleness_bound():
 
 def test_priority_order_fresh_clone_fallback():
     """With no CORRECTNESS files (fresh clone), every key counts as
-    never-verified and the order degrades to plain registration order
-    (after the changed block)."""
+    never-verified and the order degrades to plain registration order."""
     from document_vector_indexer_spark.queries.registry import _priority_order
 
     keys = ["a", "b", "c", "d"]
-    assert _priority_order(keys, [], {}) == keys
-    assert _priority_order(keys, ["c"], {}) == ["c", "a", "b", "d"]
-    # ages shuffle the rest, oldest first, registration tiebreak
-    assert _priority_order(keys, [], {"a": 3, "b": 1, "c": 2}) == [
+    assert _priority_order(keys, {}) == keys
+    # ages shuffle the keys, oldest first, registration tiebreak
+    assert _priority_order(keys, {"a": 3, "b": 1, "c": 2}) == [
         "d", "b", "c", "a"
     ]
-    # changed keys lead regardless of their age
-    assert _priority_order(keys, ["a"], {"a": 3, "b": 1}) == ["a", "c", "d", "b"]
+    assert _priority_order(keys, {"a": 3, "b": 1}) == ["c", "d", "b", "a"]

@@ -18,16 +18,12 @@ sys.path.insert(0, REPO_ROOT)
 
 from bench import HEADLINE  # noqa: E402
 from document_vector_indexer_spark.queries.registry import all_queries  # noqa: E402
-from tests.parity_util import TABLES  # noqa: E402
+from tests.parity_util import duckdb_conn  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_conn(sf_dir)
     specs = all_queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:

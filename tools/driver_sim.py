@@ -9,11 +9,14 @@ Usage:
     python tools/driver_sim.py [key ...]        # default: ALL keys
     SIM_SF_DIR=/root/testdata/sf0.1 python tools/driver_sim.py q_rfm
 
-Builds a PLAIN SparkSession with a hostile time zone (America/New_York)
-to prove ``ensure_oracle_confs`` protects oracle parity, exactly as the
-repo's verify recipe (.claude/skills/verify) prescribes. Exit 0 iff
-every requested key passes. All 163 keys take ~25 min at sf0.01 on
-local[8]."""
+Builds a PLAIN SparkSession and runs each key through
+``tests.parity_util.check_key``, which sets a hostile session time zone
+(America/New_York) before the key, to prove ``ensure_oracle_confs``
+protects oracle parity, exactly as the repo's verify recipe
+(.claude/skills/verify) prescribes. ``SIM_SF_DIR`` may hold single-file
+fixtures or an engine ingest (directories of part files). Exit 0 iff
+every requested key passes. All keys take ~5 min at sf0.01 on a
+4-core host (local[8])."""
 import os
 import sys
 import time
@@ -25,34 +28,20 @@ from pyspark.sql import SparkSession  # noqa: E402
 spark = (
     SparkSession.builder.master("local[8]")
     .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "America/New_York")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-import duckdb  # noqa: E402
-
 import __spark_entry__ as E  # noqa: E402
-from tests.parity_util import TABLES, compare  # noqa: E402
-
-
-def duckdb_conn_glob(sf_dir: str) -> "duckdb.DuckDBPyConnection":
-    """Views over single-file fixtures OR Spark directory-parquet."""
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):
-            p = f"{p}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    return con
+from tests.parity_util import check_key, duckdb_conn  # noqa: E402
 
 
 def main() -> int:
     sf_dir = os.environ.get("SIM_SF_DIR", "/root/testdata/sf0.01")
     qs, oracles = E.queries(), E.oracle_sql()
     keys = sys.argv[1:] or list(qs)
-    con = duckdb_conn_glob(sf_dir)
+    con = duckdb_conn(sf_dir)
     bad = []
     for k in keys:
         if k not in qs:
@@ -61,12 +50,10 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            df = qs[k](spark, sf_dir)
-            if k in oracles:
-                compare(df, con, oracles[k], k)
+            n = check_key(spark, con, sf_dir, k, qs[k], oracles.get(k))
+            if n is None:
                 print(f"{k}: OK ({time.time() - t0:.2f}s)")
             else:
-                n = df.count()
                 print(f"{k}: rows-only {n} rows ({time.time() - t0:.2f}s)")
         except Exception as e:  # noqa: BLE001 - report and keep sweeping
             print(f"{k}: FAIL {type(e).__name__}: {str(e)[:300]}")

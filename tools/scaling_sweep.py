@@ -19,9 +19,9 @@ Usage:
                         SCALE.md), so sweep absolutes at that scale
                         are only meaningful under engine confs.
 
-Default bench-session confs (AQE off, 8 shuffle partitions,
-locality/compress off) keep numbers comparable with bench.py's;
-min-of-2 warm runs per (key, sf) after a warmup run.
+Default bench-session confs (``bench.bench_session``: AQE off, 8
+shuffle partitions, locality/compress off) keep numbers comparable with
+bench.py's; min-of-2 warm runs per (key, sf) after a warmup run.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ sys.path.insert(0, REPO_ROOT)
 
 
 def main() -> None:
-    from bench import _ingest_subprocess
+    from bench import _ingest_subprocess, bench_session
     from document_vector_indexer_spark.queries.registry import all_queries
     from document_vector_indexer_spark.session import get_spark
 
@@ -49,18 +49,7 @@ def main() -> None:
     if engine_confs:
         spark = get_spark(app_name="dvi-scaling-sweep")
     else:
-        spark = get_spark(
-            app_name="dvi-scaling-sweep",
-            shuffle_partitions=8,
-            extra_conf={
-                "spark.locality.wait": "0ms",
-                "spark.shuffle.compress": "false",
-                "spark.shuffle.spill.compress": "false",
-                "spark.rdd.compress": "false",
-            },
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark = bench_session("dvi-scaling-sweep", 8)
     spark.sparkContext.setLogLevel("ERROR")
 
     only = os.environ.get("SWEEP_KEYS")
