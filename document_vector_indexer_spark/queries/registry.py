@@ -109,16 +109,16 @@ def _registered() -> dict[str, QuerySpec]:
 
 
 # Registry iteration order is a priority order for a bounded
-# correctness budget (the driver checks a ~50-key prefix per round):
+# correctness budget (each round checks a ~50-key prefix):
 # keys go oldest last-verified round first (never-verified keys count as
 # round 0), registration order breaking ties. The rounds are read from
-# the driver's own CORRECTNESS_r*.json files at the repo root, so the
+# CORRECTNESS_r*.json result files at the repo root, so the
 # next round's file pushes this round's checked keys to the back of the
 # queue. With N keys and a budget of B per round every key is re-checked
 # within ceil(N/B) rounds; tests/test_registry.py simulates the rotation
 # forward and asserts that bound. No key is fronted by hand after an
 # edit: tier-1's tests/test_driver_parity.py runs every key through the
-# driver's entry point on every change, so an edited shared helper
+# ``__spark_entry__`` entry point on every change, so an edited shared helper
 # re-checks all of its consumers.
 
 

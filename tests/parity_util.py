@@ -15,7 +15,7 @@ import pandas as pd
 
 from document_vector_indexer_spark.io import TABLES
 
-# The session time zone the driver's check runs each key under: a key
+# The session time zone the correctness check runs each key under: a key
 # stays oracle-exact only if its entry callable resets the oracle confs.
 HOSTILE_TZ = "America/New_York"
 
@@ -33,7 +33,7 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 
 def check_key(spark, con, sf_dir: str, name: str, fn, oracle: "str | None"):
-    """The driver's check of one key: run its entry callable under the
+    """The correctness check of one key: run its entry callable under the
     hostile session time zone, then compare with its oracle. A rows-only
     key (no oracle) is only counted; its row count is returned."""
     spark.conf.set("spark.sql.session.timeZone", HOSTILE_TZ)

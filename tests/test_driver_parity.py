@@ -1,6 +1,6 @@
-"""Runs every key through the driver's entry point (``__spark_entry__``)
-against its DuckDB oracle at sf0.01, each under a hostile session time
-zone — the same check the driver performs for CORRECTNESS_r{N}.json."""
+"""Runs every key through the entry point (``__spark_entry__``) against
+its DuckDB oracle at sf0.01, each under a hostile session time zone —
+the same check that produces CORRECTNESS_r{N}.json."""
 
 from __future__ import annotations
 
@@ -26,5 +26,5 @@ def con():
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_parity(spark, con, name):
-    # a rows-only key mirrors the driver's weaker path: it only has to run
+    # a rows-only key (no oracle) only has to run
     check_key(spark, con, SF_DIR, name, QUERIES[name], ORACLES.get(name))

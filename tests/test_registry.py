@@ -52,7 +52,7 @@ def test_entry_contract_importable():
 
 def test_verification_bookkeeping_invariants():
     """The whole iteration order is oldest-verified-first (last green
-    driver round ascending, never-verified as round 0), with
+    correctness round ascending, never-verified as round 0), with
     registration order breaking ties — no key is fronted by hand."""
     from document_vector_indexer_spark.queries.registry import (
         _last_verified_rounds,

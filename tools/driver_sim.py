@@ -12,8 +12,7 @@ Usage:
 Builds a PLAIN SparkSession and runs each key through
 ``tests.parity_util.check_key``, which sets a hostile session time zone
 (America/New_York) before the key, to prove ``ensure_oracle_confs``
-protects oracle parity, exactly as the repo's verify recipe
-(.claude/skills/verify) prescribes. ``SIM_SF_DIR`` may hold single-file
+protects oracle parity. ``SIM_SF_DIR`` may hold single-file
 fixtures or an engine ingest (directories of part files). Exit 0 iff
 every requested key passes. All keys take ~5 min at sf0.01 on a
 4-core host (local[8])."""
