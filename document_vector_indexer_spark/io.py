@@ -12,15 +12,15 @@ so a missing column or a changed type raises ``SchemaMismatchError``
 instead of reading as NULLs.
 
 ``ingest_engine_layout`` rewrites a corpus into the engine's multi-file
-layout. A table that stays one file is copied; any other table whose
-source is one file of one row group is cut into its files by Arrow's
-parquet codec on the driver (``_arrow_split``), except ``events``,
-whose ``ts`` normalization is Spark's, cut by the one Spark task that
-reads it; every other source (a directory, a file of several row
-groups) is repartitioned by Spark. The Spark jobs left in a fixture
-ingest are the events write and the two layouts that need a shuffle:
-the ``documents__shingles3`` sidecar and the bucketed events table.
-``parquet_rows`` counts a written table from its footers.
+layout, one stored layout per table. ``events`` is stored bucketed by
+``user_id``. Of the other tables, one that stays one file is copied;
+one whose source is one file of one row group is cut into its files by
+Arrow's parquet codec on the driver (``_arrow_split``); every other
+source (a directory, a file of several row groups) is repartitioned by
+Spark. The Spark jobs left in a fixture ingest are the two layouts
+that need a shuffle: the ``documents__shingles3`` sidecar and the
+bucketed events table. ``parquet_rows`` counts a written table from
+its footers.
 
 Scale note: at 100 TB each of these reads becomes a partitioned
 parquet/Delta table; ``spark.read.parquet`` keeps predicate pushdown,
@@ -32,6 +32,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -289,12 +290,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # decision — the same rationale as `write_bucketed` below). 8 buckets
 # matches the bench's shuffle width; a production ingest sizes this to
 # ~2-3x total executor cores.
-EVENTS_BUCKETED_DIRNAME = "events_by_user"
 EVENTS_BUCKETS = 8
-
-
-def _events_bucketed_path(sf_dir: str) -> str:
-    return os.path.join(sf_dir, EVENTS_BUCKETED_DIRNAME)
 
 
 def _loc_table_name(prefix: str, loc: str) -> str:
@@ -312,7 +308,7 @@ def _bucketed_dir_committed(loc: str) -> bool:
     with a bucket id below the bucket count (the ``..._NNNNN.c000``
     suffix Spark's bucketed writer emits). A marker-only dir (partial
     cleanup) must fall back too — registering it would crash the read
-    instead of degrading to the plain layout."""
+    instead of degrading to a plain parquet read."""
     if not os.path.exists(os.path.join(loc, "_SUCCESS")):
         return False
     import re as _re
@@ -329,10 +325,11 @@ def _bucketed_dir_committed(loc: str) -> bool:
 
 
 def _load_events_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame | None:
-    """The bucketed events table written by ``ingest_engine_layout``,
-    or ``None`` on raw fixture dirs (the driver's correctness runs read
-    those; they fall back to ``_load_events`` — same values, the
-    rewrite is lossless).
+    """The bucketed ``events.parquet`` directory written by
+    ``ingest_engine_layout``, or ``None`` on raw fixture dirs, whose
+    ``events.parquet`` is one file (the driver's correctness runs read
+    those; they fall back to ``_load_events`` on the same path — same
+    values, the rewrite is lossless).
 
     Bucket METADATA lives in a catalog, not in parquet files, and the
     ingest runs in its own process — so this registers an external
@@ -345,21 +342,17 @@ def _load_events_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     TRUSTS catalog bucket metadata to elide exchanges, so registering a
     partially-written dir (crashed ingest) would silently drop the
     missing buckets' rows from every downstream plan (r8 ADVICE). An
-    invalid dir falls back to ``_load_events`` — correct values, just
-    without the layout win."""
-    loc = _events_bucketed_path(sf_dir)
-    if not os.path.isdir(loc):
-        return None
-    if not _bucketed_dir_committed(loc):
+    uncommitted or foreign dir is read as plain parquet by
+    ``_load_events`` — correct values, just without the layout win."""
+    loc = table_path(sf_dir, "events")
+    if not (os.path.isdir(loc) and _bucketed_dir_committed(loc)):
         return None
     tbl = _loc_table_name("events_by_user_", loc)
     if not spark.catalog.tableExists(tbl):
         check_declared_schema("events", loc, SCHEMAS["events"])
         ddl = SCHEMAS["events"].toDDL()
-        # IF NOT EXISTS: ingest_engine_layout's thread pool can reach
-        # this concurrently when its SOURCE is itself an ingested dir
-        # (two load_table('events') races past the tableExists check —
-        # r8 review); the DDL is idempotent metadata either way
+        # IF NOT EXISTS: two threads of one session can race past the
+        # tableExists check; the DDL is idempotent metadata either way
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {tbl} ({ddl}) USING parquet "
             f"CLUSTERED BY (user_id) SORTED BY (user_id, ts) "
@@ -451,6 +444,30 @@ def parquet_rows(path: str) -> int:
     return n
 
 
+@contextmanager
+def _renamed_into_place(out: str):
+    """Yield a temporary path beside ``out`` for one writer to fill,
+    then rename it into place as ``out``, replacing what was there. The
+    temporary is ``.``-prefixed, as Spark and ``parquet_rows`` mark an
+    entry to skip. A writer that raises leaves ``out`` untouched and the
+    temporary removed, so no table is ever seen half-written."""
+    import uuid
+
+    tmp = os.path.join(
+        os.path.dirname(out), f".{os.path.basename(out)}.{uuid.uuid4().hex}"
+    )
+    try:
+        yield tmp
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.isdir(out):
+        shutil.rmtree(out)
+    elif os.path.exists(out):
+        os.remove(out)
+    os.rename(tmp, out)
+
+
 # Rows per record batch the Arrow split streams through the driver:
 # its memory follows this batch, not the source's one row group.
 _SPLIT_BATCH_ROWS = 1 << 16
@@ -464,11 +481,9 @@ def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
 
     The source is checked against the declaration first, then streamed
     in bounded record batches (a buffered reader, no pre-buffering of
-    whole column chunks). The files are written into a temporary
-    directory beside ``out``, counted from their footers, and renamed
-    into place, so a failed split leaves no table behind."""
-    import uuid
-
+    whole column chunks). The files are counted from their footers and
+    renamed into place (``_renamed_into_place``), so a failed split
+    leaves no table behind."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -477,11 +492,8 @@ def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
     per = max(1, -(-rows // k))
     pf = pq.ParquetFile(src, buffer_size=1 << 20)
     schema = pa.schema([pf.schema_arrow.field(n) for n in names])
-    tmp = os.path.join(
-        os.path.dirname(out), f".{os.path.basename(out)}.{uuid.uuid4().hex}"
-    )
-    os.makedirs(tmp)
-    try:
+    with _renamed_into_place(out) as tmp:
+        os.makedirs(tmp)
         part, left = 0, per
         writer = pq.ParquetWriter(os.path.join(tmp, "part-00000.parquet"), schema)
         for batch in pf.iter_batches(
@@ -501,14 +513,6 @@ def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
         writer.close()
         if parquet_rows(tmp) != rows:
             raise RuntimeError(f"split of {src} did not write its {rows} rows")
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    if os.path.isdir(out):
-        shutil.rmtree(out)
-    elif os.path.exists(out):
-        os.remove(out)
-    os.rename(tmp, out)
 
 
 def ingest_engine_layout(
@@ -532,36 +536,35 @@ def ingest_engine_layout(
     normalized to the same microsecond timestamps ``load_table`` yields
     either way), so correctness is layout-independent.
 
-    File count per table k = max(bytes / target_file_bytes, row-spread
-    for per-row-CPU-heavy tables), capped at ``max_files``; bytes are
-    the table's on-disk total, a file or a directory of part files.
-    Each table takes the first of these ways that applies:
+    Every table is stored once, in one layout. File count per table
+    k = max(bytes / target_file_bytes, row-spread for per-row-CPU-heavy
+    tables), capped at ``max_files``; bytes are the table's on-disk
+    total, a file or a directory of part files. ``events`` takes the
+    first way below, every other table the first of the rest that
+    applies:
 
-    - Copied: a table other than ``events`` with k == 1 whose source is
-      one regular file. It already is the one file a rewrite would
-      write. At the fixture scale factors: region, nation, customer,
-      supplier and part (sf0.001: also orders and lineitem).
-    - Cut by Arrow, no Spark job: a table other than ``events`` whose
-      source is one file holding one row group (``_arrow_split``). That
-      source is one Spark task's worth of data either way, so the
-      driver cuts it into its k files in source order with Arrow's
-      parquet codec instead of a single task re-encoding it through
-      the JVM row writer. At sf0.1: orders, lineitem, documents and
-      embeddings.
-    - Cut by Spark, no shuffle: ``events`` from one file holding one
-      row group, since its ``ts`` normalization is Spark's semantics
-      (``_load_events``). The task that reads it writes the k files,
-      cutting at ``maxRecordsPerFile``: one write job.
+    - Bucketed by user_id, written by rename: ``events``, from any
+      source, as ``EVENTS_BUCKETS`` per-bucket-sorted files (see
+      ``_load_events_bucketed``): a shuffle-map and a write job.
+    - Copied: k == 1 and the source is one regular file. It already is
+      the one file a rewrite would write. At the fixture scale
+      factors: region, nation, customer, supplier and part (sf0.001:
+      also orders and lineitem).
+    - Cut by Arrow, no Spark job: the source is one file holding one
+      row group (``_arrow_split``). That source is one Spark task's
+      worth of data either way, so the driver cuts it into its k files
+      in source order with Arrow's parquet codec instead of a single
+      task re-encoding it through the JVM row writer. At sf0.1: orders,
+      lineitem, documents and embeddings.
     - Repartitioned: every other source, a file of several row groups
       or a directory (an ingested dir fed back in, or any production
       input): a round-robin ``repartition(k)`` shuffle, then the write.
 
-    The ``documents__shingles3`` sidecar and the bucketed events table
-    need their shuffles (a shuffle-map and a write job each). Sources
-    are read with their declared schemas, and copied and Arrow-cut
-    sources have their footers checked, so no job infers a schema: a
-    fixture ingest is 5 jobs (the events write and the two shuffled
-    layouts).
+    The ``documents__shingles3`` sidecar needs its shuffle too (a
+    shuffle-map and a write job). Sources are read with their declared
+    schemas, and copied and Arrow-cut sources have their footers
+    checked, so no job infers a schema: a fixture ingest is 4 jobs (the
+    two shuffled layouts).
 
     Tables rewrite CONCURRENTLY (one driver thread each — Spark's
     scheduler interleaves the jobs, and Arrow's codec releases the
@@ -575,22 +578,17 @@ def ingest_engine_layout(
         k = max(1, min(max_files, dir_bytes(src) // target_file_bytes))
         k = max(k, _ROW_SPREAD_TABLES.get(t, 1))
         rows = _one_row_group_rows(src)
-        if k == 1 and t != "events" and os.path.isfile(src):
+        if k == 1 and os.path.isfile(src):
             check_declared_schema(t, src, SCHEMAS[t])
             if os.path.isdir(out):
                 shutil.rmtree(out)
             shutil.copyfile(src, out)
-        elif rows is not None and t != "events":
+        elif rows is not None:
             _arrow_split(t, src, out, rows, k)
         else:
-            df = load_table(spark, sf_dir, t)
-            if rows is None:
-                w = df.repartition(int(k)).write
-            else:
-                w = df.coalesce(1).write.option(
-                    "maxRecordsPerFile", (rows + k - 1) // k
-                )
-            w.mode("overwrite").parquet(out)
+            load_table(spark, sf_dir, t).repartition(int(k)).write.mode(
+                "overwrite"
+            ).parquet(out)
 
     def rewrite_shingles() -> None:
         # Derived projection, not a table copy: see _shingles3.
@@ -598,34 +596,37 @@ def ingest_engine_layout(
             os.path.join(dest, f"{SHINGLES3}.parquet")
         )
 
-    def rewrite_events_bucketed() -> None:
-        # Second events layout: bucketed on the natural cluster key
-        # (see _load_events_bucketed). Writing through a throwaway
-        # EXTERNAL table name (write_bucketed) leaves the bucket-named
-        # files under dest and drops the catalog entry — readers
-        # re-register over the files. repartition(n, key) uses the
-        # same pmod(murmur3) as the bucket hash, so each task holds
-        # exactly one bucket and writes exactly one file per bucket.
-        loc = _events_bucketed_path(dest)
-        tmp = _loc_table_name("dvi_ingest_events_bkt_", loc)
-        write_bucketed(
-            spark,
-            load_table(spark, sf_dir, "events").repartition(
-                EVENTS_BUCKETS, "user_id"
-            ),
-            tmp,
-            "user_id",
-            n_buckets=EVENTS_BUCKETS,
-            location=loc,
-            sort_cols=("user_id", "ts"),
-        )
-        spark.sql(f"DROP TABLE IF EXISTS `{tmp}`")
+    def rewrite_events() -> None:
+        # Bucketed on the natural cluster key (see _load_events_bucketed).
+        # Writing through a throwaway EXTERNAL table name (write_bucketed)
+        # leaves the bucket-named files in the temporary dir; the catalog
+        # entry is dropped before the rename, and readers re-register
+        # over the files in place. repartition(n, key) uses the same
+        # pmod(murmur3) as the bucket hash, so each task holds exactly
+        # one bucket and writes exactly one file per bucket.
+        out = table_path(dest, "events")
+        tbl = _loc_table_name("dvi_ingest_events_bkt_", out)
+        with _renamed_into_place(out) as tmp:
+            try:
+                write_bucketed(
+                    spark,
+                    load_table(spark, sf_dir, "events").repartition(
+                        EVENTS_BUCKETS, "user_id"
+                    ),
+                    tbl,
+                    "user_id",
+                    n_buckets=EVENTS_BUCKETS,
+                    location=tmp,
+                    sort_cols=("user_id", "ts"),
+                )
+            finally:
+                spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
 
     os.makedirs(dest, exist_ok=True)
-    with ThreadPoolExecutor(max_workers=len(TABLES) + 2) as pool:
-        futs = [pool.submit(rewrite, t) for t in TABLES]
+    with ThreadPoolExecutor(max_workers=len(TABLES) + 1) as pool:
+        futs = [pool.submit(rewrite, t) for t in TABLES if t != "events"]
         futs.append(pool.submit(rewrite_shingles))
-        futs.append(pool.submit(rewrite_events_bucketed))
+        futs.append(pool.submit(rewrite_events))
         for fut in futs:
             fut.result()  # propagate the first failure
     # Auto-size the session's shuffle partitions to the bytes just

@@ -1,17 +1,27 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Three tiers, mirroring how a 100 TB deployment would stage ANN:
+Four tiers, mirroring how a 100 TB deployment would stage ANN:
 1. ``knn_brute`` — exact cosine top-k as composition of pure column
    exprs + TakeOrderedAndProject. O(n) per query vector, fully
    distributed, no shuffle until the final top-k merge. The baseline
    and the correctness oracle for the approximate tiers.
-2. ``knn_lsh`` — MLlib BucketedRandomProjectionLSH: hash vectors into
-   buckets with seeded random hyperplanes; candidate generation
-   becomes an equi-join on bucket ids (linear, co-partitioned).
-3. ``knn_ivf`` — IVF-style: seeded KMeans partitions the corpus into
-   nlist cells; a query probes the nprobe nearest centroids and scans
-   only those cells (the classic FAISS-IVF layout, done with
-   DataFrames: cell assignment is a broadcast join against centroids).
+2. LSH: ``knn_lsh`` is MLlib's BucketedRandomProjectionLSH (seeded
+   random hyperplanes, euclidean); ``knn_lsh_pinned`` bands sign
+   bits of pinned hyperplanes into (band, bucket) codes map-side.
+   Either way candidate generation is an equi-join on bucket ids.
+3. IVF: the corpus is split into nlist cells, a query probes the
+   nprobe nearest centroids and scans only those cells (the classic
+   FAISS-IVF layout, done with DataFrames). Cell assignment is a
+   map-side ``array_min`` over the centroid literals, no join;
+   ``knn_ivf_pinned`` takes the centroids from the caller,
+   ``knn_ivf`` trains them with seeded KMeans.
+4. PQ: ``knn_pq_pinned`` encodes rows map-side against a pinned
+   product-quantization codebook and ranks by asymmetric distance
+   summed in fixed-point longs.
+
+The pinned tiers are deterministic, so a SQL oracle can mirror them
+value for value; the MLlib-backed ``knn_lsh`` and ``knn_ivf`` are
+checked for recall against ``knn_brute`` instead.
 
 The reference delegates this entirely to pgvector
 (/root/reference/README.md:16; the `embedding <=> q` top-k query is

@@ -1,20 +1,12 @@
 """pgvector sink (reference R10-R12,
 /root/reference/index_documents.py:198-249).
 
-Three transports, fastest-available first:
-
-1. ``write_chunks_copy`` — per-partition ``COPY FROM STDIN`` streamed
-   through a ``psql`` subprocess. COPY is PostgreSQL's bulk-load fast
-   path (one WAL-optimized stream per partition vs per-row INSERT
-   round-trips) and needs no client library or JDBC jar. This is the
-   path integration-tested against a real PostgreSQL server
-   (tests/test_pg_integration.py).
-2. ``write_chunks_jdbc`` — Spark's native JDBC writer when a driver
-   jar is on the classpath (has no VECTOR type, so the embedding is
-   serialized to pgvector's text literal and the column type forced
-   with ``createTableColumnTypes``).
-3. ``write_chunks_psycopg`` — ``foreachPartition`` + psycopg when the
-   library is installed.
+One transport: ``write_chunks_copy``, a per-partition ``COPY FROM
+STDIN`` streamed through a ``psql`` subprocess. COPY is PostgreSQL's
+bulk-load fast path (one WAL-optimized stream per partition vs per-row
+INSERT round-trips) and needs no client library or JDBC jar. It is
+integration-tested against a real PostgreSQL server
+(tests/test_pg_integration.py).
 
 DDL (extension + table) runs once from the driver. When the server
 lacks the pgvector extension, ``ensure_schema_psql`` degrades the
@@ -194,71 +186,3 @@ def write_chunks_copy(
                 proc.kill()
 
     lines.foreachPartition(load_partition)
-
-
-def write_chunks_jdbc(
-    chunks: DataFrame,
-    url: str,
-    table: str = "document_chunks",
-    dim: int = 64,
-    mode: str = "append",
-    batchsize: int = 1000,
-    properties: dict[str, str] | None = None,
-) -> None:
-    """JDBC batch write with the embedding serialized for pgvector.
-
-    ``batchsize`` plays the reference's 32-row insert batching role
-    (index_documents.py:248-249,291-306) — but per partition, in
-    parallel, inside one transaction per partition.
-    """
-    out = chunks.withColumn("embedding", vector_literal("embedding"))
-    writer = (
-        out.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batchsize))
-        .option(
-            "createTableColumnTypes",
-            f"embedding VECTOR({dim}), chunk_text TEXT, filename TEXT, "
-            "split_strategy TEXT",
-        )
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    try:
-        writer.mode(mode).save()
-    except Exception as e:  # pragma: no cover - no JDBC driver in container
-        raise RuntimeError(
-            "pgvector JDBC write failed — is the PostgreSQL JDBC driver on "
-            f"the classpath and the server reachable? ({e})"
-        ) from e
-
-
-def write_chunks_psycopg(chunks: DataFrame, dsn: str, table: str = "document_chunks") -> None:
-    """Driver-less alternative: ``foreachPartition`` + psycopg, one
-    transaction per partition (the reference's insert_chunks semantics,
-    distributed)."""
-
-    def write_partition(rows) -> None:
-        try:
-            import psycopg
-        except ImportError as e:  # pragma: no cover
-            raise RuntimeError("psycopg not installed in this environment") from e
-        with psycopg.connect(dsn) as conn, conn.cursor() as cur:
-            cur.executemany(
-                f"INSERT INTO {table} (id, chunk_text, embedding, filename, "
-                "split_strategy, created_at) VALUES (%s, %s, %s, %s, %s, %s)",
-                [
-                    (
-                        r.id,
-                        r.chunk_text,
-                        "[" + ",".join(str(x) for x in r.embedding) + "]",
-                        r.filename,
-                        r.split_strategy,
-                        r.created_at,
-                    )
-                    for r in rows
-                ],
-            )
-
-    chunks.foreachPartition(write_partition)

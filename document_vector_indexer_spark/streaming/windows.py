@@ -132,11 +132,12 @@ def attribution_join(
 # watermarks accept only TIMESTAMP, so read NTZ and cast
 # (value-preserving under the pinned UTC session TZ — same
 # normalization as io._load_events). INGESTED dirs are different:
-# ingest_engine_layout writes events.parquet from load_table's output,
-# whose ts is already TIMESTAMP (LTZ in the file) — reading THAT
-# through an NTZ schema then casting would shift every value by the
-# session-TZ offset (r8 ADVICE: +5h under America/New_York), so the
-# directory branch declares TimestampType directly, no cast.
+# ingest_engine_layout writes events.parquet as the bucketed table, from
+# load_table's output, whose ts is already TIMESTAMP (LTZ in the file) —
+# reading THAT through an NTZ schema then casting would shift every
+# value by the session-TZ offset (r8 ADVICE: +5h under
+# America/New_York), so the directory branch declares TimestampType
+# directly, no cast.
 def _stream_schema(ts_type: "T.DataType") -> T.StructType:
     return T.StructType(
         [
@@ -165,7 +166,8 @@ def read_events_stream(
     The file source wants a *directory*, and the testdata dir mixes all
     ten tables — so stage a symlink to events.parquet in a temp dir.
     On an ingested dir (``io.ingest_engine_layout``) ``events.parquet``
-    is itself a Spark-written table DIRECTORY (part-files + _SUCCESS);
+    is itself a Spark-written table DIRECTORY (the bucket files +
+    _SUCCESS; the file source reads them as plain parquet files);
     the streaming file source lists a directory's immediate files only
     and silently yields ZERO files through a symlinked subdirectory
     (r8 driver-sim catch: q_stream_stateful returned 0 rows on the

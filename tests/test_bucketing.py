@@ -102,11 +102,12 @@ def _pq_files(path: str) -> list[str]:
 def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
     spark, tmp_path
 ):
-    """r8 review: ingesting FROM an already-ingested dir makes two pool
-    threads race load_table('events') -> _load_events_bucketed's
-    CREATE TABLE (the source dir has events_by_user). With IF NOT
-    EXISTS the ingest must complete and the re-ingested events must
-    match the original exactly.
+    """r8 review: ingesting FROM an already-ingested dir reads the
+    source's bucketed events.parquet through _load_events_bucketed's
+    CREATE TABLE. Two pool threads once raced that DDL; only one ingest
+    thread now loads events, and the DDL keeps IF NOT EXISTS. The
+    ingest must complete and the re-ingested events must match the
+    original exactly.
 
     The re-ingest must also keep each table's file layout: a
     directory-form source is sized by its total bytes, not by the
@@ -135,8 +136,7 @@ def test_ingest_engine_layout_is_reentrant_over_ingested_dirs(
 
 def test_ingest_splits_one_row_group_without_losing_rows(spark, tmp_path):
     """A one-row-group source is cut into its k files by Arrow on the
-    driver (events by the Spark task that reads it): k files, and every
-    row exactly once."""
+    driver: k files, and every row exactly once."""
     import os
 
     from document_vector_indexer_spark.io import (
@@ -226,7 +226,7 @@ def test_partial_bucketed_dir_is_not_registered(spark, tmp_path):
     _SUCCESS marker (crashed ingest) must not register — Spark trusts
     catalog bucket metadata to elide exchanges, so a partial dir would
     silently drop the missing buckets' rows. The reader must fall back
-    to the plain events.parquet copy with full row parity."""
+    to a plain parquet read of the same files with full row parity."""
     import os
 
     from document_vector_indexer_spark.io import (
@@ -237,7 +237,7 @@ def test_partial_bucketed_dir_is_not_registered(spark, tmp_path):
     src = "/root/testdata/sf0.001"
     dest = str(tmp_path / "crashed")
     ingest_engine_layout(spark, src, dest)
-    os.remove(os.path.join(dest, "events_by_user", "_SUCCESS"))
+    os.remove(os.path.join(dest, "events.parquet", "_SUCCESS"))
     assert _load_events_bucketed(spark, dest) is None
     n_src = load_table(spark, src, "events").count()
     assert load_table(spark, dest, "events").count() == n_src

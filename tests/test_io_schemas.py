@@ -49,12 +49,7 @@ def test_declared_schema_matches_fixture(spark, name):
 def test_declared_schema_equals_inferred_on_ingested_dir(
     spark, ingested, name
 ):
-    path = (
-        f"{ingested}/events_by_user"
-        if name == "events"
-        else table_path(ingested, name)
-    )
-    inferred = spark.read.parquet(path).schema
+    inferred = spark.read.parquet(table_path(ingested, name)).schema
     assert load_table(spark, ingested, name).schema == inferred
 
 
@@ -75,18 +70,18 @@ def _jobs_run(spark, fn) -> int:
 
 def test_ingest_and_first_load_job_counts(spark, tmp_path):
     """Declared-schema reads run no schema-inference job, a one-file
-    table is copied instead of rewritten, and a one-row-group source is
-    cut into its files by Arrow on the driver (events by one Spark
-    task, without a shuffle): an sf0.001 ingest is 5 jobs (a write job
-    for events; a shuffle-map and a write job for the shingles sidecar
-    and the bucketed events), and the first load of every table, of
-    the raw fixture dir (in a new session, whose table cache is empty)
-    and of the ingested dir, runs none."""
+    table is copied instead of rewritten, a one-row-group source is cut
+    into its files by Arrow on the driver, and events are stored once,
+    bucketed: an sf0.001 ingest is 4 jobs (a shuffle-map and a write
+    job for the shingles sidecar and for the bucketed events), and the
+    first load of every table, of the raw fixture dir (in a new
+    session, whose table cache is empty) and of the ingested dir, runs
+    none."""
     dest = str(tmp_path / "ingested")
     n_ingest = _jobs_run(
         spark, lambda: ingest_engine_layout(spark, SF, dest)
     )
-    assert n_ingest <= 5
+    assert n_ingest <= 4
 
     fresh = spark.newSession()
 
@@ -132,6 +127,34 @@ def test_failed_arrow_split_leaves_no_partial_table(spark, tmp_path, monkeypatch
     for t in ("lineitem", "documents", "embeddings"):
         if t != table:
             assert parquet_rows(table_path(dest, t)) == parquet_rows(table_path(SF, t))
+
+
+def test_failed_events_write_leaves_no_partial_table(spark, tmp_path, monkeypatch):
+    """An events write failing after its files are written fails the
+    ingest and leaves neither events.parquet nor its temporary
+    directory behind; every other table is complete."""
+    import os
+
+    from document_vector_indexer_spark import io as dio
+
+    real = dio.write_bucketed
+
+    def failing(*a, **kw):
+        real(*a, **kw)
+        raise OSError("injected write failure")
+
+    monkeypatch.setattr(dio, "write_bucketed", failing)
+    dest = str(tmp_path / "ingested")
+    with pytest.raises(OSError, match="injected"):
+        ingest_engine_layout(spark, SF, dest, target_file_bytes=16 << 10)
+    left = os.listdir(dest)
+    assert not [f for f in left if f.startswith(".")], left
+    assert "events.parquet" not in left
+    for t in TABLES:
+        if t != "events":
+            assert dio.parquet_rows(table_path(dest, t)) == dio.parquet_rows(
+                table_path(SF, t)
+            ), t
 
 
 def test_nanos_events_ts_read_as_micros(spark, tmp_path):

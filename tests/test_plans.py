@@ -89,7 +89,7 @@ def test_asof_join_bucketed_layout_is_exchange_free(spark, tmp_path):
 
 def test_bucketed_events_layout_removes_session_exchange(spark, tmp_path):
     """The r8 layout contract: over an ingested dir, the bucketed
-    events_by_user table satisfies ClusteredDistribution(user_id) from
+    events.parquet table satisfies ClusteredDistribution(user_id) from
     the SCAN, so the session-window plan must carry NO Exchange — the
     user_id shuffle was paid once at ingest. Over a raw fixture dir the
     same query keeps its one exchange (fallback path)."""

@@ -198,7 +198,7 @@ SPECIAL = {
 
 # The per-user events family dumped a SECOND time, against an ingested
 # engine-layout dir (io.ingest_engine_layout): the bucketed+sorted
-# events_by_user table's scan provides HashPartitioning(user_id), which
+# events.parquet table's scan provides HashPartitioning(user_id), which
 # satisfies each of these plans' ClusteredDistribution(user_id) — so
 # the Exchange visible in the raw-dir plans above must be ABSENT here
 # (the shuffle was paid once at ingest). tests/test_plans.py pins the
@@ -283,7 +283,7 @@ def main() -> None:
     try:
         ingest_engine_layout(spark, "/root/testdata/sf0.01", ingest_dir)
         out.append(
-            "# Events family on the ingest layout (bucketed events_by_user)\n\n"
+            "# Events family on the ingest layout (bucketed events.parquet)\n\n"
             "Same queries, run over an `io.ingest_engine_layout` dir: the\n"
             "bucketed+sorted scan provides HashPartitioning(user_id), so the\n"
             "user-keyed Exchange present in the raw-dir plans above is gone —\n"
