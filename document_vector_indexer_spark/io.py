@@ -13,14 +13,20 @@ instead of reading as NULLs.
 
 ``ingest_engine_layout`` rewrites a corpus into the engine's multi-file
 layout, one stored layout per table. ``events`` is stored bucketed by
-``user_id``. Of the other tables, one that stays one file is copied;
-one whose source is one file of one row group is cut into its files by
-Arrow's parquet codec on the driver (``_arrow_split``); every other
-source (a directory, a file of several row groups) is repartitioned by
-Spark. The Spark jobs left in a fixture ingest are the two layouts
-that need a shuffle: the ``documents__shingles3`` sidecar and the
-bucketed events table. ``parquet_rows`` counts a written table from
-its footers.
+``user_id``: a source of one file holding one row group of at most
+``_ARROW_EVENTS_MAX_BYTES`` (256 MiB uncompressed, from its footer) is
+bucketed by Arrow on the driver, each row in bucket
+``pmod(murmur3(user_id, 42), 8)`` as Spark's bucket hash places it,
+each bucket sorted by (user_id, ts); any other source takes Spark's
+spillable bucketed write. Of the other tables, one that stays one file
+is copied; one whose source is one file of one row group is cut into
+its files by Arrow's parquet codec on the driver (``_arrow_split``);
+every other source (a directory, a file of several row groups) is
+repartitioned by Spark. The one Spark job left in a fixture ingest
+writes the ``documents__shingles3`` sidecar, projected without a
+shuffle from the ``documents`` files just cut. Every output is written
+beside its target and renamed into place. ``parquet_rows`` counts a
+written table from its footers.
 
 Scale note: at 100 TB each of these reads becomes a partitioned
 parquet/Delta table; ``spark.read.parquet`` keeps predicate pushdown,
@@ -383,8 +389,19 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_type = (footer_types(path) or {}).get("ts")
     if ts_type == "bigint":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = _read_declared(spark, "events", path, _events_stored_schema(ts_type))
+    if ts_type == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def _events_stored_schema(ts_type: "str | None") -> T.StructType:
+    """The events declaration with ``ts`` as a source stores it: BIGINT
+    nanos, naive TIMESTAMP_NTZ, or (any other footer type) TIMESTAMP."""
     stored = {"bigint": T.LongType(), "timestamp_ntz": T.TimestampNTZType()}
-    schema = T.StructType(
+    return T.StructType(
         [
             T.StructField("ts", stored.get(ts_type, T.TimestampType()))
             if f.name == "ts"
@@ -392,12 +409,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             for f in SCHEMAS["events"].fields
         ]
     )
-    df = _read_declared(spark, "events", path, schema)
-    if ts_type == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
@@ -472,6 +483,15 @@ def _renamed_into_place(out: str):
 # its memory follows this batch, not the source's one row group.
 _SPLIT_BATCH_ROWS = 1 << 16
 
+# The parquet writer options of every file the driver writes with Arrow
+# (``_arrow_split``, ``_arrow_bucket_events``): Spark's codec, and no
+# serialized Arrow schema in the footer, which Spark's reader ignores.
+# Arrow still dictionary-encodes every column up to its dictionary page
+# limit, where Spark's writer drops a dictionary that does not pay for
+# itself on the first page; no Arrow option makes that choice per
+# column chunk, so unique-valued columns stay larger (see CHANGES.md).
+_ARROW_WRITE_OPTIONS = {"compression": "snappy", "store_schema": False}
+
 
 def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
     """Cut ``src``, one parquet file of ``rows`` rows in one row group,
@@ -494,25 +514,134 @@ def _arrow_split(table: str, src: str, out: str, rows: int, k: int) -> None:
     schema = pa.schema([pf.schema_arrow.field(n) for n in names])
     with _renamed_into_place(out) as tmp:
         os.makedirs(tmp)
+
+        def writer(part: int) -> pq.ParquetWriter:
+            path = os.path.join(tmp, f"part-{part:05d}.parquet")
+            return pq.ParquetWriter(path, schema, **_ARROW_WRITE_OPTIONS)
+
         part, left = 0, per
-        writer = pq.ParquetWriter(os.path.join(tmp, "part-00000.parquet"), schema)
+        w = writer(part)
         for batch in pf.iter_batches(
             batch_size=min(per, _SPLIT_BATCH_ROWS), columns=names
         ):
             while batch.num_rows:
                 if left == 0:
-                    writer.close()
+                    w.close()
                     part, left = part + 1, per
-                    writer = pq.ParquetWriter(
-                        os.path.join(tmp, f"part-{part:05d}.parquet"), schema
-                    )
+                    w = writer(part)
                 piece = batch.slice(0, left)
-                writer.write_batch(piece)
+                w.write_batch(piece)
                 left -= piece.num_rows
                 batch = batch.slice(piece.num_rows)
-        writer.close()
+        w.close()
         if parquet_rows(tmp) != rows:
             raise RuntimeError(f"split of {src} did not write its {rows} rows")
+
+
+# Largest events source (uncompressed bytes of its one row group, from
+# the footer) the driver buckets with Arrow. The Python driver holds the
+# decoded table (2.1 times its footer bytes at sf0.1: 5.5 MB for 2.6 MB)
+# plus one bucket's filtered and sorted copies, so about 3 times this at
+# peak; a larger source takes Spark's spillable bucketed write.
+_ARROW_EVENTS_MAX_BYTES = 256 << 20
+
+
+def murmur3_bucket(values, n_buckets: int):
+    """Spark's bucket id of int64 ``values``: ``pmod(hash(v), n_buckets)``,
+    where ``hash`` is Murmur3_x86_32 ``hashLong`` with seed 42 (the
+    ``partitionIdExpression`` of Spark's bucketed writer), computed in
+    NumPy's wrapping uint32 arithmetic. A NULL key hashes to the seed
+    itself in Spark; callers place those rows in bucket ``42 % n``."""
+    import numpy as np
+
+    def rotl(x, r: int):
+        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
+
+    def mix(h, k):
+        k = rotl(k * np.uint32(0xCC9E2D51), 15) * np.uint32(0x1B873593)
+        return rotl(h ^ k, 13) * np.uint32(5) + np.uint32(0xE6546B64)
+
+    u = np.asarray(values, dtype=np.int64).view(np.uint64)
+    h = np.full(u.shape, 42, np.uint32)
+    h = mix(h, (u & np.uint64(0xFFFFFFFF)).astype(np.uint32))
+    h = mix(h, (u >> np.uint64(32)).astype(np.uint32))
+    h ^= np.uint32(8)
+    h ^= h >> np.uint32(16)
+    h *= np.uint32(0x85EBCA6B)
+    h ^= h >> np.uint32(13)
+    h *= np.uint32(0xC2B2AE35)
+    h ^= h >> np.uint32(16)
+    return np.mod(h.view(np.int32).astype(np.int64), n_buckets)
+
+
+def _arrow_can_bucket_events(spark: SparkSession, src: str) -> bool:
+    """True iff the events source at ``src`` is bucketed by Arrow on the
+    driver (``_arrow_bucket_events``): one file of one row group within
+    ``_ARROW_EVENTS_MAX_BYTES``, storing ``ts`` as naive INT64 micros,
+    with a session that writes TIMESTAMP as INT96 in UTC, so that the
+    files are the ones Spark's writer would store."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if not os.path.isfile(src):
+        return False
+    pf = pq.ParquetFile(src)
+    i = pf.schema_arrow.get_field_index("ts")
+    return (
+        pf.metadata.num_row_groups == 1
+        and pf.metadata.row_group(0).total_byte_size <= _ARROW_EVENTS_MAX_BYTES
+        and i >= 0
+        and pf.schema_arrow.field(i).type == pa.timestamp("us")
+        and pf.schema.column(i).physical_type == "INT64"
+        and spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        and spark.conf.get("spark.sql.parquet.outputTimestampType") == "INT96"
+    )
+
+
+def _write_event_buckets(table, bucket, tmp: str) -> None:
+    """One file per non-empty bucket of ``table`` into ``tmp``, rows
+    sorted by (user_id, ts), nulls first, named with the bucket id
+    suffix Spark's bucketed writer uses (``_bucketed_dir_committed``)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for b in np.unique(bucket):
+        part = table.filter(pa.array(bucket == b))
+        order = pc.sort_indices(
+            part,
+            [("user_id", "ascending"), ("ts", "ascending")],
+            null_placement="at_start",
+        )
+        pq.write_table(
+            part.take(order),
+            os.path.join(tmp, f"part-{b:05d}_{b:05d}.c000.snappy.parquet"),
+            use_deprecated_int96_timestamps=True,
+            **_ARROW_WRITE_OPTIONS,
+        )
+
+
+def _arrow_bucket_events(src: str, out: str) -> None:
+    """Write the bucketed events layout at ``out`` from ``src`` (see
+    ``_arrow_can_bucket_events``) with Arrow on the driver: bucket ids
+    from ``murmur3_bucket``, the declared columns in their declared
+    order, ``ts`` stored as INT96 as Spark's writer stores a TIMESTAMP,
+    and a ``_SUCCESS`` marker, renamed into place
+    (``_renamed_into_place``)."""
+    import pyarrow.parquet as pq
+
+    check_declared_schema("events", src, _events_stored_schema("timestamp_ntz"))
+    table = pq.read_table(src, columns=SCHEMAS["events"].fieldNames())
+    uid = table.column("user_id")
+    bucket = murmur3_bucket(uid.fill_null(0).to_numpy(), EVENTS_BUCKETS)
+    bucket[uid.is_null().to_numpy(zero_copy_only=False)] = 42 % EVENTS_BUCKETS
+    with _renamed_into_place(out) as tmp:
+        os.makedirs(tmp)
+        _write_event_buckets(table, bucket, tmp)
+        if parquet_rows(tmp) != table.num_rows:
+            raise RuntimeError(f"bucketing of {src} did not write its rows")
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
 
 
 def ingest_engine_layout(
@@ -543,9 +672,16 @@ def ingest_engine_layout(
     first way below, every other table the first of the rest that
     applies:
 
-    - Bucketed by user_id, written by rename: ``events``, from any
-      source, as ``EVENTS_BUCKETS`` per-bucket-sorted files (see
-      ``_load_events_bucketed``): a shuffle-map and a write job.
+    - Bucketed by user_id, written by rename: ``events``, as
+      ``EVENTS_BUCKETS`` per-bucket-sorted files (see
+      ``_load_events_bucketed``). A source of one file holding one row
+      group of at most ``_ARROW_EVENTS_MAX_BYTES`` uncompressed, with a
+      naive micros ``ts``, is bucketed by Arrow on the driver
+      (``_arrow_bucket_events``): each row goes to bucket
+      ``pmod(murmur3(user_id, 42), EVENTS_BUCKETS)``, bit-equal to
+      Spark's bucket hash (``murmur3_bucket``), and each bucket file is
+      sorted by (user_id, ts), nulls first. Every other source takes
+      Spark's spillable bucketed write: a shuffle-map and a write job.
     - Copied: k == 1 and the source is one regular file. It already is
       the one file a rewrite would write. At the fixture scale
       factors: region, nation, customer, supplier and part (sf0.001:
@@ -560,15 +696,17 @@ def ingest_engine_layout(
       or a directory (an ingested dir fed back in, or any production
       input): a round-robin ``repartition(k)`` shuffle, then the write.
 
-    The ``documents__shingles3`` sidecar needs its shuffle too (a
-    shuffle-map and a write job). Sources are read with their declared
-    schemas, and copied and Arrow-cut sources have their footers
-    checked, so no job infers a schema: a fixture ingest is 4 jobs (the
-    two shuffled layouts).
+    The ``documents__shingles3`` sidecar is projected from the
+    ``documents`` just written to ``dest``, whose files give the scan
+    its tasks, so its write is one Spark job with no shuffle, renamed
+    into place like every table. Sources are read with their declared
+    schemas, and copied and Arrow-written sources have their footers
+    checked, so no job infers a schema: a fixture ingest is 1 job (the
+    sidecar).
 
     Tables rewrite CONCURRENTLY (one driver thread each — Spark's
     scheduler interleaves the jobs, and Arrow's codec releases the
-    GIL), so the Arrow cuts overlap the Spark jobs. Output is
+    GIL), so the Arrow writes overlap the Spark jobs. Output is
     per-table-deterministic either way.
     """
     from concurrent.futures import ThreadPoolExecutor
@@ -590,21 +728,32 @@ def ingest_engine_layout(
                 "overwrite"
             ).parquet(out)
 
-    def rewrite_shingles() -> None:
-        # Derived projection, not a table copy: see _shingles3.
-        _shingles3(spark, sf_dir).write.mode("overwrite").parquet(
-            os.path.join(dest, f"{SHINGLES3}.parquet")
+    def rewrite_documents_and_shingles() -> None:
+        # Derived projection, not a table copy: see SHINGLES3. Read
+        # from dest without the table cache, which may hold a listing
+        # of files this ingest just replaced.
+        from document_vector_indexer_spark.operators.dedup import (
+            shingle_projection,
         )
+
+        rewrite("documents")
+        path = table_path(dest, "documents")
+        docs = _read_declared(spark, "documents", path, SCHEMAS["documents"])
+        with _renamed_into_place(os.path.join(dest, f"{SHINGLES3}.parquet")) as tmp:
+            shingle_projection(docs).write.parquet(tmp)
 
     def rewrite_events() -> None:
         # Bucketed on the natural cluster key (see _load_events_bucketed).
+        src, out = table_path(sf_dir, "events"), table_path(dest, "events")
+        if _arrow_can_bucket_events(spark, src):
+            _arrow_bucket_events(src, out)
+            return
         # Writing through a throwaway EXTERNAL table name (write_bucketed)
         # leaves the bucket-named files in the temporary dir; the catalog
         # entry is dropped before the rename, and readers re-register
         # over the files in place. repartition(n, key) uses the same
         # pmod(murmur3) as the bucket hash, so each task holds exactly
         # one bucket and writes exactly one file per bucket.
-        out = table_path(dest, "events")
         tbl = _loc_table_name("dvi_ingest_events_bkt_", out)
         with _renamed_into_place(out) as tmp:
             try:
@@ -623,9 +772,13 @@ def ingest_engine_layout(
                 spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
 
     os.makedirs(dest, exist_ok=True)
-    with ThreadPoolExecutor(max_workers=len(TABLES) + 1) as pool:
-        futs = [pool.submit(rewrite, t) for t in TABLES if t != "events"]
-        futs.append(pool.submit(rewrite_shingles))
+    with ThreadPoolExecutor(max_workers=len(TABLES)) as pool:
+        futs = [
+            pool.submit(rewrite, t)
+            for t in TABLES
+            if t not in ("events", "documents")
+        ]
+        futs.append(pool.submit(rewrite_documents_and_shingles))
         futs.append(pool.submit(rewrite_events))
         for fut in futs:
             fut.result()  # propagate the first failure
@@ -638,49 +791,43 @@ def ingest_engine_layout(
     return dest
 
 
-# The one derived projection the ingest writes (see _shingles3).
+# The one derived projection the ingest writes: each doc's distinct
+# word-3-gram set (``operators.dedup.shingle_projection``), the
+# per-row-CPU half of every near-dup query (tokenize + gram assembly),
+# materialized once at ingest like any index. Queries probe it via
+# ``load_derived``; on raw fixture dirs (no ingest ran) they compute the
+# same projection inline, so the stored and inline forms can't drift.
 SHINGLES3 = "documents__shingles3"
-
-
-def _shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Each doc's distinct word-3-gram set, the per-row-CPU half of
-    every near-dup query (tokenize + gram assembly), materialized once
-    at ingest like any index. Queries probe it via ``load_derived``; on
-    raw fixture dirs (no ingest ran) they fall back to computing it
-    inline — same expression, factored into
-    ``operators.dedup.shingle_projection`` so the stored and inline
-    forms can't drift."""
-    from document_vector_indexer_spark.operators.dedup import (
-        shingle_projection,
-    )
-
-    return shingle_projection(
-        load_table(spark, sf_dir, "documents"),
-        num_partitions=_ROW_SPREAD_TABLES["documents"],
-    )
 
 
 def load_derived(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame | None:
     """A derived projection written by ``ingest_engine_layout``, or
-    ``None`` when ``sf_dir`` is a raw fixture directory that never had
-    an ingest (the driver's correctness runs) — callers fall back to
-    computing the projection inline. Local-path existence probe only:
-    this harness always reads local dirs; an object-store deployment
-    would track projections in the catalog instead.
+    ``None`` when ``sf_dir`` holds no committed one: a raw fixture
+    directory that never had an ingest (the driver's correctness runs),
+    or a directory without the writer's ``_SUCCESS`` marker, which may
+    hold part of the rows. Callers fall back to computing the projection
+    inline. Local-path probe only: this harness always reads local
+    dirs; an object-store deployment would track projections in the
+    catalog instead.
 
     The stored files are read with the schema of the plan that defines
     them, which analysis yields without a job."""
     if name != SHINGLES3:
         raise KeyError(f"unknown derived projection {name!r}")
     p = os.path.join(sf_dir, f"{name}.parquet")
-    if not os.path.exists(p):
+    if not os.path.isfile(os.path.join(p, "_SUCCESS")):
         return None
     per_session = _session_cache(spark)
     got = per_session.get((sf_dir, name))
     if got is None:
-        got = _read_declared(spark, name, p, _shingles3(spark, sf_dir).schema)
+        from document_vector_indexer_spark.operators.dedup import (
+            shingle_projection,
+        )
+
+        schema = shingle_projection(load_table(spark, sf_dir, "documents")).schema
+        got = _read_declared(spark, name, p, schema)
         per_session[(sf_dir, name)] = got
     return got
 

@@ -48,7 +48,6 @@ def shingle_projection(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(block_cols..., id, shingles) — each doc's DISTINCT word
     ``n``-gram set as an array column. This is the derived projection
@@ -60,35 +59,27 @@ def shingle_projection(
     in ``ngram_jaccard_pairs`` — this function IS that path, factored
     out so the two can't drift.
 
-    ``num_partitions`` pins the tokenizer barrier's width (and hence
-    the written file count when the result is stored): AQE coalesces
-    small shuffles to ONE partition, which would serialize both the
-    ingest-side tokenization and every later scan of the projection."""
-    words_df = (
-        df.repartition(num_partitions, F.col(id_col))
-        if num_partitions
-        else df.repartition(F.col(id_col))
-    ).select(
+    The grams are one ``regexp_extract_all`` over the text with every
+    whitespace run (``TX.PY_WS``, the tokenizer's set) made one space:
+    at the start and after each space, a lookahead captures the next
+    ``n`` words, so gram i is words i..i+n-1 joined by one space, as
+    ``TX.word_tokens`` would split them. The match consumes that space:
+    after a zero-width match Java's matcher retries one UTF-16 unit on,
+    and a zero-width word-start test such as ``(?<![^ ])`` passes
+    between the halves of a surrogate pair, emitting grams that start
+    mid-character. NULL text has no grams. The expression holds no
+    lambda, so nothing re-evaluates per element and the projection
+    needs no exchange: it is row-local, with the tasks of its input's
+    scan."""
+    words = F.regexp_replace(TX.strip(F.col(text_col)), f"[{TX.PY_WS}]+", " ")
+    gram = " ".join(["[^ ]+"] * n)
+    grams = F.coalesce(
+        F.regexp_extract_all(words, F.lit(f"(?:^| )(?=({gram}))"), 1),
+        F.array().cast("array<string>"),
+    )
+    return df.select(
         *block_cols,
         F.col(id_col).alias("id"),
-        TX.word_tokens(F.col(text_col)).alias("words"),
-    )
-    grams = F.when(
-        F.size("words") >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size("words") - n),
-            lambda i: F.concat_ws(
-                " ",
-                *[
-                    F.element_at(F.col("words"), (i + j + 1).cast("int"))
-                    for j in range(n)
-                ],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return words_df.select(
-        *block_cols,
-        "id",
         # (n, text_col) ride along as column metadata — Spark persists
         # StructField metadata through parquet, so the stored sidecar
         # carries its own provenance and ngram_jaccard_pairs can refuse
@@ -125,47 +116,37 @@ def ngram_jaccard_pairs(
 
     Returns (id_a, id_b, inter, n_a, n_b, jaccard) with id_a < id_b.
     """
-    # Tokenize once per row BEHIND AN EXCHANGE, then build shingles
-    # from the materialized words array. The repartition is
-    # LOAD-BEARING, not a tuning knob: element_at(words, i) inside the
-    # transform lambda re-evaluates whatever expression `words` is per
-    # element (Catalyst CSE stops at lambda boundaries, and
-    # CollapseProject inlines the tokenizer into the lambda) — only an
-    # Exchange forces materialization. Measured on this logical plan at
-    # sf0.1: ~120 s inlined vs 0.6 s with the barrier. The exchange
-    # also parallelizes tokenization when the input is a single
-    # file/row group, and hash(id) distribution is what downstream
-    # wants anyway.
     # Engine-layout fast path: ``shingles_df`` is the materialized
     # ``shingle_projection`` read back from storage (ingest wrote it
-    # once) — scan attributes carry no lambda-CSE hazard and the
-    # multi-file scan parallelizes on its own, so neither the tokenizer
-    # barrier exchange nor the per-query gram build exists in that
-    # plan. Raw-fixture path: the SAME projection computed inline
-    # (single source of truth — the stored and inline forms cannot
-    # drift).
-    if shingles_df is None:
-        shingles_df = shingle_projection(
-            df, block_cols=block_cols, text_col=text_col, id_col=id_col, n=n
-        )
-    else:
+    # once), so the per-query gram build does not exist in that plan.
+    # Raw-fixture path: the SAME projection computed inline (single
+    # source of truth — the stored and inline forms cannot drift),
+    # behind a hash(id) exchange.
+    #
+    # That exchange is no longer a materialization barrier. The
+    # lambda-boundary CSE rule other operators here cite: an expression
+    # referenced inside a higher-order-function lambda (element_at of a
+    # tokenized array inside transform) is re-evaluated per element —
+    # Catalyst CSE stops at lambda boundaries, and CollapseProject
+    # inlines the producer into the lambda — so only an Exchange forces
+    # it to materialize (measured on this operator's former lambda gram
+    # build at sf0.1: ~120 s inlined vs 0.6 s behind the exchange). The
+    # regex projection has no lambda; the exchange now only spreads its
+    # work over every core when the source is one file of one row
+    # group, and hash(id) distribution is what downstream wants anyway.
+    if shingles_df is not None:
         # A supplied sidecar must have been built with THIS call's
         # (n, text_col) — an n=4 caller handed the n=3 sidecar would
         # compute silently wrong Jaccard (r7 ADVICE). The projection
         # stamps both into the shingles column's metadata; a PRESENT
         # but mismatched stamp raises rather than guesses, while a
-        # sidecar with NO stamp (written before provenance existed) is
+        # sidecar with NO stamp (written before provenance existed, or
+        # unrelated metadata keys from an intermediate transform) is
         # unverifiable and is simply ignored — the inline projection
         # recomputes the same values, trading speed for certainty.
         meta = dict(shingles_df.schema["shingles"].metadata or {})
         if "n" not in meta:
-            # no provenance STAMP (unrelated metadata keys from an
-            # intermediate transform don't count — r8 review): the
-            # sidecar is unverifiable either way, recompute inline
-            shingles_df = shingle_projection(
-                df, block_cols=block_cols, text_col=text_col,
-                id_col=id_col, n=n,
-            )
+            shingles_df = None
         elif int(meta.get("n", -1)) != n or meta.get("text_col") != text_col:
             raise ValueError(
                 f"shingles_df provenance mismatch: built with "
@@ -173,6 +154,14 @@ def ngram_jaccard_pairs(
                 f"but this call wants n={n}, text_col={text_col!r} — "
                 "rebuild the sidecar or drop the shingles_df argument"
             )
+    if shingles_df is None:
+        shingles_df = shingle_projection(
+            df.repartition(F.col(id_col)),
+            block_cols=block_cols,
+            text_col=text_col,
+            id_col=id_col,
+            n=n,
+        )
     exploded = shingles_df.select(
         *block_cols, "id", F.explode("shingles").alias("shingle")
     )

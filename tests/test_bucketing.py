@@ -4,12 +4,15 @@ join must not exchange either side."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from document_vector_indexer_spark.io import load_table, write_bucketed
 
 SF = "/root/testdata/sf0.01"
+SF_TINY = os.path.join(os.path.dirname(SF), "sf0.001")
 
 
 @pytest.fixture(scope="module")
@@ -219,6 +222,145 @@ def test_arrow_split_refuses_mismatched_source(tmp_path):
     with pytest.raises(dio.SchemaMismatchError, match="'r_regionkey'"):
         dio._arrow_split("region", src, out, 2, 2)
     assert list((tmp_path / "out").iterdir()) == []
+
+
+def test_murmur3_bucket_equals_spark_bucket_hash(spark):
+    """The Arrow writer's bucket id equals Spark's pmod(hash(v), n) on
+    edge longs and random ones, with n the bucket count and a large
+    prime (which sees every bit of the hash); a NULL key hashes to the
+    seed, 42, where the Arrow writer puts it."""
+    import numpy as np
+
+    from document_vector_indexer_spark.io import EVENTS_BUCKETS, murmur3_bucket
+
+    edge = [0, 1, -1, 2, -2, 1 << 31, -(1 << 31), (1 << 31) - 1, 1 << 32,
+            -(1 << 32), (1 << 32) - 1, (1 << 63) - 1, -(1 << 63)]
+    vals = edge + np.random.default_rng(7).integers(
+        -(1 << 63), (1 << 63) - 1, 500, dtype=np.int64
+    ).tolist()
+    df = spark.createDataFrame([(v,) for v in vals] + [(None,)], "v bigint")
+    for n in (EVENTS_BUCKETS, 1_000_003):
+        got = {
+            r.v: r.b
+            for r in df.select("v", F.expr(f"pmod(hash(v), {n})").alias("b")).collect()
+        }
+        want = murmur3_bucket(np.array(vals, np.int64), n)
+        assert [got[v] for v in vals] == want.tolist(), n
+        assert got[None] == 42 % n
+
+
+def _fixture_with_events(tmp_path, events) -> str:
+    """A copy of the sf0.001 fixture dir whose events table is
+    ``events`` (a pyarrow table, written as one row group)."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from document_vector_indexer_spark.io import TABLES, table_path
+
+    src, d = SF_TINY, str(tmp_path / "fixture")
+    os.makedirs(d)
+    for t in TABLES:
+        if t != "events":
+            shutil.copyfile(table_path(src, t), table_path(d, t))
+    pq.write_table(events, table_path(d, "events"), row_group_size=events.num_rows)
+    return d
+
+
+def _written_by_spark(path: str) -> bool:
+    import pyarrow.parquet as pq
+
+    return b"org.apache.spark.version" in (pq.read_metadata(path).metadata or {})
+
+
+def _with_nulls(tmp_path) -> str:
+    """sf0.001 with NULL user_id on every 7th event and NULL ts on
+    every 5th."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(os.path.join(SF_TINY, "events.parquet"))
+    for c, k, typ in (("user_id", 7, pa.int64()), ("ts", 5, pa.timestamp("us"))):
+        vals = [None if i % k == 0 else v for i, v in enumerate(t.column(c).to_pylist())]
+        t = t.set_column(t.schema.get_field_index(c), c, pa.array(vals, typ))
+    return _fixture_with_events(tmp_path, t)
+
+
+@pytest.mark.parametrize("src", ["sf0.001", "sf0.01", "nulls"])
+def test_arrow_bucketed_events_equal_spark_writer(spark, tmp_path, monkeypatch, src):
+    """The driver's Arrow bucketing of a one-row-group events source
+    writes, bucket for bucket, the rows Spark's bucketed writer writes
+    (forced by a zero source-size bound). Every file of both is sorted
+    by (user_id, ts), nulls first, and holds only rows whose
+    pmod(hash(user_id), 8) is its bucket id; the Arrow layout registers
+    as the bucketed table."""
+    import re
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from document_vector_indexer_spark import io as dio
+
+    sf = _with_nulls(tmp_path) if src == "nulls" else os.path.join(os.path.dirname(SF), src)
+    arrow, spark_dir = str(tmp_path / "arrow"), str(tmp_path / "spark")
+    dio.ingest_engine_layout(spark, sf, arrow)
+    monkeypatch.setattr(dio, "_ARROW_EVENTS_MAX_BYTES", 0)
+    dio.ingest_engine_layout(spark, sf, spark_dir)
+
+    def buckets(d: str, by_spark: bool) -> dict:
+        out = {}
+        for f in _pq_files(dio.table_path(d, "events")):
+            assert _written_by_spark(f) == by_spark, f
+            t = pq.read_table(f)
+            order = pc.sort_indices(
+                t, [("user_id", "ascending"), ("ts", "ascending")],
+                null_placement="at_start",
+            )  # stable: the identity iff t is sorted
+            assert order.equals(pa.array(range(t.num_rows), pa.uint64())), f
+            b = int(re.search(r"_(\d{5})\.c\d+", f).group(1))
+            out[b] = t.sort_by([(c, "ascending") for c in t.column_names])
+        return out
+
+    got, want = buckets(arrow, False), buckets(spark_dir, True)
+    assert sorted(got) == sorted(want)
+    for b in want:
+        assert got[b].equals(want[b]), b
+    for d in (arrow, spark_dir):
+        loc = dio.table_path(d, "events")
+        bad = spark.read.parquet(loc).select(
+            F.regexp_extract(F.input_file_name(), r"_(\d{5})\.c\d+", 1)
+            .cast("int").alias("file_bucket"),
+            F.expr(f"pmod(hash(user_id), {dio.EVENTS_BUCKETS})").alias("bucket"),
+        ).filter("file_bucket != bucket")
+        assert bad.isEmpty(), d
+    assert dio._load_events_bucketed(spark, arrow) is not None
+    assert sum(t.num_rows for t in got.values()) == pq.read_metadata(
+        dio.table_path(sf, "events")
+    ).num_rows
+
+
+def test_nanos_events_source_takes_spark_path(spark, tmp_path):
+    """A nanosecond ts is not naive micros: the ingest buckets it with
+    Spark's writer, and the ingested events read as
+    test_nanos_events_ts_read_as_micros expects of the raw source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from document_vector_indexer_spark.io import ingest_engine_layout, table_path
+
+    t = pq.read_table(os.path.join(SF_TINY, "events.parquet"))
+    ns = pa.array([1_700_000_000_123_456_789] * t.num_rows, pa.timestamp("ns"))
+    i = t.schema.get_field_index("ts")
+    sf = _fixture_with_events(tmp_path, t.set_column(i, "ts", ns))
+    dest = str(tmp_path / "ingested")
+    ingest_engine_layout(spark, sf, dest)
+    files = _pq_files(table_path(dest, "events"))
+    assert files and all(_written_by_spark(f) for f in files)
+    ev = load_table(spark, dest, "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    got = ev.select(F.unix_micros("ts").alias("us")).distinct().collect()
+    assert [r.us for r in got] == [1_700_000_000_123_456]
 
 
 def test_partial_bucketed_dir_is_not_registered(spark, tmp_path):

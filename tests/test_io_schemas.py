@@ -71,17 +71,17 @@ def _jobs_run(spark, fn) -> int:
 def test_ingest_and_first_load_job_counts(spark, tmp_path):
     """Declared-schema reads run no schema-inference job, a one-file
     table is copied instead of rewritten, a one-row-group source is cut
-    into its files by Arrow on the driver, and events are stored once,
-    bucketed: an sf0.001 ingest is 4 jobs (a shuffle-map and a write
-    job for the shingles sidecar and for the bucketed events), and the
-    first load of every table, of the raw fixture dir (in a new
+    into its files by Arrow on the driver, and events are bucketed by
+    Arrow on the driver too: an sf0.001 ingest is 1 job (the shingles
+    sidecar, projected without a shuffle from the cut documents), and
+    the first load of every table, of the raw fixture dir (in a new
     session, whose table cache is empty) and of the ingested dir, runs
     none."""
     dest = str(tmp_path / "ingested")
     n_ingest = _jobs_run(
         spark, lambda: ingest_engine_layout(spark, SF, dest)
     )
-    assert n_ingest <= 4
+    assert n_ingest <= 1
 
     fresh = spark.newSession()
 
@@ -132,29 +132,83 @@ def test_failed_arrow_split_leaves_no_partial_table(spark, tmp_path, monkeypatch
 def test_failed_events_write_leaves_no_partial_table(spark, tmp_path, monkeypatch):
     """An events write failing after its files are written fails the
     ingest and leaves neither events.parquet nor its temporary
-    directory behind; every other table is complete."""
+    directory behind; every other table is complete. Both writers: the
+    driver's Arrow bucketing of the fixture, and Spark's bucketed write
+    (forced by a zero source-size bound)."""
     import os
 
     from document_vector_indexer_spark import io as dio
 
-    real = dio.write_bucketed
+    for name in ("_write_event_buckets", "write_bucketed"):
+        real, ran = getattr(dio, name), []
 
-    def failing(*a, **kw):
-        real(*a, **kw)
-        raise OSError("injected write failure")
+        def failing(*a, real=real, ran=ran, **kw):
+            real(*a, **kw)
+            ran.append(True)
+            raise OSError("injected write failure")
 
-    monkeypatch.setattr(dio, "write_bucketed", failing)
+        with monkeypatch.context() as m:
+            m.setattr(dio, name, failing)
+            if name == "write_bucketed":
+                m.setattr(dio, "_ARROW_EVENTS_MAX_BYTES", 0)
+            dest = str(tmp_path / name)
+            with pytest.raises(OSError, match="injected"):
+                ingest_engine_layout(spark, SF, dest, target_file_bytes=16 << 10)
+        assert ran == [True], name
+        left = os.listdir(dest)
+        assert not [f for f in left if f.startswith(".")], (name, left)
+        assert "events.parquet" not in left, name
+        for t in TABLES:
+            if t != "events":
+                assert dio.parquet_rows(table_path(dest, t)) == dio.parquet_rows(
+                    table_path(SF, t)
+                ), (name, t)
+
+
+def test_failed_sidecar_write_leaves_no_sidecar(spark, tmp_path, monkeypatch):
+    """A shingles-sidecar write failing after its files are written
+    fails the ingest and leaves neither the sidecar nor its temporary
+    directory behind, so no near-dup query can read a partial one."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from document_vector_indexer_spark import io as dio
+
+    real, written = DataFrameWriter.parquet, []
+
+    def failing(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if os.path.basename(path).startswith(f".{dio.SHINGLES3}"):
+            written.extend(os.listdir(path))
+            raise OSError("injected write failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
     dest = str(tmp_path / "ingested")
     with pytest.raises(OSError, match="injected"):
-        ingest_engine_layout(spark, SF, dest, target_file_bytes=16 << 10)
+        ingest_engine_layout(spark, SF, dest)
+    assert "_SUCCESS" in written and len(written) > 1
     left = os.listdir(dest)
     assert not [f for f in left if f.startswith(".")], left
-    assert "events.parquet" not in left
-    for t in TABLES:
-        if t != "events":
-            assert dio.parquet_rows(table_path(dest, t)) == dio.parquet_rows(
-                table_path(SF, t)
-            ), t
+    assert f"{dio.SHINGLES3}.parquet" not in left
+    assert load_derived(spark, dest, dio.SHINGLES3) is None
+
+
+def test_uncommitted_sidecar_is_not_loaded(spark, ingested, tmp_path):
+    """A sidecar directory without the writer's _SUCCESS marker may
+    hold part of the rows: load_derived refuses it, so callers compute
+    the projection inline."""
+    import os
+    import shutil
+
+    from document_vector_indexer_spark.io import SHINGLES3
+
+    d, side = str(tmp_path / "partial"), f"{SHINGLES3}.parquet"
+    for name in ("documents.parquet", side):
+        shutil.copytree(os.path.join(ingested, name), os.path.join(d, name))
+    assert load_derived(spark, d, SHINGLES3) is not None
+    os.remove(os.path.join(d, side, "_SUCCESS"))
+    assert load_derived(spark, d, SHINGLES3) is None
 
 
 def test_nanos_events_ts_read_as_micros(spark, tmp_path):

@@ -159,10 +159,10 @@ def test_chunking_needs_no_shuffle(spark):
 
 
 def test_ngram_tokenizer_behind_exchange(spark):
-    """The repartition before tokenization in ngram_jaccard_pairs is
-    LOAD-BEARING (see operators/dedup.py): without the exchange the
-    tokenizer inlines into the shingle lambda and re-evaluates per
-    element (measured 120 s vs 0.6 s). Guard its presence."""
+    """The repartition before tokenization in ngram_jaccard_pairs'
+    inline path spreads the gram regex of a one-file, one-row-group
+    source over every core (see operators/dedup.py; it was once the
+    barrier the lambda gram build needed). Guard its presence."""
     p = _plan(spark, "q_dedup_ngram")
     assert "REPARTITION_BY_COL" in p and "hashpartitioning(doc_id" in p, (
         "the tokenizer materialization barrier disappeared"

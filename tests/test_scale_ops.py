@@ -213,6 +213,74 @@ def test_ngram_pairs_rejects_mismatched_sidecar(spark):
     )
 
 
+def _lambda_shingles(df, n):
+    """The gram expression shingle_projection used before its regex
+    form, kept as the reference: tokens by TX.word_tokens, behind the
+    exchange its element_at lambda needs, then every run of n tokens
+    joined by one space."""
+    from document_vector_indexer_spark.functions import text as TX
+
+    words = df.repartition(F.col("doc_id")).select(
+        "source", F.col("doc_id").alias("id"), TX.word_tokens("text").alias("words")
+    )
+    grams = F.when(
+        F.size("words") >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size("words") - n),
+            lambda i: F.concat_ws(
+                " ",
+                *[F.element_at(F.col("words"), (i + j + 1).cast("int")) for j in range(n)],
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return words.select("source", "id", F.array_distinct(grams).alias("shingles"))
+
+
+# NULL, empty and whitespace-only text; 1, 2 and 3 words; repeated
+# grams; NBSP, \x1c-\x1f, U+3000 and other Unicode separators; non-BMP
+# characters, alone and as words.
+_SHINGLE_EDGE_TEXTS = [
+    None,
+    "",
+    " \t\n\r\x0b\x0c ",
+    "one",
+    "one two",
+    "one two three",
+    "  lead and\t\ttrail  \n",
+    "a b a b a b a b",
+    "dup dup dup dup dup",
+    "x\u00a0y\u00a0\u00a0z w",
+    "p\x1cq\x1dr\x1es\x1ft",
+    "\u7532\u3000\u4e59\u3000\u4e19\u3000\u4e01",
+    "l1\u2028l2\u2029l3\x85l4\u1680l5\u2003l6\u202fl7\u205fl8",
+    "\U0001f600 \U0001d518 \U00010348 \U0001f600 \U0001d518 \U00010348",
+    "a\U0001f600b c\U0001d518 d",
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 4])
+def test_regex_shingles_equal_lambda_reference(spark, n):
+    """shingle_projection's one regexp_extract_all gives, row for row
+    and in order, the grams of the lambda expression it replaced, on
+    edge texts and on the corpus's documents, and keeps the (n,
+    text_col) stamp."""
+    from document_vector_indexer_spark.operators.dedup import shingle_projection
+
+    edge = spark.createDataFrame(
+        [(-1 - i, "edge", t) for i, t in enumerate(_SHINGLE_EDGE_TEXTS)],
+        "doc_id bigint, source string, text string",
+    )
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "doc_id", "source", "text"
+    )
+    df = edge.unionByName(docs)
+    got = shingle_projection(df, n=n)
+    assert dict(got.schema["shingles"].metadata) == {"n": n, "text_col": "text"}
+    want = {r.id: r.shingles for r in _lambda_shingles(df, n).collect()}
+    assert {r.id: r.shingles for r in got.collect()} == want
+    assert want[-1] == [] and len(want[-8]) == 2  # NULL; repeated grams
+
+
 def test_minhash_mllib_recall_vs_portable(spark):
     """q_dedup_minhash_mllib is rows-only by design (MLlib's hash
     coefficients are not SQL-mirrorable), so its quality contract lives

@@ -24,7 +24,7 @@ NOTES = {
     "q_chunk_sentence": "greedy packing runs inside the aggregate HOF — zero extra shuffles",
     "q_vec_cosine": "broadcast of the query vector; cosine inside codegen",
     "q_knn_brute": "broadcast queries + windowed top-k",
-    "q_dedup_ngram": "exchange barrier before tokenize (load-bearing), bucketed inverted index",
+    "q_dedup_ngram": "hash(doc_id) exchange spreads the gram regex, bucketed inverted index",
     "q_stream_session": "session_window aggregation (same operator serves readStream)",
 }
 
@@ -201,9 +201,10 @@ SPECIAL = {
 # events.parquet table's scan provides HashPartitioning(user_id), which
 # satisfies each of these plans' ClusteredDistribution(user_id) — so
 # the Exchange visible in the raw-dir plans above must be ABSENT here
-# (the shuffle was paid once at ingest). tests/test_plans.py pins the
-# contract for the session plan; this section is the reviewable
-# evidence for the whole family.
+# (the bucketing was paid once at ingest: by Arrow on the driver for a
+# one-row-group fixture, else by Spark's bucketed write).
+# tests/test_plans.py pins the contract for the session plan; this
+# section is the evidence for the whole family.
 INGEST_LAYOUT = {
     "q_stream_session": "session_window agg straight off the bucketed "
     "scan — ZERO exchanges",
@@ -287,7 +288,8 @@ def main() -> None:
             "Same queries, run over an `io.ingest_engine_layout` dir: the\n"
             "bucketed+sorted scan provides HashPartitioning(user_id), so the\n"
             "user-keyed Exchange present in the raw-dir plans above is gone —\n"
-            "paid once at ingest, amortized across every per-user operator.\n"
+            "paid once at ingest (a fixture's events are bucketed by Arrow on\n"
+            "the driver), amortized across every per-user operator.\n"
         )
         for name, note in INGEST_LAYOUT.items():
             df = specs[name].fn(spark, ingest_dir)
