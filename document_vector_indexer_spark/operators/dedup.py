@@ -1,15 +1,22 @@
 """Deduplication operators for LLM training-data pipelines.
 
-Five tiers (SURVEY.md §2B vector ops + north-star extensions):
+Tiers (SURVEY.md §2B vector ops + north-star extensions):
 - exact         — hash group-by / keep-first (one shuffle on the hash)
 - ngram_jaccard — exact n-gram set Jaccard over blocked candidate
-                  pairs (explode -> equi-join on shingle; linear in
-                  total shingles, never a cross join)
+                  pairs (explode -> inverted index on shingle; linear
+                  in total shingles, never a cross join)
 - simhash       — portable 32-bit SimHash as pure integer column
                   arithmetic (bit-identical in any engine)
-- minhash_lsh   — MLlib MinHashLSH approx similarity join (the 100 TB
-                  path: band-bucket join, candidates only)
-- embedding_cosine — near-dup by embedding similarity with blocking
+- minhash       — portable banded MinHash (``minhash_portable_pairs``):
+                  char-fold shingle hashes, affine permutations mod
+                  M31, band buckets; the near-dup path of ``cli curate
+                  --dedup near`` and of the q_dedup_minhash/near/
+                  cluster/apply and q_golden_record keys
+- minhash_lsh   — MLlib MinHashLSH approx similarity join, kept as the
+                  rows-only recall reference for the portable tier
+- embedding_cosine — near-dup by embedding similarity with sign-LSH
+                  blocking; ``semantic_dedup_survivors`` for clusters
+- cdc_chunk     — passage reuse from shared content-defined chunks
 
 Everything except minhash_lsh is deterministic and oracle-checkable.
 """
@@ -203,20 +210,8 @@ def ngram_jaccard_pairs(
             x.alias("id_a"), F.lit(-1).cast("long").alias("id_b")
         ),
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("ids") - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size("ids") - 1),
-                lambda j: F.struct(
-                    F.element_at(ids_sorted, (i + 1).cast("int")).alias("id_a"),
-                    F.element_at(ids_sorted, (j + 1).cast("int")).alias("id_b"),
-                ),
-            ),
-        )
-    )
     emitted = F.when(
-        F.size("ids") >= 2, F.concat(single_arr, pair_arr)
+        F.size("ids") >= 2, F.concat(single_arr, _ordered_pairs("ids"))
     ).otherwise(single_arr)
     out = _pair_counts_with_sizes(
         buckets.select(F.explode(emitted).alias("p")).select(
@@ -233,6 +228,33 @@ def ngram_jaccard_pairs(
             F.col("cnt").cast("double")
             / (F.col("n_a") + F.col("n_b") - F.col("cnt"))
         ).alias("jaccard"),
+    )
+
+
+def _ordered_pairs(arr: str, a: str = "id_a", b: str = "id_b") -> Column:
+    """Every pair of the array column ``arr`` after sorting it, as
+    array<struct<a, b>> with the smaller element in ``a``: element i
+    with each element j > i, i ascending. The one pair emitter of the
+    bucket-based dedups (ngram, MinHash bands, CDC chunks).
+
+    Indices come from ``sequence`` and elements from ``element_at``;
+    the ``transform``/``slice`` form measured slower on q_dedup_ngram
+    (sf0.1 ingested, 10 alternating runs: median 0.803 vs 0.854 s).
+    Needs ``size(arr) >= 2``: for one element ``sequence(0, -1)``
+    counts down and ``element_at(.., 0)`` raises, so callers guard the
+    call or filter the buckets first."""
+    s = F.sort_array(F.col(arr))
+    return F.flatten(
+        F.transform(
+            F.sequence(F.lit(0), F.size(arr) - 2),
+            lambda i: F.transform(
+                F.sequence(i + 1, F.size(arr) - 1),
+                lambda j: F.struct(
+                    F.element_at(s, (i + 1).cast("int")).alias(a),
+                    F.element_at(s, (j + 1).cast("int")).alias(b),
+                ),
+            ),
+        )
     )
 
 
@@ -470,54 +492,6 @@ def minhash_signature_df(
     )
 
 
-_PERSISTED_LRU: "weakref.WeakKeyDictionary | None" = None
-_PERSIST_BOUND = 4
-
-
-def _persist_bounded(df: DataFrame) -> DataFrame:
-    """persist() with a per-session LRU bound (late-r11 review catch):
-    SQL caches are registered in CacheManager keyed by canonicalized
-    plan and are NOT garbage-collected with the DataFrame handle, so an
-    operator that persists internally would otherwise pin one cache per
-    distinct input corpus for the session's lifetime (the driver sim
-    and ramp loops sweep several). Same-plan repeats dedup inside
-    CacheManager; beyond ``_PERSIST_BOUND`` distinct plans the oldest
-    is unpersisted (blocking=False — eviction, not a barrier)."""
-    global _PERSISTED_LRU
-    if _PERSISTED_LRU is None:
-        import weakref
-
-        _PERSISTED_LRU = weakref.WeakKeyDictionary()
-    entries = _PERSISTED_LRU.setdefault(df.sparkSession, [])
-    # Key by the ANALYZED plan's semantic hash: CacheManager dedups
-    # same-plan persists into one entry, so appending a duplicate and
-    # later evicting it would unpersist the shared cache out from
-    # under every newer same-plan frame (cache thrash). A repeat hit
-    # just refreshes its LRU position.
-    try:
-        key = df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:  # pragma: no cover - plan API unavailable
-        # No stable identity -> no LRU tracking (r11 ADVICE): repeated
-        # same-plan calls would each append an entry, and evicting one
-        # unpersists the CacheManager slot shared by every newer
-        # same-plan frame still tracked — cache thrash on the exact
-        # path the LRU protects. Untracked persists are only as leaky
-        # as pre-LRU behavior, and only on this degraded branch.
-        return df.persist()
-    for i, (k, _old) in enumerate(entries):
-        if k == key:
-            entries.append(entries.pop(i))
-            return df.persist()  # no-op re-register of the same plan
-    df = df.persist()
-    entries.append((key, df))
-    while len(entries) > _PERSIST_BOUND:
-        try:
-            entries.pop(0)[1].unpersist(blocking=False)
-        except Exception:  # session shutting down — nothing to release
-            pass
-    return df
-
-
 def minhash_portable_pairs(
     df: DataFrame,
     threshold: float = 0.6,
@@ -537,13 +511,20 @@ def minhash_portable_pairs(
     filters at ``threshold``. Everything is deterministic, so the
     result — unlike MLlib's — is oracle-checkable end to end.
 
-    Scale: candidates are generated per band bucket with the same
-    anti-quadratic guard as ngram_jaccard_pairs (``max_band_df`` caps
-    members per bucket, bounding pair fan-out; a hotter bucket means
-    the band carries no dedup signal). Pair dedup across bands is one
-    aggregation; the signature re-attach is two equi-joins against the
-    (id, sig) frame — at 100 TB all shuffles are keyed by id or
-    band_key, never all-pairs.
+    Scale: each doc's signature is computed once and rides through its
+    band buckets as a struct(id, sig), so no stage reads the signature
+    frame twice and no join re-attaches it: one band_key-keyed
+    aggregation builds the buckets, pairs are emitted and scored
+    inside them, and one (id_a, id_b) aggregation collapses the copies
+    of a pair found in several bands. ``max_band_df`` is the same
+    anti-quadratic guard as ngram_jaccard_pairs' ``max_df``: it caps
+    members per bucket, bounding pair fan-out, and a hotter bucket
+    means the band carries no dedup signal (so a cluster of more than
+    ``max_band_df`` identical docs, hot in every band, emits no
+    pairs; exact dedup owns that regime). A bucket row carries at most
+    ``max_band_df`` signatures of k longs, and the pair exchange
+    carries survivors only; every shuffle is keyed by band_key or
+    pair, never all-pairs.
 
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
@@ -551,28 +532,6 @@ def minhash_portable_pairs(
         raise ValueError(f"bands={bands} must divide k={k}")
     r = k // bands
     sigs = minhash_signature_df(df, text_col=text_col, id_col=id_col, k=k, n=n)
-    # The signature frame is consumed THREE times (band explode + both
-    # pair-side re-attach joins), and its upstream is the expensive
-    # per-row text work (tokenize, shingle, k hash folds). Runtime
-    # exchange reuse is not a contract: the r11 third-decade probe
-    # measured it NOT firing at ~sf100 — the full pipeline ran 137 s
-    # while sigs-materialized-once ran 57 s (signature build itself
-    # 2.5x/decade sub-linear; the 3x recompute was the whole knee).
-    # persist(), NOT localCheckpoint (late-r11 review catch): the
-    # eager checkpoint ran the full signature job at CONSTRUCTION
-    # time, and its LogicalRDD replaced the source scans in every
-    # downstream plan — blinding the broadcast audit/CI gate to the
-    # exact minhash family it lists, and breaking the audit's
-    # "plans are built, never executed" contract. persist() is lazy,
-    # computes the narrow (id, 16 longs) frame once on first access
-    # (the three consumers then read the cache within the same job),
-    # and keeps the parquet scans visible in the explained plan.
-    # Lifecycle: CacheManager dedups by canonicalized plan, so
-    # repeated calls over the SAME corpus share one cache entry;
-    # _persist_bounded unpersists the oldest entry beyond a small
-    # per-session bound so sessions that sweep many corpora (driver
-    # sim, ramp loops) cannot accumulate unreleased caches.
-    sigs = _persist_bounded(sigs)
     band_arr = F.array(
         *[
             F.concat_ws(
@@ -585,35 +544,21 @@ def minhash_portable_pairs(
             for b in range(bands)
         ]
     )
-    banded = sigs.select("id", F.explode(band_arr).alias("band_key"))
+    # A NULL id pairs with nothing. A doc lands in each band_key at most
+    # once (the key holds the band index), so collect_list needs no set.
+    banded = sigs.filter(F.col("id").isNotNull()).select(
+        F.explode(band_arr).alias("band_key"), F.struct("id", "sig").alias("doc")
+    )
     buckets = (
         banded.groupBy("band_key")
-        .agg(F.collect_set("id").alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= max_band_df))
-    )
-    ids_sorted = F.sort_array(F.col("ids"))
-    pair_arr = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("ids") - 2),
-            lambda i: F.transform(
-                F.sequence(i + 1, F.size("ids") - 1),
-                lambda j: F.struct(
-                    F.element_at(ids_sorted, (i + 1).cast("int")).alias("id_a"),
-                    F.element_at(ids_sorted, (j + 1).cast("int")).alias("id_b"),
-                ),
-            ),
-        )
-    )
-    pairs = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
+        .agg(F.collect_list("doc").alias("docs"))
+        .filter((F.size("docs") >= 2) & (F.size("docs") <= max_band_df))
     )
     est = (
         F.aggregate(
             F.zip_with(
-                "sig_a",
-                "sig_b",
+                "p.a.sig",
+                "p.b.sig",
                 lambda x, y: F.when(x == y, 1).otherwise(0).cast("long"),
             ),
             F.lit(0).cast("long"),
@@ -621,18 +566,18 @@ def minhash_portable_pairs(
         ).cast("double")
         / F.lit(float(k))
     )
+    # Score every per-band copy of a pair, then collapse the copies:
+    # they carry the same two signatures, so equal estimates, and the
+    # collapse order changes no value (embedding_near_dup_pairs' order).
     return (
-        pairs.join(
-            sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")),
-            "id_a",
+        buckets.select(F.explode(_ordered_pairs("docs", "a", "b")).alias("p"))
+        .select(
+            F.col("p.a.id").alias("id_a"),
+            F.col("p.b.id").alias("id_b"),
+            est.alias("est_jaccard"),
         )
-        .join(
-            sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")),
-            "id_b",
-        )
-        .withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -1695,22 +1640,16 @@ def cdc_chunk_pairs(
     # collect_set dedups (id, h) repeats as part of the one aggregation
     buckets = (
         el.groupBy("h")
-        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
+        .agg(F.collect_set("id").alias("ids"))
         .filter(F.size("ids") <= max_df)
     )
     marker_arr = F.transform(
         F.col("ids"),
         lambda x: F.struct(x.alias("id_a"), F.lit(-1).cast("long").alias("id_b")),
     )
-    pair_arr = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
+    emitted = F.when(
+        F.size("ids") >= 2, F.concat(marker_arr, _ordered_pairs("ids"))
+    ).otherwise(marker_arr)
     # Sizes attach via the shared marker-window tail
     # (_pair_counts_with_sizes). The old shape here split counted into
     # sizes/pairs and re-joined with two shuffle-hash joins — which
@@ -1719,9 +1658,9 @@ def cdc_chunk_pairs(
     # 4, 11 stages -> 6, min 1.05 -> measured below; values identical,
     # oracle-pinned).
     withsizes = _pair_counts_with_sizes(
-        buckets.select(
-            F.explode(F.concat(marker_arr, pair_arr)).alias("p")
-        ).select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        buckets.select(F.explode(emitted).alias("p")).select(
+            F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b")
+        )
     )
     return (
         withsizes.filter(F.col("cnt") >= min_shared)

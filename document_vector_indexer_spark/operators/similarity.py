@@ -1,10 +1,14 @@
 """Similarity search over embedding columns (``array<float>``).
 
 Four tiers, mirroring how a 100 TB deployment would stage ANN:
-1. ``knn_brute`` — exact cosine top-k as composition of pure column
-   exprs + TakeOrderedAndProject. O(n) per query vector, fully
-   distributed, no shuffle until the final top-k merge. The baseline
-   and the correctness oracle for the approximate tiers.
+1. ``knn_brute`` — exact cosine top-k: every corpus row is scored
+   against the broadcast queries (pure column exprs, O(n) per query
+   vector, the corpus never shuffles), then ``_top_k`` ranks with a
+   ``row_number`` window after an exchange on ``query_id``. Spark's
+   partial WindowGroupLimit cuts each partition to k rows per query
+   before that exchange; a literal ``query_id`` (one query) drops the
+   partitioning, and the optimizer plans a TakeOrderedAndProject. The
+   baseline and the correctness oracle for the approximate tiers.
 2. LSH: ``knn_lsh`` is MLlib's BucketedRandomProjectionLSH (seeded
    random hyperplanes, euclidean); ``knn_lsh_pinned`` bands sign
    bits of pinned hyperplanes into (band, bucket) codes map-side.

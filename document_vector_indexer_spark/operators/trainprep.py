@@ -130,25 +130,6 @@ def pack_sequences(
     )
 
 
-def word_ngrams(words: Column, n: int) -> Column:
-    """Ordered word n-grams (array<string>) from a MATERIALIZED words
-    array; empty array when the doc has fewer than ``n`` words. Same
-    lambda-CSE contract as ``repetition_ratio_from_words``: bulk
-    callers must put an Exchange (or a multi-referenced alias) between
-    tokenization and this expression or the tokenizer re-evaluates per
-    element."""
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(words, (i + j + 1).cast("int")) for j in range(n)],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def _exploded_grams(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:

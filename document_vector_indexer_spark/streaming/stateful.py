@@ -1,5 +1,4 @@
-"""Custom stateful streaming operators (applyInPandasWithState) and the
-exactly-once foreachBatch sink pattern.
+"""Custom stateful streaming operators (applyInPandasWithState).
 
 ``running_user_totals`` keeps one tiny state row per user (count +
 value sum in integer cents) and emits the updated totals per
@@ -145,22 +144,4 @@ def running_user_totals_jvm(events: DataFrame) -> DataFrame:
             F.sum(F.rint(F.col("value") * 100).cast("long")).cast("double")
             / 100.0
         ).alias("total_value"),
-    )
-
-
-def write_each_batch_idempotent(stream_df: DataFrame, path: str, query_name: str):
-    """Exactly-once file sink via foreachBatch: every micro-batch
-    overwrites its own batch-id-named subdirectory, so a replayed batch
-    (failure/restart) rewrites the same files instead of duplicating —
-    idempotence carries the exactly-once guarantee."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
     )

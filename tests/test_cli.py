@@ -256,8 +256,11 @@ def test_cli_curate_near_dedup(spark, tmp_path, capsys):
     assert 100 in exact_ids, "near-dup should survive exact-only dedup"
 
     out_near = str(tmp_path / "cur_near")
+    spark.catalog.clearCache()
     main(["curate", src, "--output", out_near, "--dedup", "near"])
     msg = capsys.readouterr().out
+    # near dedup persists nothing: the session's cache stays empty
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     near = spark.read.parquet(out_near)
     near_ids = {r.doc_id for r in near.select("doc_id").collect()}
     n_dedup = _printed_count(msg, r"-> (\d+) after exact\+near dedup")

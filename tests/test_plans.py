@@ -477,6 +477,16 @@ def test_semantic_dedup_single_narrow_shuffle(spark):
     assert tree.count("HashAggregate") >= 2, "map-side partial agg missing"
 
 
+def test_minhash_pairs_read_signatures_once(spark):
+    """Each doc's MinHash signature rides through its band buckets: the
+    signature kernel (the one MapInPandas) runs once, no join
+    re-attaches signatures to pairs, and no cached copy feeds them."""
+    tree = _tree(_plan(spark, "q_dedup_minhash"))
+    assert tree.count("MapInPandas") == 1, tree
+    assert "Join" not in tree, tree
+    assert "InMemoryTableScan" not in tree, tree
+
+
 def test_unigram_logprob_weight_join_not_broadcast(spark):
     """The token->weight lookup must stay a shuffle join on the word
     key: a broadcast build would (a) assume the vocabulary fits one

@@ -521,6 +521,66 @@ def test_minhash_portable_rejects_bad_band_split(spark):
         minhash_portable_pairs(df, bands=5)  # 5 does not divide k=16
 
 
+def _py_minhash_pairs(docs, threshold, k=16, bands=4, n=2, max_band_df=50):
+    """Pure-Python reference for minhash_portable_pairs: docs with fewer
+    than ``n`` words or a NULL id have no signature; band keys are
+    (band, its r components); buckets of 2..max_band_df docs emit every
+    pair once; the estimate is the fraction of equal signature
+    components."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    sigs = {
+        i: _py_minhash_sig(t, k, n)
+        for i, t in docs
+        if i is not None and len(t.split()) >= n
+    }
+    r = k // bands
+    buckets = defaultdict(list)
+    for i, sig in sigs.items():
+        for b in range(bands):
+            buckets[(b, tuple(sig[b * r : (b + 1) * r]))].append(i)
+    out = {}
+    for ids in buckets.values():
+        if 2 <= len(ids) <= max_band_df:
+            for a, b in combinations(sorted(ids), 2):
+                est = sum(x == y for x, y in zip(sigs[a], sigs[b])) / k
+                if est >= threshold:
+                    out[(a, b)] = est
+    return out
+
+
+def test_minhash_portable_pairs_equal_python_reference(spark):
+    """Band keys, the ``max_band_df`` cap, the estimate and the
+    cross-band collapse, value for value against the Python reference:
+    docs 1 and 2 share every band and pair once; the four identical
+    docs 10-13 exceed ``max_band_df=3`` in every band and pair not at
+    all; docs 30-32 have fewer than n=2 words and drop out, as does the
+    NULL-id copy of doc 1; 20-25 are edits of one text that share some
+    bands."""
+    from document_vector_indexer_spark.operators.dedup import minhash_portable_pairs
+
+    words = [f"w{i}" for i in range(40)]
+    base = " ".join(words)
+    same = "every band of this text is shared by its copy in doc two"
+    rows = [(1, same), (2, same), (None, same)]
+    rows += [(10 + i, "one cluster hotter than the cap " * 3) for i in range(4)]
+    for e in range(6):  # doc 20 + e has its first 2e words replaced
+        rows.append((20 + e, " ".join(
+            [f"x{e}_{j}" for j in range(2 * e)] + words[2 * e :])))
+    rows += [(30, "solo"), (31, ""), (32, "   ")]
+    rows += [(40, base + " tail"), (41, "nothing shared with the others at all")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for threshold in (0.0, 0.5):
+        out = minhash_portable_pairs(df, threshold=threshold, max_band_df=3)
+        got = [((r.id_a, r.id_b), r.est_jaccard) for r in out.collect()]
+        want = _py_minhash_pairs(rows, threshold, max_band_df=3)
+        assert sorted(got) == sorted(want.items()), f"threshold {threshold}"
+    assert want[(1, 2)] == 1.0
+    assert any(est < 1.0 for est in want.values())
+    assert not {i for p in want for i in p} & {10, 11, 12, 13, 30, 31, 32, None}
+
+
 def test_embed_backoff_sequence_matches_reference(spark):
     """The exact backoff contract (reference index_documents.py:191):
     an unconditional sleep(min(2**attempt, 16)) after EVERY failure —

@@ -1,6 +1,5 @@
-"""applyInPandasWithState + foreachBatch sink tests: custom stateful
-totals must equal the batch aggregate, and the foreachBatch sink must
-be idempotent under replay."""
+"""applyInPandasWithState tests: custom stateful totals must equal the
+batch aggregate."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from document_vector_indexer_spark.streaming import windows as W
 from document_vector_indexer_spark.streaming.stateful import (
     running_user_totals,
     running_user_totals_jvm,
-    write_each_batch_idempotent,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -192,19 +190,3 @@ def test_stateful_idle_timeout_evicts_and_restarts():
     st.hasTimedOut = False
     out2 = list(upd((7,), iter([pd.DataFrame({"value": [0.75]})]), st))
     assert st._v == (1, 75) and out2[0]["n_events"].iloc[0] == 1
-
-
-def test_foreach_batch_sink_idempotent(spark, tmp_path):
-    path = str(tmp_path / "sink")
-    counts = W.tumbling_counts(W.read_events_stream(spark, SF))
-    q = write_each_batch_idempotent(counts, path, "t_febatch")
-    q.awaitTermination()
-    first = spark.read.parquet(path)
-    n1 = first.count()
-    assert n1 > 0
-    # replay the same micro-batch payload manually: the sink must
-    # overwrite, not append
-    batch_df = W.tumbling_counts(load_table(spark, SF, "events"))
-    batch_df.write.mode("overwrite").parquet(f"{path}/batch_id=0")
-    n2 = spark.read.parquet(path).count()
-    assert n2 == n1

@@ -273,17 +273,6 @@ def test_contamination_hash_semantics_under_planted_collision(spark):
     assert by_string == {}          # string identity sees no overlap
 
 
-def test_word_ngrams_edge_sizes(spark):
-    from document_vector_indexer_spark.operators.trainprep import word_ngrams
-    from document_vector_indexer_spark.functions import text as TX
-
-    df = _docs(spark, [(1, "a b c"), (2, "a b"), (3, "")]).select(
-        "doc_id", TX.word_tokens(F.col("text")).alias("w")
-    )
-    got = {r.doc_id: r.g for r in df.select("doc_id", word_ngrams(F.col("w"), 2).alias("g")).collect()}
-    assert got == {1: ["a b", "b c"], 2: ["a b"], 3: []}
-
-
 # --- source mixing ---------------------------------------------------------
 
 

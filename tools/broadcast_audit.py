@@ -28,10 +28,10 @@ operators (connected_components inside q_dedup_cluster/apply/
 golden_record) inherently EXECUTE during plan construction — their
 loop must materialize each round to test convergence, and the
 resulting LogicalRDD hides the loop's interior from this audit. Their
-upstream pair-generation subtrees are audited through the
-non-iterative q_dedup_near/q_dedup_minhash keys (kept checkpoint-free
-for exactly this reason — late r11: an eager localCheckpoint there
-was silently blinding this audit to the whole minhash family).
+upstream pair generation is the plan of the non-iterative
+q_dedup_near/q_dedup_minhash keys, which holds no join at all (each
+MinHash signature rides through its band buckets), so it has no
+broadcast surface to audit.
 
 Usage: python tools/broadcast_audit.py [sf_dir] [--raw]
        (default /root/repo/.scale/sf1, ingested to a temp dir first
@@ -214,9 +214,9 @@ AUDIT_EXCLUDED: dict[str, str] = {
     "q_dedup_cluster": (
         "connected-components loop executes during construction; the "
         "loop interior is LogicalRDD — invisible to any plan audit by "
-        "construction. Its pair-generation exchange (the corpus-sided "
-        "part) is audited via q_dedup_near/q_dedup_minhash, kept "
-        "checkpoint-free for exactly this purpose (see module header)."
+        "construction. Its pair generation, visible in "
+        "q_dedup_near/q_dedup_minhash, plans no join (signatures ride "
+        "through the band buckets), so it has no broadcast surface."
     ),
     "q_pagerank": (
         "iterative rank loop materializes each round (LogicalRDD "
