@@ -15,7 +15,12 @@ Tiers (SURVEY.md §2B vector ops + north-star extensions):
 - minhash_lsh   — MLlib MinHashLSH approx similarity join, kept as the
                   rows-only recall reference for the portable tier
 - embedding_cosine — near-dup by embedding similarity with sign-LSH
-                  blocking; ``semantic_dedup_survivors`` for clusters
+                  blocking (``embedding_lsh_blocks``: one numpy
+                  projection kernel per Arrow batch);
+                  ``semantic_dedup_survivors`` for clusters
+- substring     — ``dup_substring_stats``: per-document share of k-word
+                  windows that also occur in another document, hashed
+                  by one vectorized char-fold kernel per Arrow batch
 - cdc_chunk     — passage reuse from shared content-defined chunks
 
 Everything except minhash_lsh is deterministic and oracle-checkable.
@@ -472,7 +477,8 @@ def minhash_signature_df(
     r12: the shingle hashes ride the same vectorized prefix-hash
     kernel as dup_substring_stats (``_gram_hashes_arrow`` with k=n —
     an n-word shingle IS a stride-1 n-gram; exact modular equality
-    with the expr fold, covered by the kernel's parity test at k=2).
+    with the per-character fold, covered by the kernel's Python
+    reference test at k=2).
 
     Returns (id, sig: array<long> of length k).
     """
@@ -681,7 +687,7 @@ def lsh_hyperplanes(dim: int, bands: int, bits: int, seed: int = 7):
     """Seeded ±1 random-hyperplane matrix, shape (bands, bits, dim).
     ±1 components keep the projection dot product an exact sequence of
     double adds/subtracts — bit-identical in any engine — and inline as
-    clean literals in both the Spark plan and the DuckDB oracle SQL."""
+    clean literals in the DuckDB oracle SQL."""
     import numpy as np
 
     rng = np.random.RandomState(seed)
@@ -691,14 +697,13 @@ def lsh_hyperplanes(dim: int, bands: int, bits: int, seed: int = 7):
 def _lsh_pack_codes(X, S, bands: int, bits: int):
     """Vectorized sign-LSH codes for a (n, dim) float64 batch against
     the (bands*bits, dim) ±1 sign matrix ``S`` — BIT-IDENTICAL to the
-    interpreted expression fold and to the DuckDB oracle's add/subtract
-    chains, by construction:
+    DuckDB oracle's add/subtract chains, by construction:
 
     the accumulation runs as ``dim`` vectorized steps IN ARRAY-INDEX
     ORDER (``acc += X[:, i] * S[:, i]``), so every (row, plane) cell
     sees exactly the left-to-right sequence ``((0.0 ± x_0) ± x_1) ...``
-    of IEEE double additions that ``F.aggregate``'s fold and the
-    oracle's literal ``0.0 + e[1] - e[2] ...`` chain perform — the
+    of IEEE double additions that the oracle's literal
+    ``0.0 + e[1] - e[2] ...`` chain performs — the
     multiply by ±1.0 is exact (a sign flip), each ``+=`` is one IEEE
     add per cell, and numpy does not fuse or reorder separate ufunc
     calls. A single BLAS matmul would be ~dim/4x fewer instructions but
@@ -717,10 +722,9 @@ def _lsh_pack_codes(X, S, bands: int, bits: int):
         acc += X[:, i, None] * S[:, i]
     # NaN semantics must mirror the JVM comparison, not IEEE: Spark
     # (and the DuckDB oracle, Postgres-style) order NaN GREATER than
-    # every value, so a NaN projection sets the bit; numpy's NaN > 0
-    # is False, which silently flipped every bit of a NaN-poisoned row
-    # (r11 review catch — a vector with one NaN component lands in
-    # bucket 2^bits-1 of every band on the expr path, bucket 0 here).
+    # every value, so a NaN projection sets the bit and a vector with
+    # one NaN component lands in bucket 2^bits-1 of every band.
+    # numpy's NaN > 0 is False, hence the explicit isnan.
     hit = (acc > 0.0) | np.isnan(acc)
     weights = 1 << np.arange(bits, dtype=np.int64)
     return (hit.reshape(n, bands, bits) * weights).sum(axis=2).astype(np.int32)
@@ -734,7 +738,6 @@ def embedding_lsh_blocks(
     bands: int = 6,
     bits: int = 4,
     seed: int = 7,
-    impl: str = "arrow",
     carry_vec: bool = True,
 ) -> DataFrame:
     """Sign-LSH banding of an embedding column: one output row per
@@ -748,67 +751,38 @@ def embedding_lsh_blocks(
     the test corpus, web scale wants 16-20. ``bands`` trades recall for
     candidate volume (union over bands).
 
-    ``impl`` (r11): ``"arrow"`` (default) computes all bands*bits
-    projections per row in ONE vectorized numpy pass inside
-    ``mapInPandas`` — the constant-factor lever the r10 second-decade
-    sweep named (the per-bit interpreted HOF folds were bits·bands·dim
-    work per row with bits ~ log n; measured 147–187 s per key at
-    ~sf10). Bit-identical to the expression path by the index-order
-    accumulation argument in ``_lsh_pack_codes`` (verified by the
-    pinned ``q_lsh_buckets`` DuckDB oracle and an expr-vs-arrow parity
-    test on the real fixtures). ``"expr"`` keeps the pure-JVM
-    column-expression path (no Python boundary; the parity reference).
-    ``carry_vec=False`` drops the vector from the output (callers that
-    only need (id, band, bucket) — e.g. semantic dedup — then shuffle
-    narrow rows).
+    All bands*bits projections of a row are computed in ONE
+    vectorized numpy pass inside ``mapInPandas`` (per-bit interpreted
+    column folds are bits·bands·dim work per row with bits ~ log n;
+    measured 147–187 s per key at ~sf10). Bit-identical to the pinned
+    ``q_lsh_buckets`` DuckDB oracle by the index-order accumulation
+    argument in ``_lsh_pack_codes``. A bit is set iff its projection
+    is > 0 under the JVM ordering, where NaN is greater than every
+    value; a vector that is NULL, has a NULL element or is not ``dim``
+    long lands in bucket 0 of every band (the oracle's NULL-propagating
+    sum). ``carry_vec=False`` drops the vector from the output
+    (callers that only need (id, band, bucket) — e.g. semantic dedup —
+    then shuffle narrow rows).
     """
     from pyspark.sql import types as T
 
-    # Explicit range check (r11 ADVICE): the arrow kernel's int32 pack
-    # would silently WRAP at bits >= 32 while the expr path's ANSI int
-    # cast raises — a divergence only explicit callers can reach
-    # (``recommended_lsh_bits`` caps at 24), so fail both paths loudly.
+    # The kernel's int32 pack would silently WRAP at bits >= 32; only
+    # explicit callers can reach that (``recommended_lsh_bits`` caps
+    # at 24), so reject it loudly.
     if isinstance(bits, bool) or not isinstance(bits, int) or not 1 <= bits <= 31:
         raise ValueError(f"bits must be an int in [1, 31], got {bits!r}")
     if isinstance(bands, bool) or not isinstance(bands, int) or bands < 1:
         raise ValueError(f"bands must be a positive int, got {bands!r}")
 
     H = lsh_hyperplanes(dim, bands, bits, seed)
-    if impl == "expr":
-        band_structs = []
-        for b in range(bands):
-            bucket: Column | None = None
-            for j in range(bits):
-                plane = F.array(*[F.lit(float(v)) for v in H[b][j]])
-                bit = F.when(
-                    V.dot(F.col(vec_col), plane) > 0, F.lit(1 << j)
-                ).otherwise(F.lit(0))
-                bucket = bit if bucket is None else bucket + bit
-            band_structs.append(
-                F.struct(F.lit(b).alias("band"), bucket.cast("int").alias("bucket"))
-            )
-        out = df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.explode(F.array(*band_structs)).alias("bb"),
-        ).select(
-            id_col,
-            vec_col,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-        return out if carry_vec else out.drop(vec_col)
-    if impl != "arrow":
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
-
     base = df.select(F.col(id_col), F.col(vec_col))
     # Element-level NULLs (a null FLOAT inside a non-null vector) are
     # indistinguishable from real NaN after the Arrow->pandas hop, but
-    # the two diverge on the expr path: a NULL element NULL-propagates
-    # through the fold -> no bit set -> bucket 0, while a real NaN
-    # projection compares GREATER than 0 JVM-side -> every bit set.
-    # Flag them JVM-side before the boundary (r11 ADVICE parity gap);
-    # skipped entirely when the schema proves no element nulls exist.
+    # the two must diverge: a NULL element NULL-propagates through the
+    # projection sum -> no bit set -> bucket 0, while a real NaN
+    # projection compares GREATER than 0 -> every bit set. Flag them
+    # JVM-side before the boundary; skipped entirely when the schema
+    # proves no element nulls exist.
     vec_type = base.schema[vec_col].dataType
     flag_nulls = bool(getattr(vec_type, "containsNull", False))
     if flag_nulls:
@@ -850,11 +824,11 @@ def embedding_lsh_blocks(
                     X.astype(np.float64, copy=False), S, bands, bits
                 )
                 if nullelem.any():
-                    codes[nullelem] = 0  # expr parity: NULL element -> bucket 0
+                    codes[nullelem] = 0  # NULL element -> bucket 0
             else:
-                # Ragged/null rows: the expression path's fold over a
-                # zip_with length mismatch yields NULL -> no bit set ->
-                # bucket 0 in every band; mirror that exactly.
+                # Ragged/null rows: a projection over a NULL vector or a
+                # length mismatch is NULL -> no bit set -> bucket 0 in
+                # every band.
                 codes = np.zeros((n, bands), dtype=np.int32)
                 ok = np.fromiter(
                     (v is not None and len(v) == dim for v in vals),
@@ -1355,7 +1329,7 @@ def _gram_hash_arrays(words_col, k: int, mod: int = _CHAR_MOD) -> list:
     for row, w in enumerate(words_col):
         m = 0 if w is None else len(w)
         if m < k:
-            # mirror the expr path's otherwise-empty-array
+            # fewer than k words: no window
             out_hashes.append(np.empty(0, np.int64))
             continue
         lens = np.fromiter((len(x) for x in w), dtype=np.int64, count=m)
@@ -1381,7 +1355,7 @@ def _gram_hashes_arrow(
     evaluation — the measured q_dedup_substrings wall at every scale.
 
     Input must carry (id_col, _words array<string>). Returns
-    (id_col, _gh long) exploded rows, same as the expr path.
+    (id_col, _gh long) exploded rows, one per window.
     """
     from pyspark.sql import types as T
 
@@ -1408,7 +1382,6 @@ def dup_substring_stats(
     k: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Passage-level duplicated-substring detection (the exact-substring
     dedup signal of Lee et al., "Deduplicating Training Data Makes
@@ -1424,52 +1397,28 @@ def dup_substring_stats(
     Scale shape (100 TB): every window becomes ONE (hash, id) row —
     stride-1 k-grams are ~n_tokens rows per document, the same fan-out
     class as MinHash shingling, and unlike pair-generating dedup there
-    is no quadratic term: the per-hash aggregate carries counts, never
-    pairs. Three narrow shuffles total — (hash) for the distinct-doc
-    count, (hash) again for the join back (shuffle-hash pinned so
-    Catalyst never broadcasts a corpus-sized vocabulary; same rule as
-    unigram_logprob), (id) for the per-document rollup. The hash is
-    the portable char-fold (pure integer arithmetic), so a SQL oracle
-    reproduces it value-for-value.
+    is no quadratic term: the per-hash window carries counts, never
+    pairs. Three narrow shuffles total — (hash) for the window that
+    flags windows seen in another document, (id) for the per-document
+    rollup, and (id) of the input ids for the merge-pinned join that
+    gives every document a row. The hash is the portable char-fold
+    (pure integer arithmetic), so a SQL oracle reproduces it
+    value-for-value.
 
-    ``impl`` (r12): ``"arrow"`` (default) computes every gram hash in
-    one vectorized prefix-hash pass per Arrow batch
-    (``_gram_hashes_arrow`` — exact modular-arithmetic equality with
-    the fold, pinned by an expr-vs-arrow parity test on real fixtures
-    plus unicode/edge rows); ``"expr"`` keeps the pure-JVM explode +
-    interpreted char fold as the parity reference. The hash is the
-    operator's measured wall (char-fold CPU ∝ corpus chars × k —
-    468 s at ~sf100 on the expr path), which is exactly the r11
-    LSH-kernel situation transplanted to integers.
+    Every gram hash is computed in one vectorized prefix-hash pass per
+    Arrow batch (``_gram_hashes_arrow`` — exact modular-arithmetic
+    equality with the per-character fold, pinned by the q_dedup_substrings
+    DuckDB oracle and a per-document Python reference on unicode and
+    edge rows). The hash is the operator's measured wall: char-fold
+    CPU ∝ corpus chars × k, 468 s at ~sf100 as an interpreted
+    per-character column fold.
     """
     from document_vector_indexer_spark.functions import text as TX
 
     words = df.select(
         F.col(id_col), TX.word_tokens(F.col(text_col)).alias("_words")
     )
-    if impl == "arrow":
-        exploded = _gram_hashes_arrow(words, k, id_col)
-    elif impl == "expr":
-        n = F.size("_words")
-        # Build gram STRINGS first and hash only after the explode
-        # materializes them as a plain column: inlining the
-        # concat_ws(slice) expression into _word_hash's per-character
-        # fold lambda re-evaluates the whole slice+concat once per
-        # character (the documented lambda-boundary trap, see the
-        # module notes above) — O(len²) CPU in this operator's hot
-        # kernel.
-        grams = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_words"), i, k)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        exploded = words.select(
-            F.col(id_col), F.explode(grams).alias("_gram")
-        ).select(F.col(id_col), _word_hash(F.col("_gram")).alias("_gh"))
-    else:
-        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
+    exploded = _gram_hashes_arrow(words, k, id_col)
     # "appears in >1 distinct doc" as min(id) != max(id) over a WINDOW
     # on the gram hash — values identical to countDistinct(id) > 1 for
     # non-null ids, but the plan is ONE exchange + one sort of the

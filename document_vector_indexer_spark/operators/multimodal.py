@@ -1,19 +1,19 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` + typed
-metadata, with decode / feature-extract / resize / frame-sample as
-Arrow-batched ``mapInPandas`` operators.
+metadata, with image feature extraction, image stats and video frame
+sampling as Arrow-batched ``mapInPandas`` operators.
 
-The container ships no image/audio libraries. Image kernels have a
-REAL in-container tier anyway: ``decode_backend="stdlib"`` decodes
-PNG/BMP/PNM from the public specs with nothing but ``zlib``/``struct``
-(``sources.miniimage`` — same tier policy as the stdlib PDF parser,
-never silent garbage). ``decode_backend="fake"`` (default) runs a
-deterministic pure-Python stand-in whose outputs are pinned by
-tests/golden/multimodal_golden.json; ``"pil"``/``"ffmpeg"`` raise
-``NotImplementedError`` until the real libs are present (video has no
-stdlib tier — codecs are not stdlib-implementable). Everything
-Spark-side — schema, partition sizing, UDF signatures, batch shapes,
-null/corrupt-row handling — is identical across backends and tested
-(tests/test_multimodal.py, incl. real-bytes golden drop-in).
+Image kernels have two decode tiers, chosen by ``backend``:
+``"stdlib"`` decodes PNG/BMP/PNM from the public specs with nothing
+but ``zlib``/``struct`` (``sources.miniimage`` — same tier policy as
+the stdlib PDF parser, never silent garbage); ``"fake"`` (default)
+runs a deterministic pure-Python stand-in at the metadata dims. Any
+other value raises ``ValueError``. ``frame_sample`` has no decode tier
+(video codecs are not stdlib-implementable): its frames are content
+digests. The fake outputs over a fixed literal input are pinned by
+tests/golden/multimodal_golden.json. Everything Spark-side — schema,
+partition sizing, UDF signatures, batch shapes, null/corrupt-row
+handling — is identical across tiers and tested
+(tests/test_multimodal.py, tests/test_miniimage.py).
 
 Scale design: media bytes ride in their own column so column pruning
 skips them unless a kernel needs pixels; operators are mapInPandas
@@ -46,17 +46,12 @@ MEDIA_SCHEMA = T.StructType(
     ]
 )
 
-Backend = Literal["fake", "stdlib", "pil", "ffmpeg"]
+Backend = Literal["fake", "stdlib"]
 
 
 def _require_backend(backend: Backend) -> None:
-    if backend in ("fake", "stdlib"):
-        return
-    raise NotImplementedError(
-        f"decode backend {backend!r} needs media libraries not present in "
-        "this environment; the Spark plumbing is identical — plug the real "
-        "kernel into the same mapInPandas signature."
-    )
+    if backend not in ("fake", "stdlib"):
+        raise ValueError(f"backend must be 'fake' or 'stdlib', got {backend!r}")
 
 
 def _fake_pixels(content: bytes, w: int, h: int) -> list[int]:
@@ -201,72 +196,13 @@ def image_stats(df: DataFrame, backend: Backend = "fake") -> DataFrame:
     return df.filter(F.col("kind") == "image").mapInPandas(run, schema=out_schema)
 
 
-def image_resize(
-    df: DataFrame,
-    target: tuple[int, int] = (4, 4),
-    backend: Backend = "fake",
-) -> DataFrame:
-    """Resize images to ``target`` (mean-pooled grayscale with the fake
-    kernel; a real backend plugs PIL's resample into the same
-    mapInPandas signature). Emits one row per image with the resized
-    pixel array + new dims."""
-    import pandas as pd
-
-    _require_backend(backend)
-    tw, th = target
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pixels", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.content is None or len(r.content) == 0:
-                    rows.append((r.media_id, tw, th, None))
-                    continue
-                decoded = _decode_pixels(
-                    backend, bytes(r.content), int(r.width or tw), int(r.height or th)
-                )
-                if decoded is None:
-                    rows.append((r.media_id, tw, th, None))
-                    continue
-                w, h, px = decoded
-                resized = []
-                for ty in range(th):
-                    for tx in range(tw):
-                        xs = range(tx * w // tw, max(tx * w // tw + 1, (tx + 1) * w // tw))
-                        ys = range(ty * h // th, max(ty * h // th + 1, (ty + 1) * h // th))
-                        vals = [px[y * w + x] for y in ys for x in xs]
-                        resized.append(float(sum(vals)) / len(vals))
-                rows.append((r.media_id, tw, th, resized))
-            yield pd.DataFrame(rows, columns=["media_id", "width", "height", "pixels"])
-
-    return df.filter(F.col("kind") == "image").mapInPandas(run, schema=out_schema)
-
-
-def frame_sample(
-    df: DataFrame,
-    every_ms: int = 1000,
-    backend: Backend = "fake",
-) -> DataFrame:
+def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Sample video frames every ``every_ms``: one output row per
     sampled frame with a content digest (stand-in for the decoded
     frame). Fan-out happens executor-side inside the UDF — the planner
     never sees per-frame rows until after the map."""
     import pandas as pd
 
-    if backend == "stdlib":  # no public-spec stdlib video decode exists
-        raise NotImplementedError(
-            "frame_sample has no stdlib decode tier (video codecs are not "
-            "stdlib-implementable); use backend='fake' or 'ffmpeg'."
-        )
-    _require_backend(backend)
     out_schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -293,13 +229,3 @@ def frame_sample(
 
     return df.filter(F.col("kind") == "video").mapInPandas(run, schema=out_schema)
 
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Per-kind inventory aggregate (counts, blob bytes, durations)."""
-    return df.groupBy("kind").agg(
-        F.count("*").alias("n_items"),
-        F.sum(F.coalesce(F.octet_length("content"), F.lit(0))).cast("long").alias(
-            "total_bytes"
-        ),
-        F.max("duration_ms").alias("max_duration_ms"),
-    )

@@ -221,21 +221,6 @@ def read_events_stream(
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
-) -> None:
-    """Drive a streaming DataFrame to completion over the available
-    files (availableNow) into an in-memory table named ``query_name``."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def dedup_within_watermark(
     events: DataFrame, watermark: str = "1 hour", key_cols: tuple[str, ...] = ("event_id",)
 ) -> DataFrame:

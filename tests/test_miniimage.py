@@ -263,18 +263,6 @@ def test_stdlib_backend_image_features(spark):
     assert got[6].thumbnail == pytest.approx(pool(pnm_px, 6, 4, 4, 4))
 
 
-def test_stdlib_backend_resize(spark):
-    df = spark.createDataFrame(real_image_rows(), MM.MEDIA_SCHEMA)
-    got = {
-        r.media_id: r
-        for r in MM.image_resize(df, target=(2, 2), backend="stdlib").collect()
-    }
-    png_px = [(x * 16) % 256 for x in range(16 * 12)]
-    assert got[1].pixels == pytest.approx(pool(png_px, 16, 12, 2, 2))
-    assert (got[1].width, got[1].height) == (2, 2)
-    assert got[5].pixels is None  # corrupt -> null row, same schema
-
-
 def test_stdlib_backend_schema_identical_to_fake(spark):
     """The drop-in rule: backend changes VALUES only, never schema."""
     df = spark.createDataFrame(real_image_rows(), MM.MEDIA_SCHEMA)
@@ -283,8 +271,8 @@ def test_stdlib_backend_schema_identical_to_fake(spark):
         == MM.image_features(df, backend="fake").schema
     )
     assert (
-        MM.image_resize(df, backend="stdlib").schema
-        == MM.image_resize(df, backend="fake").schema
+        MM.image_stats(df, backend="stdlib").schema
+        == MM.image_stats(df, backend="fake").schema
     )
 
 
@@ -301,12 +289,6 @@ def test_stdlib_batch_shape_independence(spark):
         else:
             spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     assert [tuple(r) for r in one] == [tuple(r) for r in small]
-
-
-def test_stdlib_video_still_raises(spark):
-    df = spark.createDataFrame(real_image_rows(), MM.MEDIA_SCHEMA)
-    with pytest.raises(NotImplementedError):
-        MM.frame_sample(df, backend="stdlib")
 
 
 def test_pnm_crlf_after_maxval_rejected():

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: schema, batch shapes, null/corrupt rows,
-deterministic fake kernels, and stubbed real backends (FIXTURES.md has
+deterministic fake kernels, and backend validation (FIXTURES.md has
 no binary tables, so media rows are synthesized from document text)."""
 
 from __future__ import annotations
@@ -53,28 +53,14 @@ def test_frame_sample_fanout(spark, media_df):
     assert set(pdf.frame_idx.unique()) == {0, 1, 2, 3}
 
 
-def test_image_resize(spark, media_df):
-    out = MM.image_resize(media_df, target=(4, 4)).collect()
-    assert out
-    for r in out:
-        assert (r.width, r.height) == (4, 4)
-        if r.pixels is not None:
-            assert len(r.pixels) == 16
-            assert all(0.0 <= p <= 255.0 for p in r.pixels)
-
-
-def test_media_stats_per_kind(spark, media_df):
-    got = {r.kind: r for r in MM.media_stats(media_df).collect()}
-    assert set(got) == {"image", "video", "audio"}
-    assert all(r.n_items > 0 for r in got.values())
-    assert got["video"].max_duration_ms == 3500
-
-
-def test_real_backends_are_stubbed(spark, media_df):
-    with pytest.raises(NotImplementedError):
-        MM.image_features(media_df, backend="pil")
-    with pytest.raises(NotImplementedError):
-        MM.frame_sample(media_df, backend="ffmpeg")
+def test_unknown_backend_rejected(spark, media_df):
+    """A backend outside the two tiers — a library name or a typo —
+    is a caller error naming the accepted values, raised before any
+    plan is built."""
+    for op in (MM.image_features, MM.image_stats):
+        for bad in ("pil", "ffmpeg", "stdlb"):
+            with pytest.raises(ValueError, match="'fake' or 'stdlib'"):
+                op(media_df, backend=bad)
 
 
 def test_corrupt_rows_do_not_fail_job(spark, media_df):
@@ -89,15 +75,17 @@ def test_corrupt_rows_do_not_fail_job(spark, media_df):
 # tests/golden/multimodal_golden.json. A future real decode backend
 # (multimodal.py _require_backend) must keep the mapInPandas signature,
 # output schema, null/corrupt-row rules, and batch-shape independence;
-# only pixel VALUES may change — regenerated deliberately via
-# tools/gen_multimodal_golden.py in its own commit.
+# only pixel VALUES may change. If a kernel ever changes on purpose,
+# regenerate the golden in its own commit by writing
+# ``json.dump(run_golden_ops(spark, golden_input_rows()), f, indent=1,
+# sort_keys=True)`` to GOLDEN_PATH from a get_spark session.
 
 GOLDEN_PATH = __file__.rsplit("/", 1)[0] + "/golden/multimodal_golden.json"
 
 
 def golden_input_rows():
     """Pinned literal media rows: every kind, a null-content image, an
-    empty-content image, mixed dims. Shared with the generator tool."""
+    empty-content image, mixed dims."""
     return [
         (1, "image", b"alpha-image-bytes" * 4, "image/x-fake", 16, 12, None),
         (2, "image", b"beta", "image/x-fake", 8, 8, None),
@@ -110,10 +98,10 @@ def golden_input_rows():
 
 
 def run_golden_ops(spark, rows):
-    """The three kernel operators + stats over the pinned input, as
-    plain JSON-able dicts (floats kept exact: double arithmetic is
-    deterministic here and JSON round-trips shortest-repr doubles).
-    Shared with tools/gen_multimodal_golden.py."""
+    """The fake image-feature and frame-sample kernels over the pinned
+    input, as plain JSON-able dicts (floats kept exact: double
+    arithmetic is deterministic here and JSON round-trips shortest-repr
+    doubles)."""
     df = spark.createDataFrame(rows, MM.MEDIA_SCHEMA)
     feats = [
         {
@@ -123,15 +111,6 @@ def run_golden_ops(spark, rows):
             "mean_intensity": r.mean_intensity,
         }
         for r in MM.image_features(df, thumb=(4, 4)).orderBy("media_id").collect()
-    ]
-    resized = [
-        {
-            "media_id": r.media_id,
-            "width": r.width,
-            "height": r.height,
-            "pixels": list(r.pixels) if r.pixels is not None else None,
-        }
-        for r in MM.image_resize(df, target=(2, 2)).orderBy("media_id").collect()
     ]
     frames = [
         {
@@ -144,15 +123,9 @@ def run_golden_ops(spark, rows):
         .orderBy("media_id", "frame_idx")
         .collect()
     ]
-    stats = [
-        {k: getattr(r, k) for k in r.__fields__}
-        for r in MM.media_stats(df).orderBy("kind").collect()
-    ]
     return {
         "image_features_4x4": feats,
-        "image_resize_2x2": resized,
         "frame_sample_1000ms": frames,
-        "media_stats": stats,
     }
 
 
@@ -199,15 +172,6 @@ def test_golden_output_schemas_pinned(spark):
         ("n_bytes", "bigint"),
         ("thumbnail", "array<float>"),
         ("mean_intensity", "double"),
-    ]
-    assert [
-        (f.name, f.dataType.simpleString())
-        for f in MM.image_resize(df).schema.fields
-    ] == [
-        ("media_id", "bigint"),
-        ("width", "int"),
-        ("height", "int"),
-        ("pixels", "array<float>"),
     ]
     assert [
         (f.name, f.dataType.simpleString())

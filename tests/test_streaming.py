@@ -5,11 +5,27 @@ plus watermark/stateful-dedup smoke checks (SURVEY.md §5.2.5)."""
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import DataFrame
 
 from document_vector_indexer_spark.io import load_table
 from document_vector_indexer_spark.streaming import windows as W
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def run_stream_to_memory(
+    stream_df: DataFrame, query_name: str, output_mode: str = "complete"
+) -> None:
+    """Drive a streaming DataFrame to completion over the available
+    files (availableNow) into an in-memory table named ``query_name``."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(query_name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -20,7 +36,7 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 def test_tumbling_batch_stream_parity(spark):
     batch = W.tumbling_counts(load_table(spark, SF_DIR, "events")).toPandas()
     stream = W.tumbling_counts(W.read_events_stream(spark, SF_DIR))
-    W.run_stream_to_memory(stream, "t_tumbling", output_mode="complete")
+    run_stream_to_memory(stream, "t_tumbling", output_mode="complete")
     got = spark.sql("SELECT * FROM t_tumbling").toPandas()
     pd.testing.assert_frame_equal(
         _normalize(got), _normalize(batch), check_dtype=False
@@ -32,7 +48,7 @@ def test_session_batch_stream_parity(spark):
     stream = W.session_aggregates(
         W.read_events_stream(spark, SF_DIR).withWatermark("ts", "1 hour")
     )
-    W.run_stream_to_memory(stream, "t_session", output_mode="complete")
+    run_stream_to_memory(stream, "t_session", output_mode="complete")
     got = spark.sql("SELECT * FROM t_session").toPandas()
     pd.testing.assert_frame_equal(
         _normalize(got), _normalize(batch), check_dtype=False
@@ -41,7 +57,7 @@ def test_session_batch_stream_parity(spark):
 
 def test_watermark_append_finalizes_windows(spark):
     stream = W.tumbling_with_watermark(W.read_events_stream(spark, SF_DIR))
-    W.run_stream_to_memory(stream, "t_watermark", output_mode="append")
+    run_stream_to_memory(stream, "t_watermark", output_mode="append")
     got = spark.sql("SELECT * FROM t_watermark").toPandas()
     # append mode only emits windows the watermark has closed; with one
     # availableNow pass the final (max-ts) window is still open.
@@ -58,7 +74,7 @@ def test_watermark_append_finalizes_windows(spark):
 def test_dedup_within_watermark(spark):
     ev = W.read_events_stream(spark, SF_DIR)
     deduped = W.dedup_within_watermark(ev, watermark="2 hours")
-    W.run_stream_to_memory(
+    run_stream_to_memory(
         deduped.groupBy().count(), "t_dedup", output_mode="complete"
     )
     got = spark.sql("SELECT * FROM t_dedup").toPandas()
@@ -93,7 +109,7 @@ def test_interval_join_batch_stream_parity(spark):
         F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("c"),
         F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("p"),
     )
-    W.run_stream_to_memory(joined, "t_interval_join", output_mode="append")
+    run_stream_to_memory(joined, "t_interval_join", output_mode="append")
     got = spark.sql("SELECT * FROM t_interval_join").toPandas()
     assert len(got) > 0, "stream-stream join emitted nothing"
     pd.testing.assert_frame_equal(
@@ -278,7 +294,7 @@ def test_watermark_drops_late_rows_tumbling(spark, tmp_path, ntz):
         stream = W.tumbling_with_watermark(
             W.read_events_stream(spark, sf, max_files_per_trigger=1)
         )
-        W.run_stream_to_memory(stream, name, output_mode="append")
+        run_stream_to_memory(stream, name, output_mode="append")
         got = spark.sql(f"SELECT * FROM {name}").toPandas()
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)
@@ -308,7 +324,7 @@ def test_watermark_drops_late_rows_session(spark, tmp_path, ntz):
                 spark, sf, max_files_per_trigger=1
             ).withWatermark("ts", "10 minutes")
         )
-        W.run_stream_to_memory(stream, name, output_mode="append")
+        run_stream_to_memory(stream, name, output_mode="append")
         got = spark.sql(f"SELECT * FROM {name}").toPandas()
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev_tz)

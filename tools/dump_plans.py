@@ -6,6 +6,7 @@ dims broadcast, top-k avoids global sorts, etc."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -294,7 +295,13 @@ def main() -> None:
         for name, note in INGEST_LAYOUT.items():
             df = specs[name].fn(spark, ingest_dir)
             plan = df._jdf.queryExecution().explainString(mode)
-            tree = plan.split("\n\n")[0]
+            # the bucketed table is named after its (temporary) location;
+            # normalize it so two dumps of the same code are identical
+            tree = re.sub(
+                r"events_by_user_[0-9a-f]{10}\b",
+                "events_by_user_<loc>",
+                plan.split("\n\n")[0],
+            )
             n_ex = tree.count("Exchange")
             out.append(
                 f"## {name} (ingest layout)\n\n*{note} — {n_ex} Exchange(s)*\n"
