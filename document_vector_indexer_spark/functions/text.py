@@ -169,6 +169,28 @@ def word_tokens(col: Column | str) -> Column:
     return F.filter(F.split(strip(c), f"[{PY_WS}]+"), lambda w: w != "")
 
 
+M31 = 2147483647  # 2^31 - 1, the portable-hash modulus; keeps the fold in long range
+
+
+def char_fold(s: Column, mod: int) -> Column:
+    """Portable char-fold hash of a string column:
+    ``fold(chars, 0, (a, c) -> (a*131 + ascii(c)) % mod)``. Pure
+    integer arithmetic, reproducible in any engine (the oracle SQL
+    mirrors it), unlike murmur-based builtins. Two moduli are in use:
+    ``M31`` for the dedup and sampling hashes, 1e9+7 for the CDC word
+    codes (``chunking.CDC_MOD``).
+
+    Folds over ``split(s, '')``: a per-char ``substring(s, i, 1)``
+    re-seeks the UTF8 string from the start (O(i) per char, quadratic
+    per string). ``ascii(c)`` is the code point either way, so the
+    values are the same."""
+    return F.aggregate(
+        F.split(s, ""),
+        F.lit(0).cast("long"),
+        lambda a, c: (a * 131 + F.ascii(c)) % F.lit(mod).cast("long"),
+    )
+
+
 def token_count_ws(col: Column | str) -> Column:
     """Whitespace token count (long)."""
     return F.size(word_tokens(col)).cast("long")

@@ -94,34 +94,13 @@ def chunk_documents(
 CDC_WINDOW = 4
 CDC_DIVISOR = 64
 CDC_BASE = 257
+# Word codes are the full char fold (TX.char_fold) mod CDC_MOD, in
+# lockstep with textops._SQL_CDC_CHUNKS and the tests' _py_cdc_cuts.
+# The earlier len*17+first-codepoint code was too weak: a vocabulary
+# sharing one first letter (caught by a planted adversarial test)
+# yields so few distinct codes that the boundary condition can NEVER
+# fire and CDC degrades to whole-doc chunks.
 CDC_MOD = 1_000_000_007
-
-
-def _cdc_word_code(w: Column) -> Column:
-    """Full char-fold word hash (a*131 + codepoint) % CDC_MOD — the
-    dedup._word_hash fold SHAPE, but with THIS module's modulus
-    (1e9+7, not dedup's M31): the three lockstep implementations
-    (this, textops._SQL_CDC_CHUNKS, tests' _py_cdc_cuts) share
-    CDC_MOD, so do not consolidate with _word_hash. The earlier
-    len*17+first-codepoint code was too weak here: a vocabulary
-    sharing one first letter (caught by a planted adversarial test)
-    yields so few distinct codes that the boundary condition can
-    NEVER fire and CDC degrades to whole-doc chunks. Boundary
-    diversity is load-bearing for a chunker in a way it is not for
-    the fingerprint that code came from."""
-    # fold over split(w, "") rather than sequence+substring: per-char
-    # substring(w, i, 1) re-seeks the UTF8 string from the start (O(i)
-    # — quadratic per word on the chunking hot path, measured r5:
-    # chunk_cdc data cost 3.9 s -> 1.x s at sf0.1 with this + the
-    # window-hash rewrite). ascii(c) == ascii(substring(w, i, 1))
-    # codepoint-for-codepoint (probe-verified incl. non-ASCII), so the
-    # hash VALUE is bit-identical — the SQL mirror and the pure-Python
-    # test oracle are untouched.
-    return F.aggregate(
-        F.split(w, ""),
-        F.lit(0).cast("long"),
-        lambda a, c: (a * 131 + F.ascii(c)) % F.lit(CDC_MOD).cast("long"),
-    )
 
 
 def _cdc_window_hash(codes: Column, i: Column) -> Column:
@@ -197,7 +176,9 @@ def chunk_cdc(
     coded = words_df.select(
         id_col,
         "words",
-        F.transform(F.col("words"), _cdc_word_code).alias("codes"),
+        F.transform(
+            F.col("words"), lambda w: TX.char_fold(w, CDC_MOD)
+        ).alias("codes"),
     )
     return (
         coded.select(id_col, "words", cuts.alias("cuts"))

@@ -36,7 +36,6 @@ from document_vector_indexer_spark.functions import vector as V
 from document_vector_indexer_spark.operators.similarity import cosine_over_norms
 
 SIMHASH_BITS = 32
-_CHAR_MOD = 2147483647  # 2^31 - 1, keeps the char-fold in long range
 
 
 def exact_dedup_keep_first(
@@ -318,22 +317,7 @@ def _pair_counts_with_sizes(emitted: DataFrame) -> DataFrame:
     )
 
 
-def _word_hash(w: Column) -> Column:
-    """Portable char-fold hash: fold(chars, 0, a -> (a*131 + ascii) % M).
-    Pure integer arithmetic, reproducible in any engine, unlike
-    murmur-based builtins. Folds over ``split(w, '')`` — per-char
-    ``substring(w, i, 1)`` re-seeks the UTF8 string from the start
-    (O(i), quadratic per word; the r5 CDC scaling fix, applied to all
-    three char-fold sites). ascii(c) is codepoint-identical either
-    way, so hash VALUES — and every SQL mirror — are unchanged."""
-    return F.aggregate(
-        F.split(w, ""),
-        F.lit(0).cast("long"),
-        lambda a, c: (a * 131 + F.ascii(c)) % F.lit(_CHAR_MOD).cast("long"),
-    )
-
-
-def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
+def simhash(text: Column) -> Column:
     """SimHash: per-bit majority vote over word hashes, as a pure
     column expression. bit b of the result is 1 iff
     ``sum over words of (word_hash bit b ? +1 : -1) > 0``.
@@ -342,9 +326,11 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     per bit (lambda-boundary CSE limit) — use ``simhash_df`` for bulk
     hashing; this form is for small/ad-hoc columns.
     """
-    hashes = F.transform(TX.word_tokens(text), _word_hash)
+    hashes = F.transform(
+        TX.word_tokens(text), lambda w: TX.char_fold(w, TX.M31)
+    )
     bit_votes = F.transform(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
+        F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
         lambda b: F.aggregate(
             hashes,
             F.lit(0).cast("long"),
@@ -360,7 +346,7 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
     return F.aggregate(
         F.zip_with(
             bit_votes,
-            F.sequence(F.lit(0), F.lit(bits - 1)),
+            F.sequence(F.lit(0), F.lit(SIMHASH_BITS - 1)),
             lambda v, b: F.when(
                 v > 0, F.pow(F.lit(2.0), b.cast("double")).cast("long")
             ).otherwise(F.lit(0).cast("long")),
@@ -371,28 +357,28 @@ def simhash(text: Column, bits: int = SIMHASH_BITS) -> Column:
 
 
 def simhash_df(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = SIMHASH_BITS
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """SimHash as a one-pass DataFrame plan: posexplode words, compute
     each word's char-fold hash once, then one hash-aggregation with
-    ``bits`` vote columns. Preferred over the ``simhash()`` column
+    ``SIMHASH_BITS`` vote columns. Preferred over the ``simhash()`` column
     expression at scale — the expression form re-derives every word
     hash per bit (lambda-boundary CSE limit, see ngram_jaccard_pairs).
     Keeps rows whose text has no tokens out of the result."""
     words = df.select(
         F.col(id_col), F.explode(TX.word_tokens(F.col(text_col))).alias("w")
     )
-    hashed = words.withColumn("wh", _word_hash(F.col("w")))
+    hashed = words.withColumn("wh", TX.char_fold(F.col("w"), TX.M31))
     votes = hashed.groupBy(id_col).agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("wh"), b) % 2 == 1, 1).otherwise(-1)
             ).alias(f"v{b}")
-            for b in range(bits)
+            for b in range(SIMHASH_BITS)
         ]
     )
     sim = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{b}") > 0, F.lit(1 << b).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -400,14 +386,17 @@ def simhash_df(
     return votes.select(F.col(id_col), sim.alias("simhash"))
 
 
+# MLlib MinHashLSH settings of minhash_near_dup_pairs
+MLLIB_HASH_TABLES = 8
+MLLIB_NUM_FEATURES = 1 << 16
+MLLIB_SEED = 42
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 16,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate near-dup pairs via MinHashLSH over hashed word-set
     features: shingle -> HashingTF sparse vector -> minhash bands ->
@@ -419,10 +408,18 @@ def minhash_near_dup_pairs(
     words = df.select(
         F.col(id_col).alias("id"), TX.word_tokens(F.col(text_col)).alias("words")
     ).filter(F.size("words") > 0)
-    tf = HashingTF(inputCol="words", outputCol="features", numFeatures=num_features, binary=True)
+    tf = HashingTF(
+        inputCol="words",
+        outputCol="features",
+        numFeatures=MLLIB_NUM_FEATURES,
+        binary=True,
+    )
     feat = tf.transform(words)
     model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
+        inputCol="features",
+        outputCol="hashes",
+        numHashTables=MLLIB_HASH_TABLES,
+        seed=MLLIB_SEED,
     ).fit(feat)
     joined = model.approxSimilarityJoin(feat, feat, 1.0 - threshold, distCol="jaccard_dist")
     return (
@@ -435,7 +432,14 @@ def minhash_near_dup_pairs(
     )
 
 
-MINHASH_PRIME = _CHAR_MOD  # M31; char-fold hashes already live in [0, M31)
+MINHASH_PRIME = TX.M31  # char-fold hashes already live in [0, M31)
+# Portable MinHash: k signature components in MINHASH_BANDS bands of
+# k/bands rows, over word MINHASH_N-gram shingles; a band bucket of more
+# than MINHASH_MAX_BAND_DF docs is dropped (minhash_portable_pairs).
+MINHASH_K = 16
+MINHASH_BANDS = 4
+MINHASH_N = 2
+MINHASH_MAX_BAND_DF = 50
 
 
 def _minhash_coeffs(k: int) -> list[tuple[int, int]]:
@@ -454,11 +458,10 @@ def minhash_signature_df(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 16,
-    n: int = 2,
 ) -> DataFrame:
-    """Portable MinHash signatures: sig_i = min over the doc's word
-    n-gram shingles of (a_i * charfold(shingle) + b_i) mod M31.
+    """Portable MinHash signatures: sig_i (i < k = ``MINHASH_K``) = min
+    over the doc's word n-gram shingles (n = ``MINHASH_N``) of
+    (a_i * charfold(shingle) + b_i) mod M31.
 
     Contrast with ``minhash_near_dup_pairs`` (MLlib): same banding
     math, but every ingredient is deterministic pure-integer arithmetic
@@ -482,6 +485,7 @@ def minhash_signature_df(
 
     Returns (id, sig: array<long> of length k).
     """
+    k, n = MINHASH_K, MINHASH_N
     words_df = df.repartition(F.col(id_col)).select(
         F.col(id_col).alias("id"),
         TX.word_tokens(F.col(text_col)).alias("_words"),
@@ -503,10 +507,6 @@ def minhash_portable_pairs(
     threshold: float = 0.6,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 16,
-    bands: int = 4,
-    n: int = 2,
-    max_band_df: int = 50,
 ) -> DataFrame:
     """Near-dup candidate pairs via banded portable MinHash.
 
@@ -522,22 +522,22 @@ def minhash_portable_pairs(
     frame twice and no join re-attaches it: one band_key-keyed
     aggregation builds the buckets, pairs are emitted and scored
     inside them, and one (id_a, id_b) aggregation collapses the copies
-    of a pair found in several bands. ``max_band_df`` is the same
+    of a pair found in several bands. ``MINHASH_MAX_BAND_DF`` is the same
     anti-quadratic guard as ngram_jaccard_pairs' ``max_df``: it caps
     members per bucket, bounding pair fan-out, and a hotter bucket
     means the band carries no dedup signal (so a cluster of more than
-    ``max_band_df`` identical docs, hot in every band, emits no
-    pairs; exact dedup owns that regime). A bucket row carries at most
-    ``max_band_df`` signatures of k longs, and the pair exchange
-    carries survivors only; every shuffle is keyed by band_key or
-    pair, never all-pairs.
+    that many identical docs, hot in every band, emits no pairs; exact
+    dedup owns that regime). A bucket row carries at most that many
+    signatures of k longs, and the pair exchange carries survivors
+    only; every shuffle is keyed by band_key or pair, never all-pairs.
+    k, bands and the shingle length n are ``MINHASH_K``,
+    ``MINHASH_BANDS`` and ``MINHASH_N``.
 
     Returns (id_a, id_b, est_jaccard) with id_a < id_b.
     """
-    if k % bands:
-        raise ValueError(f"bands={bands} must divide k={k}")
+    k, bands, max_band_df = MINHASH_K, MINHASH_BANDS, MINHASH_MAX_BAND_DF
     r = k // bands
-    sigs = minhash_signature_df(df, text_col=text_col, id_col=id_col, k=k, n=n)
+    sigs = minhash_signature_df(df, text_col=text_col, id_col=id_col)
     band_arr = F.array(
         *[
             F.concat_ws(
@@ -587,15 +587,27 @@ def minhash_portable_pairs(
     )
 
 
-def recommended_lsh_bits(
-    n_rows: int,
-    target_bucket_rows: int = 32,
-    floor: int = 4,
-    cap: int = 24,
-) -> int:
-    """The bits knob sized to the corpus: smallest ``bits`` whose
-    expected sign-LSH bucket occupancy n/2^bits is at or below
-    ``target_bucket_rows``.
+# Sign-LSH sizing of embedding_near_dup_pairs (see recommended_lsh_bits
+# and recommended_lsh_bands for where each value comes from).
+LSH_TARGET_BUCKET_ROWS = 32
+LSH_BITS_FLOOR, LSH_BITS_CAP = 4, 24
+LSH_TARGET_RECALL = 0.9
+LSH_BANDS_FLOOR, LSH_BANDS_CAP = 6, 24
+# (band, bucket) cells above this occupancy are dropped before the
+# candidate join (embedding_near_dup_pairs)
+LSH_MAX_BUCKET_ROWS = 512
+# every hyperplane matrix is drawn from this seed; the oracle SQL
+# inlines the same ±1 literals
+LSH_SEED = 7
+# hyperplanes of semantic_dedup_survivors' single band: 2^12 cells
+SEMANTIC_BITS = 12
+
+
+def recommended_lsh_bits(n_rows: int) -> int:
+    """The bits of the sign-LSH bucket key sized to the corpus:
+    smallest ``bits`` whose expected bucket occupancy n/2^bits is at or
+    below ``LSH_TARGET_BUCKET_ROWS``, clamped to
+    [``LSH_BITS_FLOOR``, ``LSH_BITS_CAP``].
 
     This is the anti-quadratic lever for embedding blocking — the
     within-bucket pair count is O(occupancy²), so FIXED bits turn a
@@ -605,27 +617,24 @@ def recommended_lsh_bits(
     local disk with shuffle spill; bits sized by this rule keeps the
     candidate volume ~n·target·bands/2 — linear in the corpus.
 
-    The default ``target_bucket_rows=32`` is the SAME value
-    ``embedding_near_dup_pairs(bits="auto")`` uses (aligned r11 —
-    they diverged 64 vs 32 in r10, so the helper standalone sized a
-    bit looser than the operator): the r10 second-decade probe
-    measured p99 occupancy ~7x the expectation target under real
-    (anisotropic) embedding sign skew, and 32 is the target that kept
-    the candidate volume disk-fittable at ~sf10 with the 512-row
-    hot-bucket cap as the tail guard.
+    The target of 32: the r10 second-decade probe measured p99
+    occupancy ~7x the expectation target under real (anisotropic)
+    embedding sign skew, and 32 is the target that kept the candidate
+    volume disk-fittable at ~sf10 with the 512-row hot-bucket cap as
+    the tail guard.
 
     Recall trade (standard LSH tuning): per-band match probability is
     (1 − θ/π)^bits, so more bits means fewer false candidates AND
-    lower recall at a fixed band count; raise ``bands`` to buy recall
-    back. Pairs at the dedup thresholds used here (cosine ≥ 0.95,
-    θ ≤ 18°) keep ≥ 0.93 recall at 6 bands up to bits=9; identical
-    vectors (exact dups) collide at ANY bits.
+    lower recall at a fixed band count; ``recommended_lsh_bands`` buys
+    recall back with more bands. Identical vectors (exact dups)
+    collide at ANY bits.
     """
     import math
 
     if n_rows <= 0:
-        return floor
-    return max(floor, min(cap, math.ceil(math.log2(max(1.0, n_rows / target_bucket_rows)))))
+        return LSH_BITS_FLOOR
+    occupancy = max(1.0, n_rows / LSH_TARGET_BUCKET_ROWS)
+    return max(LSH_BITS_FLOOR, min(LSH_BITS_CAP, math.ceil(math.log2(occupancy))))
 
 
 def lsh_union_recall(bits: int, threshold: float, bands: int) -> float:
@@ -642,55 +651,47 @@ def lsh_union_recall(bits: int, threshold: float, bands: int) -> float:
     return 1.0 - (1.0 - p_band) ** bands
 
 
-def recommended_lsh_bands(
-    bits: int,
-    threshold: float,
-    target_recall: float = 0.9,
-    floor: int = 6,
-    cap: int = 24,
-) -> int:
-    """The bands knob sized to hold the RECALL contract as ``bits``
+def recommended_lsh_bands(bits: int, threshold: float) -> int:
+    """The band count sized to hold the RECALL contract as ``bits``
     grows with the corpus: smallest ``bands`` whose union recall
-    1 − (1 − p^bits)^bands reaches ``target_recall`` for a pair AT the
-    operator's own ``threshold``, where p = 1 − acos(threshold)/π is
-    the per-plane sign-agreement probability (random-hyperplane LSH).
+    1 − (1 − p^bits)^bands reaches ``LSH_TARGET_RECALL`` for a pair AT
+    the operator's own ``threshold``, where p = 1 − acos(threshold)/π
+    is the per-plane sign-agreement probability (random-hyperplane
+    LSH), clamped to [``LSH_BANDS_FLOOR``, ``LSH_BANDS_CAP``].
 
-    Why this exists (r11): ``bits="auto"`` grows ~log2(n) to keep
-    candidate volume linear, but per-band recall for threshold-level
-    pairs falls as p^bits — at the sf100 blow-up (bits=17, cosine
-    0.95 → θ=18°, p=0.9) the FIXED 6 bands keep only ~0.67 union
-    recall; the borderline near-dups silently stop surfacing while
-    the planted-identical driver oracles stay green (identical
-    vectors collide at any bits). Holding recall costs bands ~
-    (1/p)^bits ∝ n^(log2(1/p)) — the classic sub-quadratic LSH
-    exponent (n^0.152 at θ=18°), i.e. candidates grow slightly
-    super-linearly BY THEORY once recall is a contract, not a hope.
-    The ``cap`` bounds the spend where the target is unreachable
-    (recall at the cap is then the honest number — log it, don't
-    chase it); the ``floor`` keeps small-corpus plans (bits ≤ 10,
-    where 6 bands already exceed 0.9 recall) byte-identical to the
-    r6–r11 defaults."""
+    Why this exists (r11): bits grow ~log2(n) to keep candidate volume
+    linear, but per-band recall for threshold-level pairs falls as
+    p^bits — at the sf100 blow-up (bits=17, cosine 0.95 → θ=18°,
+    p=0.9) a FIXED 6 bands keep only ~0.67 union recall; the
+    borderline near-dups silently stop surfacing while the
+    planted-identical driver oracles stay green (identical vectors
+    collide at any bits). Holding recall costs bands ~ (1/p)^bits ∝
+    n^(log2(1/p)) — the classic sub-quadratic LSH exponent (n^0.152 at
+    θ=18°), i.e. candidates grow slightly super-linearly BY THEORY
+    once recall is a contract, not a hope. The cap bounds the spend
+    where the target is unreachable (recall at the cap is then the
+    honest number — the operator logs it); the floor keeps
+    small-corpus plans (bits ≤ 10 at cosine 0.95, where 6 bands
+    already exceed 0.9 recall) byte-identical to the r6–r11 plans."""
     import math
 
-    if not 0.0 < target_recall < 1.0:
-        raise ValueError(f"target_recall must be in (0, 1), got {target_recall}")
     miss_one = 1.0 - lsh_union_recall(bits, threshold, 1)
     if miss_one <= 0.0:
-        return floor
+        return LSH_BANDS_FLOOR
     if miss_one >= 1.0:
-        return cap
-    need = math.log(1.0 - target_recall) / math.log(miss_one)
-    return max(floor, min(cap, math.ceil(need)))
+        return LSH_BANDS_CAP
+    need = math.log(1.0 - LSH_TARGET_RECALL) / math.log(miss_one)
+    return max(LSH_BANDS_FLOOR, min(LSH_BANDS_CAP, math.ceil(need)))
 
 
-def lsh_hyperplanes(dim: int, bands: int, bits: int, seed: int = 7):
-    """Seeded ±1 random-hyperplane matrix, shape (bands, bits, dim).
-    ±1 components keep the projection dot product an exact sequence of
-    double adds/subtracts — bit-identical in any engine — and inline as
-    clean literals in the DuckDB oracle SQL."""
+def lsh_hyperplanes(dim: int, bands: int, bits: int):
+    """±1 random-hyperplane matrix drawn from ``LSH_SEED``, shape
+    (bands, bits, dim). ±1 components keep the projection dot product
+    an exact sequence of double adds/subtracts — bit-identical in any
+    engine — and inline as clean literals in the DuckDB oracle SQL."""
     import numpy as np
 
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(LSH_SEED)
     return rng.choice([-1.0, 1.0], size=(bands, bits, dim))
 
 
@@ -737,19 +738,19 @@ def embedding_lsh_blocks(
     id_col: str = "vec_id",
     bands: int = 6,
     bits: int = 4,
-    seed: int = 7,
     carry_vec: bool = True,
 ) -> DataFrame:
     """Sign-LSH banding of an embedding column: one output row per
     (vector, band) with the band's bucket = the ``bits``-bit sign
-    pattern of the vector against seeded random hyperplanes. Self-join
-    on (band, bucket) gives near-dup candidates — the standard
-    random-hyperplane LSH family, where P[bit match] = 1 - angle/pi.
+    pattern of the vector against seeded random hyperplanes
+    (``lsh_hyperplanes``). Self-join on (band, bucket) gives near-dup
+    candidates — the standard random-hyperplane LSH family, where
+    P[bit match] = 1 - angle/pi.
 
     Scale note: buckets per band = 2^bits, so ``bits`` must grow with
-    data size (~log2(n_rows) - log2(target_bucket_rows)); 4 bits suits
-    the test corpus, web scale wants 16-20. ``bands`` trades recall for
-    candidate volume (union over bands).
+    data size (``recommended_lsh_bits``); 4 bits suits the test
+    corpus, web scale wants 16-20. ``bands`` trades recall for
+    candidate volume (union over bands, ``recommended_lsh_bands``).
 
     All bands*bits projections of a row are computed in ONE
     vectorized numpy pass inside ``mapInPandas`` (per-bit interpreted
@@ -774,7 +775,7 @@ def embedding_lsh_blocks(
     if isinstance(bands, bool) or not isinstance(bands, int) or bands < 1:
         raise ValueError(f"bands must be a positive int, got {bands!r}")
 
-    H = lsh_hyperplanes(dim, bands, bits, seed)
+    H = lsh_hyperplanes(dim, bands, bits)
     base = df.select(F.col(id_col), F.col(vec_col))
     # Element-level NULLs (a null FLOAT inside a non-null vector) are
     # indistinguishable from real NaN after the Arrow->pandas hop, but
@@ -857,22 +858,20 @@ def semantic_dedup_survivors(
     dim: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    bits: int = 12,
-    seed: int = 7,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public
     paper), deterministic variant: the paper clusters embeddings with
     k-means and keeps one representative per tight cluster; here the
-    cluster id is a single wide sign-LSH band (``bits`` hyperplanes →
-    2^bits cells — the deterministic, oracle-checkable stand-in for a
+    cluster id is a single wide sign-LSH band (``SEMANTIC_BITS``
+    hyperplanes → 2^12 cells — the deterministic, oracle-checkable stand-in for a
     trained codebook), and the survivor is the lowest id per cell.
 
     Scale shape: the bucket id is pure map-side column arithmetic
     (exact ±1-hyperplane dot products, see ``lsh_hyperplanes``), then
     ONE narrow shuffle on the int bucket key with partial min/count
     aggregation — the same cost profile as exact dedup, independent of
-    embedding dimension after the projection. ``bits`` must grow
-    ~log2(n_rows) at scale (16-24 at web scale) to keep cells tight.
+    embedding dimension after the projection. At web scale the cell
+    count must grow ~log2(n_rows) (16-24 bits) to keep cells tight.
 
     Returns (bucket, survivor_id, n_members), one row per occupied
     cell; n_members > 1 cells are the semantic-duplicate groups.
@@ -890,8 +889,7 @@ def semantic_dedup_survivors(
             vec_col=vec_col,
             id_col=id_col,
             bands=1,
-            bits=bits,
-            seed=seed,
+            bits=SEMANTIC_BITS,
             carry_vec=False,
         )
         .select(F.col(id_col), "bucket")
@@ -903,71 +901,14 @@ def semantic_dedup_survivors(
     )
 
 
-def _resolve_lsh_bits(
-    df: DataFrame, bits: int | str, target_bucket_rows: int
-) -> int:
-    """``bits="auto"`` resolution, factored out of the operator so
-    tests can pin the RESOLVED value directly (r10 ADVICE gap: the
-    planted oracle corpus is bits-independent — identical vectors
-    collide at any bits — so result parity alone cannot catch a
-    regression in this plumbing). ``bool`` is rejected explicitly:
-    ``isinstance(True, int)`` holds, and bits=True would otherwise run
-    silently with 1-bit buckets (near-all-pairs candidates)."""
-    if bits == "auto":
-        return recommended_lsh_bits(
-            df.count(), target_bucket_rows=target_bucket_rows
-        )
-    if isinstance(bits, bool) or not isinstance(bits, int):
-        raise ValueError(f"bits must be an int or 'auto', got {bits!r}")
-    return bits
-
-
-def _resolve_lsh_bands(
-    bands: int | str, bits: int, threshold: float, target_recall: float
-) -> int:
-    """``bands="auto"`` resolution, factored out like
-    ``_resolve_lsh_bits`` so tests can pin the RESOLVED value directly
-    (the planted-identical driver corpora collide at any band count, so
-    result parity alone cannot catch a regression here). ``bool`` is
-    rejected for the same reason as in the bits seam."""
-    if bands == "auto":
-        resolved = recommended_lsh_bands(
-            bits, threshold, target_recall=target_recall
-        )
-        achieved = lsh_union_recall(bits, threshold, resolved)
-        if achieved < target_recall:
-            # The cap bound the spend below the target (loose threshold
-            # x high bits — the n^rho cost exploded). Same philosophy
-            # as the hot-bucket drop signal: never trade recall
-            # SILENTLY.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "embedding_near_dup_pairs: bands='auto' capped at %d — "
-                "union recall for threshold-level pairs is ~%.2f, below "
-                "the %.2f target (threshold %.3f at bits=%d); this "
-                "regime belongs to the ANN ladder, not the pair-emitter",
-                resolved,
-                achieved,
-                target_recall,
-                threshold,
-                bits,
-            )
-        return resolved
-    if isinstance(bands, bool) or not isinstance(bands, int):
-        raise ValueError(f"bands must be an int or 'auto', got {bands!r}")
-    return bands
-
-
 def lsh_hot_bucket_stats(blocks: DataFrame, max_bucket_rows: int) -> DataFrame:
     """(band, bucket, occupancy) of the LSH cells ABOVE the hot-bucket
     drop cap — the runtime signal for the cap's documented blind spot
     (identical-vector clusters larger than the cap are hot in EVERY
     band and silently emit no pairs; that regime belongs to exact /
-    semantic dedup). Run it on ``embedding_lsh_blocks`` output to see
-    exactly which cells a capped ``embedding_near_dup_pairs`` call
-    drops; ``log_dropped_buckets=True`` on the operator does this
-    eagerly and warns."""
+    semantic dedup). Run it on ``embedding_lsh_blocks`` output with
+    ``LSH_MAX_BUCKET_ROWS`` to see exactly which cells
+    ``embedding_near_dup_pairs`` drops."""
     return (
         blocks.groupBy("band", "bucket")
         .agg(F.count("*").alias("occupancy"))
@@ -982,13 +923,6 @@ def embedding_near_dup_pairs(
     dim: int,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    bands: int | str = "auto",
-    bits: int | str = "auto",
-    seed: int = 7,
-    target_bucket_rows: int = 32,
-    max_bucket_rows: int | None = 512,
-    log_dropped_buckets: bool = False,
-    target_recall: float = 0.9,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine >= threshold, blocked by
     vector-derived sign-LSH buckets (``embedding_lsh_blocks`` over
@@ -996,44 +930,44 @@ def embedding_near_dup_pairs(
     quadratic and unrunnable at scale, so it does not exist here.
     Returns (id_a, id_b, sim).
 
-    ``bits="auto"`` (default since r10) sizes the bucket key to the
-    corpus via ``recommended_lsh_bits(n, target_bucket_rows)`` — one
-    count() job at build time, the fit step that keeps candidate
-    volume LINEAR in the corpus (~n·target·bands/2). The r10
-    one-decade sweep measured the fixed-bits failure: bucket occupancy
-    grows with n, within-bucket pairs with n², and at ~sf1 the bits=4
-    default emitted ~10⁸ wide candidate rows (disk full). Pass an int
-    to pin the knob (oracle mirrors must pin it).
+    The bucket key is sized to the corpus: bits =
+    ``recommended_lsh_bits(n)`` — one count() job at build time, the
+    fit step that keeps candidate volume LINEAR in the corpus
+    (~n·target·bands/2). The r10 one-decade sweep measured the
+    fixed-bits failure: bucket occupancy grows with n, within-bucket
+    pairs with n², and at ~sf1 a fixed bits=4 emitted ~10⁸ wide
+    candidate rows (disk full).
 
-    ``bands="auto"`` (late r11) holds the RECALL contract as the auto
-    bits grow: ``recommended_lsh_bands(bits, threshold, target_recall)``
-    sizes the band count so a pair AT ``threshold`` is still a
-    candidate with probability ≥ ``target_recall`` (union over bands;
-    the per-band probability p^bits shrinks as bits track log2 n, so a
-    FIXED band count silently sheds borderline near-dups at scale —
-    0.67 union recall at the sf100 blow-up's bits=17 with 6 bands,
-    while planted-identical oracles stay green). The floor of 6 keeps
-    every plan at bits ≤ 10 (all driver scales) byte-identical to the
-    fixed-bands era; the growth above it is the n^ρ candidate spend
-    LSH theory charges for constant recall — paid knowingly, capped at
-    24, measured in SCALE.md. Pass an int to pin (oracle mirrors must).
+    The band count holds the RECALL contract as bits grow (late r11):
+    bands = ``recommended_lsh_bands(bits, threshold)``, so a pair AT
+    ``threshold`` is still a candidate with probability ≥
+    ``LSH_TARGET_RECALL`` (union over bands; the per-band probability
+    p^bits shrinks as bits track log2 n, so a FIXED band count
+    silently sheds borderline near-dups at scale — 0.67 union recall
+    at the sf100 blow-up's bits=17 with 6 bands, while
+    planted-identical oracles stay green). The floor of 6 keeps every
+    plan at bits ≤ 10 (all driver scales, cosine 0.95) byte-identical
+    to the fixed-bands era; the growth above it is the n^ρ candidate
+    spend LSH theory charges for constant recall — paid knowingly,
+    capped at 24, measured in SCALE.md. When the cap binds below the
+    target, the operator logs a warning with the recall it reaches.
 
-    ``max_bucket_rows`` (r10, second decade) clips the occupancy TAIL:
-    real embeddings are anisotropic, so sign patterns concentrate —
-    measured at ~sf10, p99 occupancy is ~7x the expectation target and
-    Σocc² lands ~4x the uniform-cell estimate, which together with the
-    two carried vectors per candidate row was the difference between
-    fitting and filling the local disk. Buckets above the cap are
-    DROPPED, the ``minhash_portable_pairs.max_band_df`` precedent: a
-    bucket that hot at correctly-sized bits means the band carries
-    little discriminative signal there, and a pair lost from a hot
-    bucket still pairs in any of its other (colder) bands. The
-    documented blind spot is identical-vector clusters LARGER than the
-    cap (hot in every band) — that regime belongs to exact dedup /
+    ``LSH_MAX_BUCKET_ROWS`` (r10, second decade) clips the occupancy
+    TAIL: real embeddings are anisotropic, so sign patterns concentrate
+    — measured at ~sf10, p99 occupancy is ~7x the expectation target
+    and Σocc² lands ~4x the uniform-cell estimate, which together with
+    the two carried vectors per candidate row was the difference
+    between fitting and filling the local disk. Buckets above the cap
+    are DROPPED, the ``MINHASH_MAX_BAND_DF`` precedent: a bucket that
+    hot at correctly-sized bits means the band carries little
+    discriminative signal there, and a pair lost from a hot bucket
+    still pairs in any of its other (colder) bands. The documented
+    blind spot is identical-vector clusters LARGER than the cap (hot
+    in every band) — that regime belongs to exact dedup /
     ``semantic_dedup_survivors``, which handle arbitrarily large
     clusters in one aggregation. The cap is ~16x the expectation
     target, so it never binds at driver-oracle scales (measured max
-    occupancy ≤ 80 there); None disables it.
+    occupancy ≤ 80 there).
 
     MEASURED recall at the cap (r11, planted 0.5%-noise near-identical
     clusters on the blow-up corpora; table in SCALE.md, the probe script
@@ -1043,11 +977,7 @@ def embedding_near_dup_pairs(
     every dropped cluster concentrated into ≤ 4 semantic-dedup cells —
     the delegation holds with measurement, not argument. Guidance:
     treat cluster regimes within ~2x of the cap as the semantic tier's
-    job; more ``bands`` buys back only the noise-split fraction.
-    ``log_dropped_buckets=True`` adds an eager one-pass probe that
-    WARNS with the dropped-cell count (the r10-ADVICE runtime signal;
-    off by default to keep benched plans identical —
-    ``lsh_hot_bucket_stats`` is the lazy form).
+    job. ``lsh_hot_bucket_stats`` lists the dropped cells.
 
     The candidate self-join is MERGE-pinned (r10): both sides are the
     same corpus-derived frame, so no broadcast build is legal at scale
@@ -1082,46 +1012,38 @@ def embedding_near_dup_pairs(
     exchanges that may carry vectors at scale are the corpus-linear
     ones (6n block rows), which is exactly what this form does.
     """
-    bits = _resolve_lsh_bits(df, bits, target_bucket_rows)
-    bands = _resolve_lsh_bands(bands, bits, threshold, target_recall)
-    blocks = embedding_lsh_blocks(
-        df, dim=dim, vec_col=vec_col, id_col=id_col, bands=bands, bits=bits, seed=seed
-    )
-    if max_bucket_rows is not None:
-        if log_dropped_buckets:
-            # Opt-in eager probe (one extra narrow-agg job): the cap
-            # drops hot cells SILENTLY in the lazy plan, so callers
-            # that want a runtime signal pay one count-per-cell pass
-            # up front. Off by default to keep benched plans
-            # identical.
-            import logging
+    bits = recommended_lsh_bits(df.count())
+    bands = recommended_lsh_bands(bits, threshold)
+    achieved = lsh_union_recall(bits, threshold, bands)
+    if achieved < LSH_TARGET_RECALL:
+        # The cap bound the spend below the target (loose threshold x
+        # high bits — the n^rho cost exploded): never trade recall
+        # SILENTLY.
+        import logging
 
-            hot = lsh_hot_bucket_stats(blocks, max_bucket_rows).agg(
-                F.count("*").alias("cells"),
-                F.sum("occupancy").alias("rows_in_hot_cells"),
-                F.max("occupancy").alias("max_occupancy"),
-            ).collect()[0]
-            if (hot["cells"] or 0) > 0:
-                logging.getLogger(__name__).warning(
-                    "embedding_near_dup_pairs: dropping %d hot (band,"
-                    "bucket) cells (>%d rows; %d rows total, max "
-                    "occupancy %d) — identical-vector clusters above "
-                    "the cap emit NO pairs here and belong to exact/"
-                    "semantic dedup",
-                    hot["cells"],
-                    max_bucket_rows,
-                    hot["rows_in_hot_cells"],
-                    hot["max_occupancy"],
-                )
-        # occupancy via a window over the SAME (band, bucket) key
-        # the candidate join shuffles on — the exchange is shared,
-        # the cap only adds sorts/filters to it
-        occ_w = Window.partitionBy("band", "bucket")
-        blocks = (
-            blocks.withColumn("__occ", F.count("*").over(occ_w))
-            .filter(F.col("__occ") <= max_bucket_rows)
-            .drop("__occ")
+        logging.getLogger(__name__).warning(
+            "embedding_near_dup_pairs: bands capped at %d — union recall "
+            "for threshold-level pairs is ~%.2f, below the %.2f target "
+            "(threshold %.3f at bits=%d); this regime belongs to the ANN "
+            "ladder, not the pair-emitter",
+            bands,
+            achieved,
+            LSH_TARGET_RECALL,
+            threshold,
+            bits,
         )
+    blocks = embedding_lsh_blocks(
+        df, dim=dim, vec_col=vec_col, id_col=id_col, bands=bands, bits=bits
+    )
+    # occupancy via a window over the SAME (band, bucket) key the
+    # candidate join shuffles on — the exchange is shared, the cap only
+    # adds sorts/filters to it
+    occ_w = Window.partitionBy("band", "bucket")
+    blocks = (
+        blocks.withColumn("__occ", F.count("*").over(occ_w))
+        .filter(F.col("__occ") <= LSH_MAX_BUCKET_ROWS)
+        .drop("__occ")
+    )
     # Norms are hoisted per row before the pair join (see
     # similarity.cosine_over_norms).
     norm = V.l2_norm(vec_col)
@@ -1151,11 +1073,14 @@ def embedding_near_dup_pairs(
     )
 
 
+# label-propagation rounds connected_components runs before it gives up
+CC_MAX_ITERATIONS = 25
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 25,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph by min-label
     propagation — the step that turns pairwise dedup output into
@@ -1199,6 +1124,7 @@ def connected_components(
         .repartition(F.col("id"))
         .localCheckpoint(eager=True)
     )
+    max_iterations = CC_MAX_ITERATIONS
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -1232,7 +1158,7 @@ def connected_components(
     return labels
 
 
-def _gram_hash_arrays(words_col, k: int, mod: int = _CHAR_MOD) -> list:
+def _gram_hash_arrays(words_col, k: int, mod: int = TX.M31) -> list:
     """Numpy core of the gram-hash kernel: given a sequence of token
     lists (one per document), return one int64 array per document
     holding ALL stride-1 k-word-gram char-fold hashes — VALUE-IDENTICAL
@@ -1268,7 +1194,7 @@ def _gram_hash_arrays(words_col, k: int, mod: int = _CHAR_MOD) -> list:
 
     ``mod`` must stay below 2^31 so every product of two residues fits
     int64 (M31 = 2147483647 for the dedup family; 1e9+7 for CDC word
-    codes — chunking._cdc_word_code is this fold with that modulus).
+    codes — ``TX.char_fold`` with ``chunking.CDC_MOD``).
     """
     import numpy as np
 
@@ -1345,7 +1271,7 @@ def _gram_hash_arrays(words_col, k: int, mod: int = _CHAR_MOD) -> list:
 
 
 def _gram_hashes_arrow(
-    words: DataFrame, k: int, id_col: str, mod: int = _CHAR_MOD
+    words: DataFrame, k: int, id_col: str, mod: int = TX.M31
 ) -> DataFrame:
     """All stride-1 k-word-gram char-fold hashes per document, computed
     in ONE vectorized numpy pass per Arrow batch (``_gram_hash_arrays``
@@ -1539,13 +1465,17 @@ def golden_records(
     )
 
 
+# cdc_chunk_pairs: chunks of fewer words are ignored, a chunk hash in
+# more docs is boilerplate, and a pair needs this many shared chunks
+CDC_MIN_WORDS = 5
+CDC_MAX_DF = 20
+CDC_MIN_SHARED = 1
+
+
 def cdc_chunk_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words: int = 5,
-    max_df: int = 20,
-    min_shared: int = 1,
 ) -> DataFrame:
     """Document-pair overlap at CDC-CHUNK granularity — the
     application content-defined chunking exists for: because CDC
@@ -1555,10 +1485,10 @@ def cdc_chunk_pairs(
     equality finds passage reuse that fixed-window hashing misses.
 
     Semantics: per doc, the DISTINCT md5s of its CDC chunks of
-    ``min_words``+ words; candidate pairs come from the df-capped
+    ``CDC_MIN_WORDS``+ words; candidate pairs come from the df-capped
     inverted index (the ngram_jaccard_pairs scale decision: a chunk
-    shared by b docs yields O(b²) pairs, and a chunk in >max_df docs
-    is boilerplate, not provenance); ``shared`` counts co-occurring
+    shared by b docs yields O(b²) pairs, and a chunk in >``CDC_MAX_DF``
+    docs is boilerplate, not provenance); ``shared`` counts co-occurring
     retained hashes; overlap_ppm = shared·1e6 DIV min(n_a, n_b)
     (containment-style: a short doc fully inside a long one scores
     1e6). Denominators count RETAINED hashes — consistent with the
@@ -1572,16 +1502,16 @@ def cdc_chunk_pairs(
     sizes from a separate branch — the CDC pipeline executed three
     times, caught in plan review).
 
-    Returns pairs with shared >= ``min_shared`` (default 1: one
-    shared 5+-word verbatim chunk is already a strong provenance
-    signal; raise for noisy corpora), id_a < id_b. Precondition
+    Returns pairs with shared >= ``CDC_MIN_SHARED`` (1: one shared
+    5+-word verbatim chunk is already a strong provenance signal),
+    id_a < id_b. Precondition
     (shared with ngram_jaccard_pairs' marker trick): doc ids are
     NONNEGATIVE longs — id -1 is the in-band singleton sentinel.
     """
     from document_vector_indexer_spark.operators.chunking import chunk_cdc
 
     chunks = chunk_cdc(df, text_col=text_col, id_col=id_col).filter(
-        F.col("n_words") >= min_words
+        F.col("n_words") >= CDC_MIN_WORDS
     )
     el = chunks.select(
         F.col(id_col).alias("id"), F.md5("chunk_text").alias("h")
@@ -1590,7 +1520,7 @@ def cdc_chunk_pairs(
     buckets = (
         el.groupBy("h")
         .agg(F.collect_set("id").alias("ids"))
-        .filter(F.size("ids") <= max_df)
+        .filter(F.size("ids") <= CDC_MAX_DF)
     )
     marker_arr = F.transform(
         F.col("ids"),
@@ -1612,7 +1542,7 @@ def cdc_chunk_pairs(
         )
     )
     return (
-        withsizes.filter(F.col("cnt") >= min_shared)
+        withsizes.filter(F.col("cnt") >= CDC_MIN_SHARED)
         .select(
             "id_a",
             "id_b",

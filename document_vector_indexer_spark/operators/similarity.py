@@ -283,9 +283,6 @@ def knn_lsh_pinned(
     query: DataFrame,
     k: int,
     dim: int,
-    bands: int = 6,
-    bits: int = 4,
-    seed: int = 7,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "qid",
@@ -307,18 +304,15 @@ def knn_lsh_pinned(
     the same deterministic expression on the same inputs, so max
     just collapses bit-identical duplicates. Exact cosine rerank +
     per-query top-k window ends the plan; the window input is
-    candidates only (bucket-bounded, ~P[band match] x corpus — the
-    recall/cost dial is (bands, bits), see embedding_lsh_blocks'
-    scale note).
+    candidates only (bucket-bounded, ~P[band match] x corpus). Both
+    sides band with ``embedding_lsh_blocks``' default 6 bands x 4 bits,
+    the hyperplanes the oracle SQL mirrors (see its scale note for
+    sizing bits to a corpus).
     """
     from document_vector_indexer_spark.operators.dedup import embedding_lsh_blocks
 
-    cb = embedding_lsh_blocks(
-        vectors, dim, vec_col, id_col, bands=bands, bits=bits, seed=seed
-    )
-    qb = embedding_lsh_blocks(
-        query, dim, vec_col, query_id_col, bands=bands, bits=bits, seed=seed
-    ).select(
+    cb = embedding_lsh_blocks(vectors, dim, vec_col, id_col)
+    qb = embedding_lsh_blocks(query, dim, vec_col, query_id_col).select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
         "band",

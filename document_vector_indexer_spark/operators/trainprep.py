@@ -15,8 +15,6 @@ from pyspark.sql import functions as F
 
 from document_vector_indexer_spark.functions import text as TX
 
-_M31 = 2147483647  # the engine's portable-hash modulus (operators/dedup.py)
-
 
 def portable_hash_fraction(key: Column, salt: str = "") -> Column:
     """Map a key to a deterministic fraction in [0, 1): char-fold hash
@@ -32,7 +30,7 @@ def portable_hash_fraction(key: Column, salt: str = "") -> Column:
     already restore every decile to 1.00 +/- 0.01, three adds margin.
 
     Map-side only: at any scale this is a projection, no shuffle."""
-    return portable_hash_units(key, salt).cast("double") / F.lit(float(_M31))
+    return portable_hash_units(key, salt).cast("double") / F.lit(float(TX.M31))
 
 
 def portable_hash_units(key: Column, salt: str = "") -> Column:
@@ -41,16 +39,9 @@ def portable_hash_units(key: Column, salt: str = "") -> Column:
     cross-multiplied threshold tests (``h * q < p * M31`` keeps a
     probability-p decision in pure longs, no double ever)."""
     s = F.concat_ws(":", F.lit(salt), key.cast("string"))
-    # split-fold, not sequence+substring: per-char substring re-seeks
-    # the UTF8 string (O(i) each — the r5 CDC scaling fix); ascii(c)
-    # is codepoint-identical, hash values unchanged
-    h = F.aggregate(
-        F.split(s, ""),
-        F.lit(0).cast("long"),
-        lambda a, c: (a * 131 + F.ascii(c)) % F.lit(_M31).cast("long"),
-    )
+    h = TX.char_fold(s, TX.M31)
     for _ in range(3):
-        h = (h * 48271) % F.lit(_M31).cast("long")
+        h = (h * 48271) % F.lit(TX.M31).cast("long")
     return h
 
 
@@ -151,6 +142,11 @@ def _gram_hash_rows(
     return _gram_hashes_arrow(words, n, id_col)
 
 
+# Largest Catalyst size estimate of the raw bench input that
+# contamination_hits still broadcasts (see its docstring).
+BENCH_BROADCAST_MAX_BYTES = 512 << 20
+
+
 def contamination_hits(
     df: DataFrame,
     bench_df: DataFrame,
@@ -158,8 +154,6 @@ def contamination_hits(
     id_col: str = "doc_id",
     bench_text_col: str | None = None,
     n: int = 5,
-    bench_broadcast: bool | None = None,
-    bench_broadcast_max_bytes: int = 512 << 20,
 ) -> DataFrame:
     """Benchmark decontamination: for each training doc sharing at
     least one word ``n``-gram with the benchmark corpus, report how
@@ -211,22 +205,19 @@ def contamination_hits(
     the bench side is corpus-shaped data and the probe becomes a
     MERGE-pinned hash-keyed join (sort-merge spills gracefully where
     a forced hash build cannot — the q_tpch_q21 lesson; guide §3.1).
-    ``bench_broadcast=None`` (default) decides from the Catalyst
-    size estimate of ``bench_df``'s optimized plan (driver-side, no
-    job): broadcast iff the estimated BENCH INPUT bytes are <=
-    ``bench_broadcast_max_bytes`` (default 512 MB — at ~6 input bytes
-    per word-gram that corresponds to ~0.8e8 distinct gram hashes,
-    just under the observed ~1e8 failure regime). The estimate
-    deliberately reads the RAW bench frame, not the kernel output:
-    Catalyst statistics cannot see through the MapInPandas gram
-    kernel, while the scan-level estimate is file-size-grounded.
-    Callers that know better pass ``bench_broadcast=True/False``.
-    Either regime returns identical values (join strategy, never
-    semantics). A stats-less bench frame (``createDataFrame``, an RDD
-    or another in-memory source: Catalyst reports the default size,
-    Long.MaxValue) takes the MERGE path under the default however
-    small it is, so callers with small in-memory bench frames pass
-    ``bench_broadcast=True`` to keep the broadcast probe.
+    The guard decides from the Catalyst size estimate of
+    ``bench_df``'s optimized plan (driver-side, no job): broadcast iff
+    the estimated BENCH INPUT bytes are <= ``BENCH_BROADCAST_MAX_BYTES``
+    (512 MB — at ~6 input bytes per word-gram that corresponds to
+    ~0.8e8 distinct gram hashes, just under the observed ~1e8 failure
+    regime). The estimate deliberately reads the RAW bench frame, not
+    the kernel output: Catalyst statistics cannot see through the
+    MapInPandas gram kernel, while the scan-level estimate is
+    file-size-grounded. Either regime returns identical values (join
+    strategy, never semantics). A stats-less bench frame
+    (``createDataFrame``, an RDD or another in-memory source: Catalyst
+    reports the default size, Long.MaxValue) takes the MERGE path
+    however small it is.
 
     Returns (``id_col``, n_contaminated, n_grams) for flagged docs only.
     """
@@ -241,18 +232,11 @@ def contamination_hits(
     key = "_gh"
     bench_keys = _gram_hash_rows(bench, btext, id_col, n).select(key).distinct()
     dg = _gram_hash_rows(df, text_col, id_col, n).select(id_col, key).distinct()
-    if bench_broadcast is None:
-        est = int(
-            str(
-                bench_df._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        )
-        bench_broadcast = est <= bench_broadcast_max_bytes
+    est = int(
+        str(bench_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
     marked = bench_keys.withColumn("_hit", F.lit(True))
-    if bench_broadcast:
+    if est <= BENCH_BROADCAST_MAX_BYTES:
         probed = dg.join(F.broadcast(marked), key, "left")
     else:
         probed = dg.join(marked.hint("merge"), key, "left")
@@ -466,7 +450,7 @@ def length_weighted_sample(
     t = F.col(tokens_col).cast("long")
     return (
         df.withColumn("_h", h)
-        .filter(F.col("_h") * cap_tokens < t * _M31)
+        .filter(F.col("_h") * cap_tokens < t * TX.M31)
         .withColumn(
             "p_ppm",
             F.least(F.lit(1_000_000).cast("long"), F.expr(

@@ -734,8 +734,9 @@ WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 
 def q_win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile/percent_rank/cume_dist WITHOUT a global single-partition
-    window: two-pass global rank (range repartition -> per-partition
-    row_number -> broadcast cumulative offsets, operators/ranking.py)
+    window: two-pass global rank (hash exchange on a sampled-bound
+    bucket id -> per-bucket row_number -> broadcast cumulative
+    offsets, operators/ranking.py)
     then each function as a closed form of (rank, total). The unique
     (c_acctbal, c_custkey) sort key makes the closed forms exact —
     values hash-match the window-function oracle while every stage

@@ -75,20 +75,19 @@ FROM sess GROUP BY user_id, session_id
 """
 
 
-def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator END-TO-END through a real
-    streaming query: applyInPandasWithState running totals driven to
-    completion (availableNow) into a memory sink, final state per user
-    extracted. The oracle is the batch aggregate the state must
-    converge to — an exact check on stateful streaming."""
+def _drain_final_totals(
+    spark: SparkSession, stream: DataFrame, prefix: str
+) -> DataFrame:
+    """Drive a running-totals stream to completion (availableNow) into
+    a memory sink named ``prefix_<random>`` and return each user's
+    final state. Update mode emits one row per touched user per
+    micro-batch; n_events is strictly increasing, so max_by picks the
+    final state."""
     import uuid
 
     from pyspark.sql import functions as F
 
-    from document_vector_indexer_spark.streaming.stateful import running_user_totals
-
-    name = f"q_stream_stateful_{uuid.uuid4().hex[:8]}"
-    stream = running_user_totals(W.read_events_stream(spark, sf_dir))
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
     q = (
         stream.writeStream.outputMode("update")
         .format("memory")
@@ -98,12 +97,22 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q.awaitTermination()
     emitted = spark.sql(f"SELECT * FROM {name}")
-    # update mode emits one row per user per micro-batch; n_events is
-    # strictly increasing, so max_by picks the final state
     return emitted.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
         F.max_by("total_value", "n_events").alias("total_value"),
     )
+
+
+def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Custom stateful streaming operator END-TO-END through a real
+    streaming query: applyInPandasWithState running totals driven to
+    completion (availableNow) into a memory sink, final state per user
+    extracted. The oracle is the batch aggregate the state must
+    converge to — an exact check on stateful streaming."""
+    from document_vector_indexer_spark.streaming.stateful import running_user_totals
+
+    stream = running_user_totals(W.read_events_stream(spark, sf_dir))
+    return _drain_final_totals(spark, stream, "q_stream_stateful")
 
 
 SQL_STREAM_STATEFUL = """
@@ -122,31 +131,12 @@ def q_stream_stateful_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-GROUP Python cost (~2.5x the JVM wall at ~sf10, growing with
     group count); this key pins the JVM route against the same oracle
     so the recommendation in streaming/stateful.py stays verified."""
-    import uuid
-
-    from pyspark.sql import functions as F
-
     from document_vector_indexer_spark.streaming.stateful import (
         running_user_totals_jvm,
     )
 
-    name = f"q_stream_stateful_jvm_{uuid.uuid4().hex[:8]}"
     stream = running_user_totals_jvm(W.read_events_stream(spark, sf_dir))
-    q = (
-        stream.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.sql(f"SELECT * FROM {name}")
-    # update mode re-emits the refreshed totals per touched user per
-    # micro-batch; the final (max n_events) row is the converged state
-    return emitted.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("total_value", "n_events").alias("total_value"),
-    )
+    return _drain_final_totals(spark, stream, "q_stream_stateful_jvm")
 
 
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:

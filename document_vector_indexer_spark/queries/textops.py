@@ -520,7 +520,7 @@ def _duck_frac(s_expr: str) -> str:
 
 
 def _duck_charfold(s_expr: str) -> str:
-    """Plain M31 char-fold (dedup._word_hash, no Lehmer rounds) — the
+    """Plain M31 char-fold (``TX.char_fold``, no Lehmer rounds) — the
     gram identity of the r13 hash-represented decontamination oracle;
     same fragment as corpusops._DUCK_CHARFOLD (q_dedup_substrings)."""
     return f"""list_reduce(list_prepend(CAST(0 AS BIGINT),

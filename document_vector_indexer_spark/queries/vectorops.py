@@ -341,19 +341,20 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     true pair set — recall and precision 1.0 on this data, with
     spark_rows > 0.
 
-    r10: bits rides the operator's "auto" sizing (one count() fit job;
+    r10: the operator sizes bits to the corpus (one count() fit job;
     bucket key grows ~log2(n) so candidate volume stays LINEAR in the
     corpus — the r10 decade sweep measured fixed bits=4 going
     quadratic at ~sf1 and filling the disk). The brute-force oracle is
     bits-INDEPENDENT: identical planted vectors collide in every band
     at any bits, and nothing non-identical reaches 0.95 on this
-    corpus, so recall stays exactly 1.0 while the knob tracks n.
+    corpus, so recall stays exactly 1.0 while bits track n.
 
-    Late r11: ``bands`` rides "auto" too (the recall contract, SCALE.md
-    r11 §5) — the floor of 6 means every driver-scale plan resolves to
-    the same 6 bands as before (asserted in tests at the fixtures' own
-    n), and identical planted vectors collide at ANY band count, so the
-    oracle is bands-independent the same way it is bits-independent.
+    Late r11: the band count is sized too (the recall contract,
+    SCALE.md r11 §5) — the floor of 6 means every driver-scale plan
+    resolves to the same 6 bands as before (asserted in tests at the
+    fixtures' own n), and identical planted vectors collide at ANY
+    band count, so the oracle is bands-independent the same way it is
+    bits-independent.
     """
     from document_vector_indexer_spark.operators.dedup import embedding_near_dup_pairs
 
@@ -410,12 +411,12 @@ def q_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lsh_band_union_sql(where: str = "TRUE") -> str:
     """Mirrored-oracle band/bucket SQL (UNION ALL, one SELECT per band)
     over ``embeddings WHERE <where>``, generated from the same seeded
-    hyperplanes the Spark operator uses (bands=6, bits=4, seed=7
-    defaults) — shared by q_lsh_buckets and q_knn_lsh_pinned so the
+    hyperplanes the Spark operator uses (its bands=6, bits=4 defaults)
+    — shared by q_lsh_buckets and q_knn_lsh_pinned so the
     mirror logic exists exactly once."""
     from document_vector_indexer_spark.operators.dedup import lsh_hyperplanes
 
-    H = lsh_hyperplanes(64, 6, 4, 7)
+    H = lsh_hyperplanes(64, 6, 4)
 
     def dot_sql(plane) -> str:
         # left-to-right double accumulation, matching F.aggregate's fold
@@ -465,11 +466,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_dedup_semantic() -> str:
     """Mirrored oracle: the identical seeded ±1 hyperplanes (bands=1,
-    bits=12, seed=7) as exact add/subtract chains, then the same
+    bits=12 = ``dedup.SEMANTIC_BITS``) as exact add/subtract chains, then the same
     min/count per cell over the same planted corpus."""
     from document_vector_indexer_spark.operators.dedup import lsh_hyperplanes
 
-    H = lsh_hyperplanes(64, 1, 12, 7)
+    H = lsh_hyperplanes(64, 1, 12)
 
     def dot_sql(plane) -> str:
         terms = "".join(

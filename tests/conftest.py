@@ -14,3 +14,17 @@ def spark():
 
     s = get_spark(shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)``: the Spark jobs started while ``fn`` runs
+    (statusTracker high-water mark, as bench.py reads it)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(fn) -> int:
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        fn()
+        return max(tracker.getJobIdsForGroup(None), default=-1) - before
+
+    return run

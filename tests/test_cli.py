@@ -232,9 +232,10 @@ def test_cli_incremental_index(spark, doc_dir, tmp_path, capsys):
     assert sorted(ids) == list(range(1, len(ids) + 1)), "ids not dense"
 
 
-def test_cli_curate_near_dedup(spark, tmp_path, capsys):
-    """--dedup near must also drop NEAR duplicates (doc 100: doc 0's
-    text with one word changed — exact dedup alone keeps it)."""
+def _near_dup_docs(spark, tmp_path) -> str:
+    """Eight docs sharing a long base text with distinct tails, plus
+    doc 100: doc 0's text with one word changed. Returns the parquet
+    path."""
     base = (
         "the quick brown fox jumps over the lazy dog and runs far away "
         "because it is chased by a hunter in the deep green forest today "
@@ -246,6 +247,13 @@ def test_cli_curate_near_dedup(spark, tmp_path, capsys):
     spark.createDataFrame(
         rows, "doc_id long, filename string, text string"
     ).write.parquet(src)
+    return src
+
+
+def test_cli_curate_near_dedup(spark, tmp_path, capsys):
+    """--dedup near must also drop NEAR duplicates (doc 100: doc 0's
+    text with one word changed — exact dedup alone keeps it)."""
+    src = _near_dup_docs(spark, tmp_path)
 
     out_exact = str(tmp_path / "cur_exact")
     main(["curate", src, "--output", out_exact])
@@ -267,6 +275,22 @@ def test_cli_curate_near_dedup(spark, tmp_path, capsys):
     assert int(n_dedup) == near.count(), msg
     assert 100 not in near_ids, "near-dup survived --dedup near"
     assert 0 in near_ids, "survivor must be the lowest id"
+
+
+def test_cli_curate_near_dedup_job_count(spark, tmp_path, capsys, jobs_run):
+    """``cli curate --dedup near`` on the planted near-dup input runs
+    23 Spark jobs: the summary aggregate, the MinHash and
+    connected-components passes, and the partitioned write. 23 is the
+    count measured before the near-dup tuning parameters became module
+    constants; a change in it means the pipeline's job structure
+    changed."""
+    src = _near_dup_docs(spark, tmp_path)
+    out = str(tmp_path / "cur_near_jobs")
+    n = jobs_run(
+        lambda: main(["curate", src, "--output", out, "--dedup", "near"])
+    )
+    assert "after exact+near dedup" in capsys.readouterr().out
+    assert n == 23
 
 
 def test_cli_incremental_refuses_unstable_identity(spark, tmp_path, capsys):

@@ -59,16 +59,7 @@ def test_derived_schema_equals_inferred(spark, ingested):
     assert load_derived(spark, ingested, name).schema == inferred
 
 
-def _jobs_run(spark, fn) -> int:
-    """Spark jobs started while ``fn`` runs (statusTracker high-water
-    mark, as bench.py reads it)."""
-    tracker = spark.sparkContext.statusTracker()
-    before = max(tracker.getJobIdsForGroup(None), default=-1)
-    fn()
-    return max(tracker.getJobIdsForGroup(None), default=-1) - before
-
-
-def test_ingest_and_first_load_job_counts(spark, tmp_path):
+def test_ingest_and_first_load_job_counts(spark, tmp_path, jobs_run):
     """Declared-schema reads run no schema-inference job, a one-file
     table is copied instead of rewritten, a one-row-group source is cut
     into its files by Arrow on the driver, and events are bucketed by
@@ -78,9 +69,7 @@ def test_ingest_and_first_load_job_counts(spark, tmp_path):
     session, whose table cache is empty) and of the ingested dir, runs
     none."""
     dest = str(tmp_path / "ingested")
-    n_ingest = _jobs_run(
-        spark, lambda: ingest_engine_layout(spark, SF, dest)
-    )
+    n_ingest = jobs_run(lambda: ingest_engine_layout(spark, SF, dest))
     assert n_ingest <= 1
 
     fresh = spark.newSession()
@@ -91,7 +80,7 @@ def test_ingest_and_first_load_job_counts(spark, tmp_path):
             load_table(spark, dest, t).schema  # noqa: B018
         load_derived(spark, dest, "documents__shingles3").schema  # noqa: B018
 
-    assert _jobs_run(spark, first_load) == 0
+    assert jobs_run(first_load) == 0
 
 
 def test_failed_arrow_split_leaves_no_partial_table(spark, tmp_path, monkeypatch):

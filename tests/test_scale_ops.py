@@ -445,7 +445,7 @@ def test_embedding_lsh_recall_and_precision_vs_brute(spark):
     CANDIDATE GENERATION (sign-LSH bucket blocking); the exact cosine
     filter then makes precision 1.0 by construction. Recall for
     near-identical vectors is ~1 - (1 - (1 - theta/pi)^bits)^bands —
-    >= 0.99 at the default bands=6/bits=4 for cosine >= 0.99 pairs."""
+    >= 0.99 at this corpus' bands=6/bits=4 for cosine >= 0.99 pairs."""
     from document_vector_indexer_spark.operators.dedup import embedding_near_dup_pairs
 
     df, true_pairs = _planted_corpus(spark)
@@ -513,14 +513,6 @@ def test_minhash_portable_recall_on_planted_dups(spark):
     assert all(p == (1, 2) for p in got), f"false pairs: {got}"
 
 
-def test_minhash_portable_rejects_bad_band_split(spark):
-    from document_vector_indexer_spark.operators.dedup import minhash_portable_pairs
-
-    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="bands"):
-        minhash_portable_pairs(df, bands=5)  # 5 does not divide k=16
-
-
 def _py_minhash_pairs(docs, threshold, k=16, bands=4, n=2, max_band_df=50):
     """Pure-Python reference for minhash_portable_pairs: docs with fewer
     than ``n`` words or a NULL id have no signature; band keys are
@@ -550,16 +542,18 @@ def _py_minhash_pairs(docs, threshold, k=16, bands=4, n=2, max_band_df=50):
     return out
 
 
-def test_minhash_portable_pairs_equal_python_reference(spark):
-    """Band keys, the ``max_band_df`` cap, the estimate and the
+def test_minhash_portable_pairs_equal_python_reference(spark, monkeypatch):
+    """Band keys, the ``MINHASH_MAX_BAND_DF`` cap, the estimate and the
     cross-band collapse, value for value against the Python reference:
-    docs 1 and 2 share every band and pair once; the four identical
-    docs 10-13 exceed ``max_band_df=3`` in every band and pair not at
-    all; docs 30-32 have fewer than n=2 words and drop out, as does the
+    docs 1 and 2 share every band and pair once; with the cap patched
+    to 3, the four identical docs 10-13 exceed it in every band and
+    pair not at all; docs 30-32 have fewer than n=2 words and drop out, as does the
     NULL-id copy of doc 1; 20-25 are edits of one text that share some
     bands."""
+    from document_vector_indexer_spark.operators import dedup
     from document_vector_indexer_spark.operators.dedup import minhash_portable_pairs
 
+    monkeypatch.setattr(dedup, "MINHASH_MAX_BAND_DF", 3)
     words = [f"w{i}" for i in range(40)]
     base = " ".join(words)
     same = "every band of this text is shared by its copy in doc two"
@@ -572,7 +566,7 @@ def test_minhash_portable_pairs_equal_python_reference(spark):
     rows += [(40, base + " tail"), (41, "nothing shared with the others at all")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for threshold in (0.0, 0.5):
-        out = minhash_portable_pairs(df, threshold=threshold, max_band_df=3)
+        out = minhash_portable_pairs(df, threshold=threshold)
         got = [((r.id_a, r.id_b), r.est_jaccard) for r in out.collect()]
         want = _py_minhash_pairs(rows, threshold, max_band_df=3)
         assert sorted(got) == sorted(want.items()), f"threshold {threshold}"
@@ -620,19 +614,20 @@ def test_embed_backoff_sequence_matches_reference(spark):
     assert sleeps.value == [1, 2, 4, 8, 16, 16]
 
 
-def test_recommended_lsh_bits_sizes_to_corpus():
-    """The anti-quadratic knob rule: smallest bits with expected
-    occupancy at or below target, clamped to [floor, cap]."""
+def test_recommended_lsh_bits_sizes_to_corpus(monkeypatch):
+    """The anti-quadratic sizing rule: smallest bits with expected
+    occupancy at or below the target of 32, clamped to [4, 24]."""
+    from document_vector_indexer_spark.operators import dedup
     from document_vector_indexer_spark.operators.dedup import recommended_lsh_bits
 
-    # default target_bucket_rows=32 — ALIGNED with the operator's
-    # bits="auto" sizing (r11; they diverged 64 vs 32 in r10)
     assert recommended_lsh_bits(0) == 4
     assert recommended_lsh_bits(512) == 4            # floor (512/32 = 2^4)
     assert recommended_lsh_bits(1_000) == 5          # ceil(log2(31.25))
     assert recommended_lsh_bits(24_000) == 10        # ceil(log2(750))
-    assert recommended_lsh_bits(24_000, target_bucket_rows=1500) == 4
     assert recommended_lsh_bits(10**12) == 24        # cap
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "LSH_TARGET_BUCKET_ROWS", 1500)
+        assert recommended_lsh_bits(24_000) == 4     # the target is read
     # monotone in n
     prev = 0
     for n in (10, 10**3, 10**5, 10**7, 10**9):
@@ -678,21 +673,37 @@ def test_autosize_shuffle_partitions_raise_only(spark):
         spark.conf.set("spark.sql.shuffle.partitions", cur)
 
 
-def test_embedding_near_dup_auto_bits_matches_explicit(spark):
-    """bits="auto" must be EXACTLY bits=recommended_lsh_bits(n) — one
-    count() fit job, no other semantic difference (r10: auto is the
-    default because the fixed-bits default went quadratic one decade
-    up and filled the disk).
+def _spy_lsh_blocks(monkeypatch):
+    """Patch dedup.embedding_lsh_blocks to record the (bands, bits)
+    each call is made with; returns the list of recorded pairs."""
+    from document_vector_indexer_spark.operators import dedup
+
+    calls = []
+    real = dedup.embedding_lsh_blocks
+
+    def spy(*args, **kwargs):
+        calls.append((kwargs["bands"], kwargs["bits"]))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "embedding_lsh_blocks", spy)
+    return calls
+
+
+def test_embedding_near_dup_auto_bits_matches_explicit(spark, monkeypatch):
+    """The operator bands with bits = recommended_lsh_bits(n) and
+    bands = recommended_lsh_bands(bits, threshold) — one count() fit
+    job (r10: the fixed-bits default went quadratic one decade up and
+    filled the disk).
 
     r11 (ADVICE): the planted corpus is bits-INDEPENDENT (identical
     vectors collide at any bits), so result parity alone cannot catch
-    a regression in the auto-sizing plumbing — the resolved value is
-    asserted DIRECTLY against the helper at the operator's own target
-    (the two defaults are now aligned at 32), and the result-parity
-    check runs at that same explicitly-passed target."""
+    a regression in the sizing plumbing — the (bands, bits) the
+    operator hands to ``embedding_lsh_blocks`` are asserted DIRECTLY
+    against the helpers at the fixture's own n, and every planted pair
+    must come back."""
     from document_vector_indexer_spark.operators.dedup import (
-        _resolve_lsh_bits,
         embedding_near_dup_pairs,
+        recommended_lsh_bands,
         recommended_lsh_bits,
     )
 
@@ -703,55 +714,36 @@ def test_embedding_near_dup_auto_bits_matches_explicit(spark):
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
     )
     allv = emb.unionByName(planted)
-    # the seam the operator's bits="auto" branch calls, pinned exactly
-    explicit = recommended_lsh_bits(allv.count(), target_bucket_rows=32)
-    assert _resolve_lsh_bits(allv, "auto", target_bucket_rows=32) == explicit
-    assert _resolve_lsh_bits(allv, 7, target_bucket_rows=32) == 7
-    auto_rows = sorted(
+    calls = _spy_lsh_blocks(monkeypatch)
+    rows = {
         (r["id_a"], r["id_b"])
         for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bits="auto"
+            allv, threshold=0.95, dim=64
         ).collect()
-    )
-    explicit_rows = sorted(
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bits=explicit
-        ).collect()
-    )
-    assert auto_rows == explicit_rows and len(auto_rows) > 0
-    import pytest
-
-    with pytest.raises(ValueError, match="int or 'auto'"):
-        embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bits="lots"
-        )
-    with pytest.raises(ValueError, match="int or 'auto'"):
-        # bool is an int subclass: bits=True would silently mean 1-bit
-        # buckets (near-all-pairs candidates) if accepted
-        embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bits=True
-        )
+    }
+    bits = recommended_lsh_bits(allv.count())
+    assert calls == [(recommended_lsh_bands(bits, 0.95), bits)]
+    want = {
+        (r["vec_id"], r["vec_id"] + 10000)
+        for r in emb.filter(F.col("vec_id") % 5 == 0).collect()
+    }
+    assert want and want <= rows
 
 
-def test_embedding_near_dup_auto_bands_holds_recall_contract(spark):
-    """bands="auto" must be EXACTLY recommended_lsh_bands(bits,
-    threshold, target_recall) — the late-r11 recall contract: auto
-    bits grow ~log2(n) to keep candidates linear, so a FIXED band
-    count's union recall for threshold-level pairs decays as
-    (1 − p^bits)^bands (measured 0.67 at the sf100 blow-up's bits=17
-    with 6 bands). Like the bits seam, the planted corpora are
-    band-count-INDEPENDENT (identical vectors collide in every band),
-    so the resolved value is asserted directly; the floor of 6 keeps
-    every driver-scale plan (bits ≤ 10) identical to the fixed-bands
-    era, pinned here at the fixtures' own n."""
+def test_embedding_near_dup_auto_bands_holds_recall_contract(spark, monkeypatch):
+    """The band count must be EXACTLY recommended_lsh_bands(bits,
+    threshold) — the late-r11 recall contract: bits grow ~log2(n) to
+    keep candidates linear, so a FIXED band count's union recall for
+    threshold-level pairs decays as (1 − p^bits)^bands (measured 0.67
+    at the sf100 blow-up's bits=17 with 6 bands). Like bits, the
+    planted corpora are band-count-INDEPENDENT (identical vectors
+    collide in every band), so the operator's band count is asserted
+    directly: the floor of 6 keeps every driver-scale plan (bits ≤ 10)
+    identical to the fixed-bands era, and a loose threshold on a small
+    corpus sizes above the floor."""
     import math
 
-    import pytest
-
     from document_vector_indexer_spark.operators.dedup import (
-        _resolve_lsh_bands,
-        _resolve_lsh_bits,
         embedding_near_dup_pairs,
         recommended_lsh_bands,
     )
@@ -769,71 +761,59 @@ def test_embedding_near_dup_auto_bands_holds_recall_contract(spark):
     assert recommended_lsh_bands(20, 0.999) == 6
     # loose thresholds at high bits hit the cap (honest bound, logged)
     assert recommended_lsh_bands(20, 0.8) == 24
-    # the operator seam: auto == helper at the operator's own knobs
-    assert _resolve_lsh_bands("auto", 17, 0.95, 0.9) == 13
-    assert _resolve_lsh_bands(9, 17, 0.95, 0.9) == 9
-    with pytest.raises(ValueError, match="int or 'auto'"):
-        _resolve_lsh_bands(True, 4, 0.95, 0.9)
-    # fixtures stay on the floor: the resolved plan is byte-identical
-    # to the fixed bands=6 era at every driver scale
+    # p(0.5) = 2/3: at 4 bits one band holds 16/81, so 0.9 needs 11
+    assert recommended_lsh_bands(4, 0.5) == 11
+    # through the operator: fixture scale stays on the floor at 0.95
+    # and sizes to 11 bands at 0.5
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
-    planted = emb.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
-    )
-    allv = emb.unionByName(planted)
-    bits = _resolve_lsh_bits(allv, "auto", target_bucket_rows=32)
-    assert bits <= 10 and _resolve_lsh_bands("auto", bits, 0.95, 0.9) == 6
-    auto_rows = sorted(
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bands="auto"
-        ).collect()
-    )
-    fixed_rows = sorted(
-        (r["id_a"], r["id_b"])
-        for r in embedding_near_dup_pairs(
-            allv, threshold=0.95, dim=64, bands=6
-        ).collect()
-    )
-    assert auto_rows == fixed_rows and len(auto_rows) > 0
+    calls = _spy_lsh_blocks(monkeypatch)
+    embedding_near_dup_pairs(emb, threshold=0.95, dim=64)
+    embedding_near_dup_pairs(emb, threshold=0.5, dim=64)
+    assert [bands for bands, _bits in calls] == [6, 11]
+    assert all(bits <= 10 for _bands, bits in calls)
 
 
-def test_lsh_bands_cap_shortfall_warns(caplog):
-    """When 'auto' bands hit the cap with union recall still under the
-    target (loose threshold x high bits — the n^rho spend exploded),
-    the resolver must SAY so: recall is never traded silently (the
-    hot-bucket drop-signal rule)."""
+def test_lsh_bands_cap_shortfall_warns(spark, caplog):
+    """When the sized band count hits the cap with union recall still
+    under the target (loose threshold — the n^rho spend exploded), the
+    operator must SAY so: recall is never traded silently (the
+    hot-bucket drop-signal rule). At 4 bits, threshold 0.1 needs ~28
+    bands and the cap of 24 reaches ~0.86."""
     import logging
 
     from document_vector_indexer_spark.operators.dedup import (
-        _resolve_lsh_bands,
+        embedding_near_dup_pairs,
     )
 
-    with caplog.at_level(logging.WARNING):
-        resolved = _resolve_lsh_bands("auto", 20, 0.8, 0.9)
-    assert resolved == 24
-    assert any(
-        "capped" in r.message and "ANN ladder" in r.message
-        for r in caplog.records
+    df = spark.createDataFrame(
+        [(1, [0.5] * 8), (2, [0.25] * 8)], "vec_id long, embedding array<double>"
     )
+    logger = "document_vector_indexer_spark.operators.dedup"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        embedding_near_dup_pairs(df, threshold=0.1, dim=8)
+    assert any(
+        "capped at 24" in r.message and "ANN ladder" in r.message
+        for r in caplog.records
+    ), [r.message for r in caplog.records]
     # and no warning when the target is met
     caplog.clear()
-    with caplog.at_level(logging.WARNING):
-        assert _resolve_lsh_bands("auto", 10, 0.95, 0.9) == 6
+    with caplog.at_level(logging.WARNING, logger=logger):
+        embedding_near_dup_pairs(df, threshold=0.95, dim=8)
     assert not caplog.records
 
 
 def test_embedding_near_dup_pairs_match_numpy_reference(spark):
     """The operator returns EXACTLY the pairs that share a (band,
-    bucket) cell of ``embedding_lsh_blocks`` and whose sequential
-    float64 cosine reaches the threshold — each pair once, however
-    many bands it shares — with sims bit-equal to the index-order
-    fold (dot and both norms accumulated left to right, then
-    ``dot / (n_a * n_b)``). Random vectors, not planted-identical ones,
-    so borderline pairs near the threshold exercise the filter; two
-    thresholds so the survivor set is both sparse and dense."""
+    bucket) cell of ``embedding_lsh_blocks`` at its sized (bands, bits)
+    and whose sequential float64 cosine reaches the threshold — each
+    pair once, however many bands it shares — with sims bit-equal to
+    the index-order fold (dot and both norms accumulated left to
+    right, then ``dot / (n_a * n_b)``). Random vectors, not
+    planted-identical ones, so borderline pairs near the threshold
+    exercise the filter; two thresholds so the survivor set is both
+    sparse and dense (and the band count is 6 and 11)."""
     import math
     from collections import defaultdict
 
@@ -842,6 +822,8 @@ def test_embedding_near_dup_pairs_match_numpy_reference(spark):
     from document_vector_indexer_spark.operators.dedup import (
         embedding_lsh_blocks,
         embedding_near_dup_pairs,
+        recommended_lsh_bands,
+        recommended_lsh_bits,
     )
 
     rng = np.random.default_rng(3)
@@ -857,40 +839,42 @@ def test_embedding_near_dup_pairs_match_numpy_reference(spark):
             acc += x * y
         return acc
 
-    cells = defaultdict(list)
-    for r in embedding_lsh_blocks(df, dim=8, bands=6, bits=4).collect():
-        cells[(r["band"], r["bucket"])].append(r["vec_id"])
-    candidates = {
-        (a, b) for ids in cells.values() for a in ids for b in ids if a < b
-    }
     norm = {i: math.sqrt(fold(v, v)) for i, v in vecs.items()}
-    sim = {
-        (a, b): fold(vecs[a], vecs[b]) / (norm[a] * norm[b])
-        for a, b in candidates
-    }
+    bits = recommended_lsh_bits(len(vecs))
     for th in (0.95, 0.5):
+        cells = defaultdict(list)
+        bands = recommended_lsh_bands(bits, th)
+        for r in embedding_lsh_blocks(df, dim=8, bands=bands, bits=bits).collect():
+            cells[(r["band"], r["bucket"])].append(r["vec_id"])
+        candidates = {
+            (a, b) for ids in cells.values() for a in ids for b in ids if a < b
+        }
+        sim = {
+            (a, b): fold(vecs[a], vecs[b]) / (norm[a] * norm[b])
+            for a, b in candidates
+        }
         want = sorted((a, b, s) for (a, b), s in sim.items() if s >= th)
         got = sorted(
             (r["id_a"], r["id_b"], r["sim"])
-            for r in embedding_near_dup_pairs(
-                df, threshold=th, dim=8, bits=4, bands=6
-            ).collect()
+            for r in embedding_near_dup_pairs(df, threshold=th, dim=8).collect()
         )
         assert got == want and len(got) > 0, th
 
 
-def test_embedding_near_dup_hot_bucket_cap(spark):
+def test_embedding_near_dup_hot_bucket_cap(spark, monkeypatch):
     """The r10 second-decade guard: (band, bucket) cells above
-    max_bucket_rows are DROPPED before the candidate join (anisotropic
-    sign skew measurably put p99 occupancy ~7x the expectation target
-    at ~sf10). Plant 41 IDENTICAL vectors — identical inputs land in
-    the same bucket of every band, so every band holds exactly one
-    41-member cell: with the cap above 41 all pairs are found; with
-    the cap below it every cell is hot, everything is dropped, and
-    the result is empty (the documented blind spot — identical
-    clusters larger than the cap belong to exact/semantic dedup).
-    Fixtures never trip the cap (measured max occupancy 80 vs cap
-    512), so this is the only place the drop path is exercised."""
+    LSH_MAX_BUCKET_ROWS are DROPPED before the candidate join
+    (anisotropic sign skew measurably put p99 occupancy ~7x the
+    expectation target at ~sf10). Plant 41 IDENTICAL vectors —
+    identical inputs land in the same bucket of every band, so every
+    band holds exactly one 41-member cell: with the cap patched above
+    41 all pairs are found; below it every cell is hot, everything is
+    dropped, and the result is empty (the documented blind spot —
+    identical clusters larger than the cap belong to exact/semantic
+    dedup). Fixtures never trip the real cap (measured max occupancy
+    80 vs cap 512), so this is the only place the drop path is
+    exercised."""
+    from document_vector_indexer_spark.operators import dedup
     from document_vector_indexer_spark.operators.dedup import embedding_near_dup_pairs
 
     base = [float(1 + (j % 7)) for j in range(64)]
@@ -898,30 +882,25 @@ def test_embedding_near_dup_hot_bucket_cap(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     def pairs(cap):
+        monkeypatch.setattr(dedup, "LSH_MAX_BUCKET_ROWS", cap)
         return sorted(
             (r["id_a"], r["id_b"])
             for r in embedding_near_dup_pairs(
-                df, threshold=0.9999999, dim=64, bits=4,
-                max_bucket_rows=cap,
+                df, threshold=0.9999999, dim=64
             ).collect()
         )
 
     with_room = pairs(64)
-    assert (7, 100) in with_room, with_room
+    assert (7, 100) in with_room and len(with_room) == 41 * 40 // 2
     assert pairs(16) == [], "hot buckets above the cap must be dropped"
-    assert pairs(None) == with_room, "cap=None must disable the guard"
 
 
-def test_hot_bucket_drop_signal(spark, caplog):
-    """The cap's silent-drop blind spot gets a runtime signal (r10
+def test_hot_bucket_drop_signal(spark):
+    """The cap's silent-drop blind spot has a runtime signal (r10
     ADVICE): ``lsh_hot_bucket_stats`` reports exactly the cells above
-    the cap, and ``log_dropped_buckets=True`` warns eagerly when (and
-    only when) cells are actually dropped."""
-    import logging
-
+    the cap."""
     from document_vector_indexer_spark.operators.dedup import (
         embedding_lsh_blocks,
-        embedding_near_dup_pairs,
         lsh_hot_bucket_stats,
     )
 
@@ -933,26 +912,6 @@ def test_hot_bucket_drop_signal(spark, caplog):
     # identical vectors: one 41-member cell per band, all above cap 16
     assert len(hot) == 6 and all(r["occupancy"] == 41 for r in hot)
     assert lsh_hot_bucket_stats(blocks, max_bucket_rows=64).collect() == []
-
-    with caplog.at_level(logging.WARNING,
-                         logger="document_vector_indexer_spark.operators.dedup"):
-        out = embedding_near_dup_pairs(
-            df, threshold=0.9, dim=64, bits=4,
-            max_bucket_rows=16, log_dropped_buckets=True,
-        ).collect()
-    assert out == []
-    assert any("dropping 6 hot" in r.message for r in caplog.records), (
-        [r.message for r in caplog.records]
-    )
-    caplog.clear()
-    with caplog.at_level(logging.WARNING,
-                         logger="document_vector_indexer_spark.operators.dedup"):
-        ok = embedding_near_dup_pairs(
-            df, threshold=0.9, dim=64, bits=4,
-            max_bucket_rows=64, log_dropped_buckets=True,
-        ).collect()
-    assert len(ok) == 41 * 40 // 2
-    assert not any("dropping" in r.message for r in caplog.records)
 
 
 def _py_fold(s: str, mod: int = 2147483647) -> int:
@@ -1049,8 +1008,8 @@ def test_gram_hash_kernel_ragged_layout_exact_under_length_skew():
     import numpy as np
     import pytest
 
+    from document_vector_indexer_spark.functions.text import M31
     from document_vector_indexer_spark.operators.dedup import (
-        _CHAR_MOD,
         _gram_hash_arrays,
     )
 
@@ -1086,7 +1045,7 @@ def test_gram_hash_kernel_ragged_layout_exact_under_length_skew():
         # [0] — the callers can never hit this)
         [None, []],
     ]
-    for mod in (_CHAR_MOD, 1_000_000_007):
+    for mod in (M31, 1_000_000_007):
         for k in (1, 2, 8):
             for docs in cases:
                 got = _gram_hash_arrays(docs, k, mod)
@@ -1167,8 +1126,8 @@ def test_gram_hash_kernel_property_random_unicode():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from document_vector_indexer_spark.functions.text import M31
     from document_vector_indexer_spark.operators.dedup import (
-        _CHAR_MOD,
         _gram_hash_arrays,
     )
 
@@ -1198,7 +1157,7 @@ def test_gram_hash_kernel_property_random_unicode():
         return np.array(out, np.int64)
 
     @settings(max_examples=60, deadline=None)
-    @given(docs=batch, k=st.integers(1, 9), mod=st.sampled_from([_CHAR_MOD, 1_000_000_007]))
+    @given(docs=batch, k=st.integers(1, 9), mod=st.sampled_from([M31, 1_000_000_007]))
     def prop(docs, k, mod):
         got = _gram_hash_arrays(docs, k, mod)
         assert len(got) == len(docs)
@@ -1211,7 +1170,7 @@ def test_gram_hash_kernel_property_random_unicode():
     prop()
 
 
-def _py_lsh_buckets(vec, dim, bands, bits, seed=7):
+def _py_lsh_buckets(vec, dim, bands, bits):
     """Independent reference for embedding_lsh_blocks' bucket codes:
     per plane, a plain-Python fold in array-index order
     (``acc += x[i] * s[i]``), bit set iff ``acc > 0`` or ``acc`` is
@@ -1224,7 +1183,7 @@ def _py_lsh_buckets(vec, dim, bands, bits, seed=7):
 
     if vec is None or len(vec) != dim or any(x is None for x in vec):
         return [0] * bands
-    H = lsh_hyperplanes(dim, bands, bits, seed).tolist()
+    H = lsh_hyperplanes(dim, bands, bits).tolist()
     out = []
     for b in range(bands):
         code = 0
@@ -1343,6 +1302,47 @@ def test_lsh_arrow_kernel_nan_matches_jvm_ordering(spark):
     )
     assert [bucket for vid, _b, bucket in got if vid == 1] == [15, 15, 15]
     assert got == want
+
+
+def test_lsh_kernel_accumulates_in_index_order(spark):
+    """Pins the index-order accumulation of ``_lsh_pack_codes``. The
+    planted row's terms against hyperplane row 0 are 2^53, 62 x 0.75,
+    -2^53: added left to right, each 0.75 is below half an ulp of
+    2^53 and is absorbed, so the projection is exactly 0 and the bit
+    is clear. A reordered (BLAS) sum keeps some of the small terms and
+    lands above 0. The fixture is checked to discriminate first: in
+    NumPy the index-order fold and ``X @ S.T`` disagree in sign on
+    that plane. Then the kernel must match the sequential reference."""
+    import numpy as np
+
+    from document_vector_indexer_spark.operators.dedup import (
+        embedding_lsh_blocks,
+        lsh_hyperplanes,
+    )
+
+    S = lsh_hyperplanes(64, 6, 4).reshape(24, 64)
+    terms = np.full(64, 0.75)
+    terms[0], terms[-1] = 2.0**53, -(2.0**53)
+    planted = terms * S[0]  # planted[i] * S[0][i] == terms[i], exactly
+    X = planted[None, :]
+    seq = 0.0
+    for x, sgn in zip(planted, S[0]):
+        seq += x * sgn
+    assert seq == 0.0
+    assert (X @ S.T)[0, 0] > 0.0, "fixture must separate the two sums"
+
+    rows = [
+        (1, [float(x) for x in planted]),
+        (2, [float(j % 5) - 1.7 for j in range(64)]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {
+        (r["vec_id"], r["band"]): r["bucket"]
+        for r in embedding_lsh_blocks(df, dim=64).collect()
+    }
+    for vid, vec in rows:
+        assert [got[(vid, b)] for b in range(6)] == _py_lsh_buckets(vec, 64, 6, 4)
+    assert got[(1, 0)] & 1 == 0
 
 
 def test_lsh_carry_vec_false_narrow_output(spark):

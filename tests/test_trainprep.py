@@ -39,12 +39,15 @@ def test_cc_multiple_components_and_cliques(spark):
     assert got == {10: 10, 11: 10, 12: 10, 20: 20, 25: 20, 30: 30, 31: 30, 32: 30}
 
 
-def test_cc_pairs_only_graph_takes_one_round(spark):
+def test_cc_pairs_only_graph_takes_one_round(spark, monkeypatch):
     """The labels start at the first neighbour-min round's output, so a
     graph of disjoint pairs is already at its fixpoint: one round finds
     no change (the identity start needed two)."""
+    from document_vector_indexer_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ITERATIONS", 1)
     edges = [(1, 2), (4, 3), (7, 9)]
-    comp = connected_components(_pairs(spark, edges), max_iterations=1)
+    comp = connected_components(_pairs(spark, edges))
     got = {r.id: r.component for r in comp.collect()}
     assert got == {1: 1, 2: 1, 3: 3, 4: 3, 7: 7, 9: 7}
 
@@ -414,13 +417,16 @@ def test_contamination_bench_side_needs_no_id_column(spark):
     assert got == {1: (1, 2)}
 
 
-def test_contamination_broadcast_guard_regimes_value_identical(spark):
+def test_contamination_broadcast_guard_regimes_value_identical(spark, monkeypatch):
     """r15: the bench-side broadcast pin has a size guard — past
-    ``bench_broadcast_max_bytes`` (estimated bench INPUT bytes, from
+    ``BENCH_BROADCAST_MAX_BYTES`` (estimated bench INPUT bytes, from
     Catalyst stats, no job) the probe becomes a MERGE-pinned hash join
     (sort-merge spills where a forced broadcast build OOMs — the
     q_tpch_q21 lesson). Both regimes must return identical values, and
     each must plan the join it promises."""
+    import tempfile
+
+    from document_vector_indexer_spark.operators import trainprep
     from document_vector_indexer_spark.operators.trainprep import (
         contamination_hits,
     )
@@ -435,12 +441,6 @@ def test_contamination_broadcast_guard_regimes_value_identical(spark):
     )
     bench = _docs(spark, [(100, "alpha beta gamma delta epsilon")])
 
-    bcast = contamination_hits(train, bench, n=5, bench_broadcast=True)
-    merge = contamination_hits(train, bench, n=5, bench_broadcast=False)
-    assert sorted(map(tuple, bcast.collect())) == sorted(
-        map(tuple, merge.collect())
-    ) == [(1, 1, 2), (3, 1, 1)]
-
     def _plan(df):
         return df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -448,28 +448,22 @@ def test_contamination_broadcast_guard_regimes_value_identical(spark):
             )
         )
 
-    p_b = _plan(bcast)
-    p_m = _plan(merge)
-    assert "BroadcastHashJoin" in p_b and "SortMergeJoin" not in p_b
-    assert "SortMergeJoin" in p_m and "BroadcastHashJoin" not in p_m
-
-    # default (None) reads Catalyst's size estimate of the bench input.
-    # An ExistingRDD (createDataFrame) has NO stats -> defaultSizeInBytes
-    # (huge) -> the guard conservatively picks the merge path; a
-    # parquet-backed bench has a real file-size estimate -> KBs ->
-    # broadcast. The declared q_decontaminate bench side is parquet.
-    assert "SortMergeJoin" in _plan(contamination_hits(train, bench, n=5))
-    import tempfile
-
     with tempfile.TemporaryDirectory() as td:
         bench.write.mode("overwrite").parquet(td + "/bench")
         bench_pq = spark.read.parquet(td + "/bench")
-        assert "BroadcastHashJoin" in _plan(
-            contamination_hits(train, bench_pq, n=5)
-        )
-        # and a 1-byte threshold forces merge even with tiny real stats
-        assert "SortMergeJoin" in _plan(
-            contamination_hits(
-                train, bench_pq, n=5, bench_broadcast_max_bytes=1
-            )
-        )
+        # The guard reads Catalyst's size estimate of the bench input.
+        # A parquet-backed bench has a real file-size estimate -> KBs
+        # -> broadcast (the declared q_decontaminate bench side is
+        # parquet). An ExistingRDD (createDataFrame) has NO stats ->
+        # defaultSizeInBytes (huge) -> the merge path.
+        bcast = contamination_hits(train, bench_pq, n=5)
+        merge = contamination_hits(train, bench, n=5)
+        p_b, p_m = _plan(bcast), _plan(merge)
+        assert "BroadcastHashJoin" in p_b and "SortMergeJoin" not in p_b
+        assert "SortMergeJoin" in p_m and "BroadcastHashJoin" not in p_m
+        assert sorted(map(tuple, bcast.collect())) == sorted(
+            map(tuple, merge.collect())
+        ) == [(1, 1, 2), (3, 1, 1)]
+        # and a 1-byte bound forces merge even with tiny real stats
+        monkeypatch.setattr(trainprep, "BENCH_BROADCAST_MAX_BYTES", 1)
+        assert "SortMergeJoin" in _plan(contamination_hits(train, bench_pq, n=5))

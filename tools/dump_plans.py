@@ -32,9 +32,10 @@ NOTES = {
 # Plan-notable queries beyond the bench headline set: rewritten or
 # scale-critical plans the judge/reviewer should be able to read.
 EXTRA = {
-    "q_win_ntile": "two-pass global rank: range exchange -> local row_number -> "
+    "q_win_ntile": "two-pass global rank: map-side bucket id from sampled "
+    "bounds -> hash exchange on the bucket id -> per-bucket row_number -> "
     "broadcast offsets; the only empty-partitionBy window runs over the "
-    "per-partition counts frame (#rows == #partitions)",
+    "per-bucket counts frame (#rows <= #buckets)",
     "q_dedup_embed": "sign-LSH band blocking: hyperplane projections -> band "
     "equi-join (shuffle-pinned r10 — both sides corpus-derived, no "
     "broadcastable side exists) -> exact cosine filter; bits auto-sized "
@@ -51,9 +52,10 @@ EXTRA = {
     "q_tpch_q4": "orders semi-join lineitem, shuffle-pinned (r10: the decade "
     "sweep's one super-linear key — Catalyst broadcast the corpus-sized "
     "l_orderkey build from its post-projection size estimate)",
-    "q_dedup_substrings": "stride-1 word-8-gram char-fold hashes; hash-keyed "
-    "distinct-doc agg; shuffle-pinned join-back (never a vocab broadcast); "
-    "doc-keyed integer-ppm rollup — no pair term anywhere",
+    "q_dedup_substrings": "stride-1 word-8-gram char-fold hashes (one Arrow "
+    "kernel pass); a Window over the gram-hash Exchange flags windows seen in "
+    "another doc; doc-keyed rollup, then a doc-keyed SortMergeJoin LeftOuter "
+    "gives every doc its integer-ppm row — no pair term anywhere",
     "q_collocations": "bigram + unigram aggs (zipf keys absorbed map-side); two "
     "word-keyed shuffle-hash joins; 1-row totals ride broadcasts; fixed-point "
     "floor(ln*1e6) PMI with TakeOrdered cut",
